@@ -234,61 +234,156 @@ def _clause_condition(cond: str | None) -> Column:
     return F.coalesce(F.expr(cond).cast("boolean"), F.lit(False))
 
 
-def _first_match_branch(clauses: list[dict]) -> Column:
-    """Index of the FIRST clause whose condition holds (SQL MERGE /
-    Delta: clauses are evaluated in statement order, first match wins);
-    NULL when none does."""
+def _first_match_branch(clauses: list[dict], offset: int = 0) -> Column:
+    """Index (plus ``offset``) of the FIRST clause whose condition holds
+    (SQL MERGE / Delta: clauses are evaluated in statement order, first
+    match wins); NULL when none does."""
     out = None
     for i, cl in enumerate(clauses):
         c = _clause_condition(cl.get("condition"))
-        out = F.when(c, F.lit(i)) if out is None else out.when(c, F.lit(i))
+        v = F.lit(offset + i)
+        out = F.when(c, v) if out is None else out.when(c, v)
     if out is None:
         return F.lit(None).cast("int")
     return out.otherwise(F.lit(None).cast("int"))
 
 
-def _clause_projection(
-    clauses: list[dict],
-    columns: list[str],
-    schema,
-    branch_col: str,
-    qualified: bool,
-    keep_cols: frozenset = frozenset(),
-) -> list[Column]:
-    """Per-column CASE over the branch index: each update clause's value
-    for the winning branch, the pre-image otherwise. ``qualified=True``
-    resolves against the ``t``/``s`` join aliases (matched clauses);
-    ``False`` against bare target columns (NOT MATCHED BY SOURCE).
-    ``keep_cols`` (round 11 — generated columns): columns that keep the
-    target's pre-image even under ``SET *`` — identity values persist
-    through source-wins updates, and computed columns are recomputed by
-    the caller's post-pass, so the source need not carry either."""
-    proj = []
-    for c in columns:
-        dt = schema[c].dataType
-        w = None
-        for i, cl in enumerate(clauses):
-            if cl["action"] != "update":
-                continue
-            sets = cl.get("set")
-            if qualified:
-                if sets is None:  # SET * — source wins
-                    if c in keep_cols:
-                        continue
-                    v = F.col(f"s.`{c}`").cast(dt)
-                elif c in sets:
-                    v = F.expr(sets[c]).cast(dt)
-                else:
+def _any_of(branch: Column, idx: list[int]) -> Column:
+    return branch.isin(idx) if idx else F.lit(False)
+
+
+def _when(acc: Column | None, cond: Column, value: Column) -> Column:
+    """Append one ``WHEN cond THEN value`` arm to a CASE (start it when
+    ``acc`` is None)."""
+    return F.when(cond, value) if acc is None else acc.when(cond, value)
+
+
+def _assigned(cl: dict, c: str, dt, keep_cols: frozenset) -> Column | None:
+    """The value an UPDATE clause assigns to column ``c``, or None when
+    the clause leaves it alone. ``SET *`` takes the source column, except
+    for ``keep_cols`` (round 11 — generated columns: identity values
+    persist through source-wins updates, and computed columns are
+    recomputed by the caller's post-pass, so the source need not carry
+    either)."""
+    if cl["action"] != "update":
+        return None
+    sets = cl.get("set")
+    if sets is None:
+        return None if c in keep_cols else F.col(f"s.`{c}`").cast(dt)
+    return F.expr(sets[c]).cast(dt) if c in sets else None
+
+
+class _MergeJoin:
+    """The one join every MERGE clause family reads: target ⟗ source on
+    the merge keys (a full outer equi-join), the first-match clause of
+    each row, and the value each output column takes.
+
+    A row's sides pick its clause list: both present → the MATCHED
+    clauses; target only → NOT MATCHED BY SOURCE; source only → the
+    NOT MATCHED (insert) clauses. Equality never holds for a NULL key,
+    so a NULL-keyed target row is NOT MATCHED BY SOURCE and a
+    NULL-keyed source row is NOT MATCHED. The three lists share one
+    index space (matched, then NMBS, then insert), so ``__branch`` is a
+    single int column and each index names one action.
+
+    Name resolution is the per-side one the clause grammar states:
+    matched conditions and assignments run on the joined rows under the
+    ``t``/``s`` aliases; NOT MATCHED BY SOURCE clauses see the bare
+    target row and insert clauses the source row (bare or ``s.``), so
+    those two are evaluated on their own side before the join and ride
+    it as ``__n_branch``/``__n<i>`` and ``__i_branch``/``__i<i>``.
+
+    On ``frame``: the predicates ``keep`` (a target row no clause
+    touches), ``update``, ``delete`` and ``insert``; ``post`` projects
+    the output row (the assigned values on update and insert rows, the
+    target row otherwise) and ``pre`` the target pre-image."""
+
+    def __init__(
+        self,
+        target: DataFrame,
+        source: DataFrame,
+        keys: list[str],
+        matched: list[dict],
+        not_matched_by_source: list[dict],
+        inserts: list[dict],
+        columns: list[str],
+        schema,
+        defaults: dict[str, str] | None = None,
+        generated_cols: frozenset = frozenset(),
+    ):
+        m, n = len(matched), len(not_matched_by_source)
+        actions = [cl["action"] for cl in matched + not_matched_by_source]
+        actions += ["insert"] * len(inserts)
+        tgt = target.withColumns(
+            {
+                "__t": F.lit(True),
+                "__n_branch": _first_match_branch(not_matched_by_source, m),
+            }
+        )
+        src = source.alias("s").withColumns(
+            {
+                "__s": F.lit(True),
+                "__i_branch": _first_match_branch(inserts, m + n),
+            }
+        )
+        if not matched:
+            # no MATCHED clause: a matched target row passes through
+            # unchanged and must come out once, however many source rows
+            # share its key. The window partitions on the keys, so its
+            # exchange is the join's own.
+            w = Window.partitionBy(*keys).orderBy(*keys)
+            src = src.withColumn("__dup", F.row_number().over(w) > 1)
+        b = F.col("__branch")
+        n_cols: dict[str, Column] = {}
+        i_cols: dict[str, Column] = {}
+        post: dict[str, Column | None] = {}
+        for i, c in enumerate(columns):
+            dt = schema[c].dataType
+            v = nv = iv = None
+            for g, cl in enumerate(matched + not_matched_by_source):
+                val = _assigned(cl, c, dt, generated_cols)
+                if val is None:
                     continue
-            else:
-                if c not in (sets or {}):
-                    continue
-                v = F.expr(sets[c]).cast(dt)
-            cond_i = F.col(branch_col) == i
-            w = F.when(cond_i, v) if w is None else w.when(cond_i, v)
-        pre = F.col(f"t.`{c}`") if qualified else F.col(f"`{c}`")
-        proj.append((w.otherwise(pre) if w is not None else pre).alias(c))
-    return proj
+                if g >= m:  # NOT MATCHED BY SOURCE: the target side's value
+                    nv = _when(nv, F.col("__n_branch") == g, val)
+                    val = F.col(f"__n{i}")
+                v = _when(v, b == g, val)
+            for g, cl in enumerate(inserts, m + n):
+                val = _insert_value(
+                    c, dt, cl.get("set"), defaults, generated_cols
+                )
+                iv = _when(iv, F.col("__i_branch") == g, val)
+            if nv is not None:
+                n_cols[f"__n{i}"] = nv
+            if iv is not None:
+                i_cols[f"__i{i}"] = iv
+                v = _when(v, b >= m + n, F.col(f"__i{i}"))
+            post[c] = v
+        tgt, src = tgt.withColumns(n_cols), src.withColumns(i_cols)
+        has_t, has_s = F.col("__t").isNotNull(), F.col("__s").isNotNull()
+        branch = (
+            F.when(has_t & has_s, _first_match_branch(matched))
+            .when(has_t, F.col("__n_branch"))
+            .otherwise(F.col("__i_branch"))
+        )
+        self.frame = (
+            tgt.alias("t")
+            .join(src.alias("s"), keys, "full_outer")
+            .withColumn("__branch", branch)
+        )
+        self.keep = has_t & b.isNull()
+        if not matched:
+            self.keep = self.keep & ~F.coalesce(F.col("__dup"), F.lit(False))
+        self.update, self.delete, self.insert = (
+            _any_of(b, [g for g, a in enumerate(actions) if a == kind])
+            for kind in ("update", "delete", "insert")
+        )
+        pre = {c: F.col(f"t.`{c}`") for c in columns}
+        self.pre = [pre[c].alias(c) for c in columns]
+        self.post = [
+            (pre[c] if v is None else v.otherwise(pre[c])).alias(c)
+            for c, v in post.items()
+        ]
 
 
 def _validate_clauses(
@@ -419,15 +514,15 @@ def merge_branches(
     the first whose condition holds wins; a matched pair satisfying no
     clause keeps the target row unchanged; a NULL condition is false.
 
-    Plan shape — scale notes for the 100 TB CDC apply: ONE inner equi-
-    join of target×source on the merge keys evaluates every matched
-    clause in a single projection (a CASE over the branch index per
-    column — no per-clause join, no per-clause shuffle); unmatched target
-    rows come from one anti join (none needed when a NOT MATCHED BY
-    SOURCE clause exists: those are the same rows, filtered in the same
-    pass); inserts are one anti join of the source. All three shuffle on
-    the SAME keys, so AQE plans one exchange per side. The trickle-sized
-    source broadcasts.
+    Plan shape — scale notes for the 100 TB CDC apply: ONE full outer
+    equi-join of target and source on the merge keys feeds every branch
+    (see ``_MergeJoin``). One projection over it picks each row's
+    first-matching clause and evaluates all clause outcomes as a
+    per-column CASE over that index — no per-clause join, no per-branch
+    join, no second scan of the target. The trade: a full outer join
+    cannot broadcast, so both sides shuffle once on the keys (the target
+    rows included), where the earlier inner-plus-two-anti-join plan
+    scanned the target three times but could broadcast a small source.
 
     Duplicate source keys raise (SQL MERGE cardinality violation) —
     scoped like Delta/SQL scope it (round 11): only duplicates whose
@@ -436,8 +531,8 @@ def merge_branches(
     conditional or partial updates, two source rows hitting one target
     row would apply both or duplicate it — Delta refuses too.
     ``check_cardinality=False`` skips the probe when the caller already
-    ran it (the txlog dv→CoW fallback re-enters here; re-checking would
-    double the job).
+    ran it or knows the source keys are unique (the txlog MERGE learns
+    that from its one collect of the source keys).
 
     ``with_changes=True`` (round 11 — the CDF sidecar feed) returns
     ``(merged, changes)``: ``changes`` carries the exact change rows —
@@ -456,190 +551,33 @@ def merge_branches(
     _validate_clauses(nmbs, target.columns, keys, "NOT MATCHED BY SOURCE")
     if matched and check_cardinality:
         check_merge_cardinality(target, source, keys)
-
-    out_parts: list[DataFrame] = []
-    change_parts: list[DataFrame] = []
-
-    def _tag(df: DataFrame, label: str) -> DataFrame:
-        return df.withColumn("_change_type", F.lit(label))
-
-    t_cols_pre = [F.col(f"t.`{c}`").alias(c) for c in target.columns]
-
-    # ---- matched pairs: one join, branch index, one projection --------
-    if matched:
-        pairs = target.alias("t").join(source.alias("s"), keys, "inner")
-        branch = _first_match_branch(matched)
-        keep_idx = [
-            i for i, cl in enumerate(matched) if cl["action"] == "update"
-        ]
-        # no-clause-matched pairs keep the target row (NULL branch ⇒
-        # keep); delete-branch rows drop
-        keep_cond = F.col("__m_branch").isNull()
-        if keep_idx:
-            keep_cond = keep_cond | F.col("__m_branch").isin(keep_idx)
-        branched = pairs.withColumn("__m_branch", branch)
-        kept = branched.filter(keep_cond)
-        out_parts.append(
-            kept.select(
-                *_clause_projection(
-                    matched, target.columns, target.schema,
-                    "__m_branch", qualified=True,
-                    keep_cols=generated_cols,
-                )
-            )
-        )
-        if with_changes:
-            del_idx = [
-                i
-                for i, cl in enumerate(matched)
-                if cl["action"] == "delete"
-            ]
-            if keep_idx:
-                upd = branched.filter(F.col("__m_branch").isin(keep_idx))
-                change_parts.append(
-                    _tag(upd.select(*t_cols_pre), "update_preimage")
-                )
-                change_parts.append(
-                    _tag(
-                        upd.select(
-                            *_clause_projection(
-                                matched, target.columns, target.schema,
-                                "__m_branch", qualified=True,
-                                keep_cols=generated_cols,
-                            )
-                        ),
-                        "update_postimage",
-                    )
-                )
-            if del_idx:
-                change_parts.append(
-                    _tag(
-                        branched.filter(
-                            F.col("__m_branch").isin(del_idx)
-                        ).select(*t_cols_pre),
-                        "delete",
-                    )
-                )
-        unmatched_target = target.join(
-            source.select(*keys).distinct(), keys, "left_anti"
-        )
-    else:
-        # no matched clause: every target row passes through untouched
-        # (matched or not) — skip the join entirely unless NMBS needs
-        # the matched/unmatched split
-        unmatched_target = (
-            target.join(source.select(*keys).distinct(), keys, "left_anti")
-            if nmbs
-            else None
-        )
-        if nmbs:
-            out_parts.append(
-                target.join(
-                    source.select(*keys).distinct(), keys, "left_semi"
-                )
-            )
-        else:
-            out_parts.append(target)
-
-    # ---- target rows unmatched by source -------------------------------
-    if unmatched_target is not None:
-        if nmbs:
-            nbranch = _first_match_branch(nmbs)
-            keep_idx = [
-                i for i, cl in enumerate(nmbs) if cl["action"] == "update"
-            ]
-            keep_cond = F.col("__n_branch").isNull()
-            if keep_idx:
-                keep_cond = keep_cond | F.col("__n_branch").isin(keep_idx)
-            nbranched = unmatched_target.withColumn("__n_branch", nbranch)
-            rows = nbranched.filter(keep_cond)
-            out_parts.append(
-                rows.select(
-                    *_clause_projection(
-                        nmbs, target.columns, target.schema,
-                        "__n_branch", qualified=False,
-                    )
-                )
-            )
-            if with_changes:
-                n_del = [
-                    i
-                    for i, cl in enumerate(nmbs)
-                    if cl["action"] == "delete"
-                ]
-                if keep_idx:
-                    nupd = nbranched.filter(
-                        F.col("__n_branch").isin(keep_idx)
-                    )
-                    change_parts.append(
-                        _tag(
-                            nupd.select(*target.columns),
-                            "update_preimage",
-                        )
-                    )
-                    change_parts.append(
-                        _tag(
-                            nupd.select(
-                                *_clause_projection(
-                                    nmbs, target.columns, target.schema,
-                                    "__n_branch", qualified=False,
-                                )
-                            ),
-                            "update_postimage",
-                        )
-                    )
-                if n_del:
-                    change_parts.append(
-                        _tag(
-                            nbranched.filter(
-                                F.col("__n_branch").isin(n_del)
-                            ).select(*target.columns),
-                            "delete",
-                        )
-                    )
-        else:
-            out_parts.append(unmatched_target)
-
-    # ---- inserts --------------------------------------------------------
-    # ordered conditional insert clauses (round 10: column-list VALUES
-    # too), first-match-wins; an unmatched source row satisfying no
-    # clause is dropped. Aliased so conditions/values say s.<col>.
-    nm = _insert_clauses(insert, insert_condition, not_matched, target.columns)
-    if nm:
-        inserts = source.alias("s").join(
-            target.select(*keys), keys, "left_anti"
-        )
-        ibranch = _first_match_branch(nm)
-        inserts = inserts.withColumn("__i_branch", ibranch).filter(
-            F.col("__i_branch").isNotNull()
-        )
-        proj = []
-        for c in target.columns:
-            dt = target.schema[c].dataType
-            w = None
-            for i, cl in enumerate(nm):
-                v = _insert_value(
-                    c, dt, cl.get("set"), defaults, generated_cols
-                )
-                cond_i = F.col("__i_branch") == i
-                w = F.when(cond_i, v) if w is None else w.when(cond_i, v)
-            proj.append(w.alias(c))
-        ins_rows = inserts.select(*proj)
-        out_parts.append(ins_rows)
-        if with_changes:
-            change_parts.append(_tag(ins_rows, "insert"))
-
-    out = out_parts[0]
-    for p in out_parts[1:]:
-        out = out.unionByName(p)
+    j = _MergeJoin(
+        target,
+        source,
+        keys,
+        matched,
+        nmbs,
+        _insert_clauses(insert, insert_condition, not_matched, target.columns),
+        target.columns,
+        target.schema,
+        defaults,
+        generated_cols,
+    )
+    out = j.frame.filter(j.keep | j.update | j.insert).select(*j.post)
     if not with_changes:
         return out
-    if change_parts:
-        changes = change_parts[0]
-        for p in change_parts[1:]:
-            changes = changes.unionByName(p)
-    else:
-        changes = out.limit(0).withColumn("_change_type", F.lit(None).cast("string"))
+
+    def _images(cond: Column, cols: list[Column], label: str) -> DataFrame:
+        return j.frame.filter(cond).select(
+            *cols, F.lit(label).alias("_change_type")
+        )
+
+    changes = (
+        _images(j.update, j.pre, "update_preimage")
+        .unionByName(_images(j.update, j.post, "update_postimage"))
+        .unionByName(_images(j.delete, j.pre, "delete"))
+        .unionByName(_images(j.insert, j.post, "insert"))
+    )
     return out, changes
 
 

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..operators import aggregates, cleaning, dimensions, fact, quality
 from ..sources import Catalog
+from ..sources.io import local_frame
 
 
 
@@ -1224,7 +1225,7 @@ class Warehouse:
             [],  # nor bucketed layouts
             0,
         )
-        return self.spark.createDataFrame([row], self._DETAIL_SCHEMA)
+        return local_frame(self.spark, [row], self._DETAIL_SCHEMA)
 
     def optimize_table(
         self,
@@ -1287,7 +1288,8 @@ class Warehouse:
                     if "=" in seg
                 }
                 rows.append((rel, None, os.path.getsize(full), pvals, {}, {}, 0))
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             "path string, rows long, bytes long, "
             "partition_values map<string,string>, "
@@ -1374,7 +1376,7 @@ class Warehouse:
             (v, self._commit_ts(name, v), "write_snapshot", None, None, None)
             for v in self.versions(name)
         ]
-        return self.spark.createDataFrame(rows, self._HISTORY_SCHEMA)
+        return local_frame(self.spark, rows, self._HISTORY_SCHEMA)
 
     def version_at_timestamp(self, name: str, ts_ms: int) -> int:
         """Resolve TIMESTAMP AS OF to a snapshot version: the latest
@@ -1562,7 +1564,8 @@ class Warehouse:
             else:
                 op = "DROP CONSTRAINT"
                 v = self._log(t).drop_constraint(m_con.group(4))
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(t, op, v)],
                 "table_name string, operation string, version long",
             )
@@ -1592,7 +1595,8 @@ class Warehouse:
                 v = self._log(t).set_default(
                     m_dflt.group(2), m_dflt.group(3).strip()
                 )
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(t, op, v)],
                 "table_name string, operation string, version long",
             )
@@ -1634,7 +1638,8 @@ class Warehouse:
                     start=int(m_gen.group(3) or 1),
                     step=int(m_gen.group(4) or 1),
                 )
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(t, op, v)],
                 "table_name string, operation string, version long",
             )
@@ -1682,7 +1687,8 @@ class Warehouse:
                 ]
                 op = "UNSET TBLPROPERTIES"
                 v = self._log(t).unset_properties(keys)
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(t, op, v)],
                 "table_name string, operation string, version long",
             )
@@ -1716,7 +1722,8 @@ class Warehouse:
                     src_t, int(m_clone.group(4))
                 )
             v = self.shallow_clone(src_t, dst, version=ver)
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(dst, "SHALLOW CLONE", v)],
                 "table_name string, operation string, version long",
             )
@@ -1805,7 +1812,8 @@ class Warehouse:
                 defaults=dflts or None,
                 properties=props,
             )
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(t, "CREATE TABLE", v)],
                 "table_name string, operation string, version long",
             )
@@ -1876,7 +1884,8 @@ class Warehouse:
                 )
             else:
                 v = self.write_snapshot(df, t, partition_by=part, **prop_kw)
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(t, "CREATE OR REPLACE TABLE AS" if replace
                   else "CREATE TABLE AS", v)],
                 "table_name string, operation string, version long",
@@ -2017,7 +2026,8 @@ class Warehouse:
                 v = self.write_snapshot(
                     self.read_snapshot(t).unionByName(df), t
                 )
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(t, "INSERT INTO", v, n)],
                 "table_name string, operation string, version long, rows long",
             )
@@ -2051,7 +2061,8 @@ class Warehouse:
                 )
             else:
                 v = self.write_snapshot(cur.limit(0), t)
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(t, "TRUNCATE", v, n)],
                 "table_name string, operation string, version long, rows long",
             )
@@ -2070,7 +2081,8 @@ class Warehouse:
                     "whole-table writes"
                 )
             res = self.delete(t, _parse_where(m_del.group(2)))
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(t, "DELETE", res["version"], res.get("rows_deleted"))],
                 "table_name string, operation string, version long, rows long",
             )
@@ -2099,7 +2111,8 @@ class Warehouse:
             res = self.update(
                 t, _parse_where(m_upd.group(3)), sets
             )
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(t, "UPDATE", res["version"], res.get("rows_updated"))],
                 "table_name string, operation string, version long, rows long",
             )
@@ -2352,7 +2365,8 @@ class Warehouse:
                 not_matched_by_source_clauses=nmbs or None,
                 schema_evolution=evolve,
             )
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(t, "MERGE", res["version"], res.get("rows_written"))],
                 "table_name string, operation string, version long, rows long",
             )
@@ -2381,7 +2395,8 @@ class Warehouse:
                 _parse_where(m_opt.group(2)) if m_opt.group(2) else None
             )
             v = self.optimize_table(t, zorder_by=zcols, where=where)
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(t, "OPTIMIZE", v)],
                 "table_name string, operation string, version long",
             )
@@ -2403,7 +2418,8 @@ class Warehouse:
                     "vectors"
                 )
             res = self._log(t).reorg_purge()
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [
                     (
                         t,
@@ -2426,7 +2442,8 @@ class Warehouse:
             n = self.vacuum_table(
                 t, retain_last=int(m_vac.group(2) or 1)
             )
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(t, "VACUUM", n)],
                 "table_name string, operation string, removed long",
             )
@@ -2440,7 +2457,8 @@ class Warehouse:
         if m_restore:
             t = m_restore.group(1)
             v = self.restore_table(t, int(m_restore.group(2)))
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(t, "RESTORE", v)],
                 "table_name string, operation string, version long",
             )
@@ -2495,7 +2513,8 @@ class Warehouse:
                 v = self.alter_column_type(
                     t, m_alter.group(6), m_alter.group(7).strip()
                 )
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(t, op, v)], "table_name string, operation string, version long"
             )
 
@@ -2619,7 +2638,7 @@ class TxLogWarehouse(Warehouse):
             list(snap.bucket_by.get("cols") or []),
             int(snap.bucket_by.get("n") or 0),
         )
-        return self.spark.createDataFrame([row], self._DETAIL_SCHEMA)
+        return local_frame(self.spark, [row], self._DETAIL_SCHEMA)
 
     def optimize_table(
         self,
@@ -2654,7 +2673,7 @@ class TxLogWarehouse(Warehouse):
             )
             for h in self._log(name).history()
         ]
-        return self.spark.createDataFrame(rows, self._HISTORY_SCHEMA)
+        return local_frame(self.spark, rows, self._HISTORY_SCHEMA)
 
     def write(
         self, df: DataFrame, name: str, partition_by: list[str] | None = None

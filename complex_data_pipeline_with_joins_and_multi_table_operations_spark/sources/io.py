@@ -36,6 +36,22 @@ TPCH_TABLES = (
 )
 
 
+def local_frame(spark: SparkSession, rows: list, schema: str) -> DataFrame:
+    """A small result computed in Python (a statement's outcome row, a
+    metadata listing) as a DataFrame built from a pyarrow table: Spark
+    holds it as a local relation, so collecting it runs no job — built
+    from a Python list it goes through an RDD and runs one."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    st = StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(st.names, r)) for r in rows], schema=to_arrow_schema(st)
+    )
+    return spark.createDataFrame(table, st)
+
+
 def read_parquet_dir(spark: SparkSession, path: str, merge_schema: bool = True) -> DataFrame:
     """Parquet directory scan with schema merge across drifting monthly files
     (reference IngestionJob.scala:32-34, operator S1)."""

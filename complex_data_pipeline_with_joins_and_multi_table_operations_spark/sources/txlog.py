@@ -43,6 +43,7 @@ metadata O(files active) — the checkpoint is the compaction knob.
 
 from __future__ import annotations
 
+import bisect
 import functools as _functools
 import hashlib
 import json
@@ -57,6 +58,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from .io import local_frame
 
 CHECKPOINT_EVERY = 10
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
@@ -2971,7 +2974,8 @@ class TableLog:
                     len(snap.dvs.get(p, [])),
                 )
             )
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             "path string, rows long, bytes long, "
             "partition_values map<string,string>, "
@@ -4569,49 +4573,20 @@ class TableLog:
                         "files_skipped": len(base.files),
                         "rows_written": 0,
                     }
-            if nmbs_any:
-                # full-sync semantics: EVERY file may hold unmatched
-                # target rows — no pruning possible, all files rewrite
-                pfilters: list[tuple] = []
-                cand = dict(base.files)
-            else:
-                aggs = []
-                for k in keys:
-                    aggs += [
-                        F.min(k).alias(f"mn_{k}"),
-                        F.max(k).alias(f"mx_{k}"),
-                    ]
-                bounds = source.agg(*aggs).head()
-                filters = [
-                    (k, "between", (bounds[f"mn_{k}"], bounds[f"mx_{k}"]))
-                    for k in keys
-                    if bounds[f"mn_{k}"] is not None
-                ]
-                if not filters:
-                    # empty source (or all-null keys): MERGE is a no-op
-                    return {
-                        "version": base.version,
-                        "files_rewritten": 0,
-                        "files_skipped": len(base.files),
-                        "rows_written": 0,
-                    }
-                pfilters = _physical_filters(filters, base.column_mapping)
-                cand = {
-                    p: m
-                    for p, m in base.files.items()
-                    if all(
-                        _may_match(m, f, self.data_dir) for f in pfilters
-                    )
+            # full-sync semantics (NMBS): EVERY file may hold unmatched
+            # target rows — no pruning possible, all files rewrite
+            cand, pfilters, repeats = self._merge_candidates(
+                base, source, keys, prune=not nmbs_any
+            )
+            if cand is None:
+                # empty source: MERGE is a no-op
+                return {
+                    "version": base.version,
+                    "files_rewritten": 0,
+                    "files_skipped": len(base.files),
+                    "rows_written": 0,
                 }
-                # global key bounds are coarse for scattered keys (a
-                # trickle touching ids 5 and 2000 spans every file); for
-                # single-key merges with a broadcast-sized key set, prune
-                # per file by bisecting the sorted distinct keys against
-                # its [min, max] — the same answer a stats⋈keys join
-                # would give, driver-side
-                cand = self._refine_by_key_membership(
-                    cand, source, keys, base.column_mapping
-                )
+            check_dups = repeats and not _skip_dup_check
             tgt = self._read_file_metas(
                 list(cand.values()),
                 base.schema,
@@ -4641,7 +4616,7 @@ class TableLog:
                     insert_condition=insert_condition,
                     not_matched=not_matched_clauses,
                     not_matched_by_source=not_matched_by_source_clauses,
-                    check_cardinality=not _skip_dup_check,
+                    check_cardinality=check_dups,
                     defaults=base.defaults,
                     generated_cols=frozenset(base.generated),
                     with_changes=want_cdc,
@@ -4667,7 +4642,7 @@ class TableLog:
                         if not_matched_by_source_condition is not None
                         else None
                     ),
-                    check_cardinality=not _skip_dup_check,
+                    check_cardinality=check_dups,
                 )
             if base.generated:
                 # matched rows kept identity values (keep_cols inside
@@ -4789,26 +4764,9 @@ class TableLog:
                 seen = self.last_txn_version(txn[0])
                 if seen is not None and txn[1] <= seen:
                     return _noop(self.versions()[-1], len(base.files))
-            aggs = []
-            for k in keys:
-                aggs += [F.min(k).alias(f"mn_{k}"), F.max(k).alias(f"mx_{k}")]
-            bounds = source.agg(*aggs).head()
-            filters = [
-                (k, "between", (bounds[f"mn_{k}"], bounds[f"mx_{k}"]))
-                for k in keys
-                if bounds[f"mn_{k}"] is not None
-            ]
-            if not filters:
+            cand, _, _ = self._merge_candidates(base, source, keys)
+            if cand is None:
                 return _noop(base.version, len(base.files))
-            pfilters = _physical_filters(filters, base.column_mapping)
-            cand = {
-                p: m
-                for p, m in base.files.items()
-                if all(_may_match(m, f, self.data_dir) for f in pfilters)
-            }
-            cand = self._refine_by_key_membership(
-                cand, source, keys, base.column_mapping
-            )
             skipped = len(base.files) - len(cand)
             # positions of ALIVE matched target rows — the rows the merge
             # updates or (delete branch) removes. The join carries the
@@ -4978,11 +4936,8 @@ class TableLog:
         ``_DV_INLINE_CAP``, fall back to the equivalent copy-on-write
         merge with the ORIGINAL parameters."""
         from ..operators.changes import (
-            _clause_condition,
-            _clause_projection,
-            _first_match_branch,
             _insert_clauses,
-            _insert_value,
+            _MergeJoin,
             _validate_clauses,
             check_merge_cardinality,
         )
@@ -5067,38 +5022,17 @@ class TableLog:
             table_cols = [f.name for f in eff_schema.fields]
             _validate_clauses(mc, table_cols, keys, "MATCHED")
             _validate_clauses(nc, table_cols, keys, "NOT MATCHED BY SOURCE")
-            if nc:
-                # NMBS touches unmatched rows anywhere: no pruning
-                cand = dict(base.files)
-            else:
-                aggs = []
-                for k in keys:
-                    aggs += [
-                        F.min(k).alias(f"mn_{k}"),
-                        F.max(k).alias(f"mx_{k}"),
-                    ]
-                bounds = src.agg(*aggs).head()
-                filters = [
-                    (k, "between", (bounds[f"mn_{k}"], bounds[f"mx_{k}"]))
-                    for k in keys
-                    if bounds[f"mn_{k}"] is not None
-                ]
-                if not filters:
-                    # empty source and no NMBS clause: nothing matches,
-                    # nothing inserts
-                    return _noop(base.version, len(base.files))
-                pfilters = _physical_filters(filters, base.column_mapping)
-                cand = {
-                    p: m
-                    for p, m in base.files.items()
-                    if all(_may_match(m, f, self.data_dir) for f in pfilters)
-                }
-                cand = self._refine_by_key_membership(
-                    cand, src, keys, base.column_mapping
-                )
+            # NMBS touches unmatched rows anywhere: no pruning
+            cand, _, repeats = self._merge_candidates(
+                base, src, keys, prune=not nc
+            )
+            if cand is None:
+                # empty source and no NMBS clause: nothing matches,
+                # nothing inserts
+                return _noop(base.version, len(base.files))
             skipped = len(base.files) - len(cand)
             scan = self._scan_with_positions(cand, base)
-            if mc and not dup_checked:
+            if mc and repeats and not dup_checked:
                 # scoped to rows that actually match a target row
                 # (candidates are exhaustive for source-key matches by
                 # the pruning argument above); the flag keeps the
@@ -5110,120 +5044,34 @@ class TableLog:
                     scan = scan.withColumn(
                         fld.name, F.lit(None).cast(fld.dataType)
                     )
-            mask_parts: list[DataFrame] = []
-            upd_parts: list[DataFrame] = []  # update post-image rows
-            ins_parts: list[DataFrame] = []  # insert-branch rows
-
-            if mc:
-                pairs = scan.alias("t").join(
-                    src.alias("s"), keys, "inner"
-                ).withColumn("__m_branch", _first_match_branch(mc))
-                touched = pairs.filter(F.col("__m_branch").isNotNull())
-                upd_idx = [
-                    i for i, cl in enumerate(mc) if cl["action"] == "update"
-                ]
-                # the __upd flag rides the position collect so the
-                # commit can record which masked rows are UPDATE
-                # pre-images (Delta CDF parity, round 11) — one scan,
-                # no second collect
-                m_upd_flag = (
-                    F.col("__m_branch").isin(upd_idx)
-                    if upd_idx
-                    else F.lit(False)
-                )
-                mask_parts.append(
-                    touched.select(
-                        F.col("t.__dv_file").alias("__dv_file"),
-                        F.col("t.__dv_pos").alias("__dv_pos"),
-                        m_upd_flag.alias("__upd"),
-                    )
-                )
-                if upd_idx:
-                    upd_parts.append(
-                        touched.filter(F.col("__m_branch").isin(upd_idx))
-                        .select(
-                            *_clause_projection(
-                                mc, table_cols, eff_schema,
-                                "__m_branch", qualified=True,
-                                keep_cols=frozenset(base.generated),
-                            )
-                        )
-                    )
-            if nc:
-                unmatched = scan.join(
-                    src.select(*keys).distinct(), keys, "left_anti"
-                ).withColumn("__n_branch", _first_match_branch(nc))
-                ntouched = unmatched.filter(F.col("__n_branch").isNotNull())
-                n_upd = [
-                    i for i, cl in enumerate(nc) if cl["action"] == "update"
-                ]
-                n_upd_flag = (
-                    F.col("__n_branch").isin(n_upd)
-                    if n_upd
-                    else F.lit(False)
-                )
-                mask_parts.append(
-                    ntouched.select(
-                        "__dv_file", "__dv_pos", n_upd_flag.alias("__upd")
-                    )
-                )
-                if n_upd:
-                    upd_parts.append(
-                        ntouched.filter(F.col("__n_branch").isin(n_upd))
-                        .select(
-                            *_clause_projection(
-                                nc, table_cols, eff_schema,
-                                "__n_branch", qualified=False,
-                            )
-                        )
-                    )
+            # the copy-on-write MERGE's one join, read three times: the
+            # positions to mask, the update post-images, the inserts.
+            # Alive candidate keys are exact for insert detection (the
+            # pruning argument above).
             nm = _insert_clauses(do_insert, ic, nm_clauses, table_cols)
-            if nm:
-                # alive candidate keys are exact for insert detection
-                # (pruning argument above); ordered conditional insert
-                # clauses, first-match-wins; column-list VALUES fill
-                # unlisted/DEFAULT-keyword columns with their declared
-                # defaults (round 11 — Delta's fill rule)
-                ins = src.alias("s").join(
-                    scan.select(*keys), keys, "left_anti"
-                ).withColumn("__i_branch", _first_match_branch(nm)).filter(
-                    F.col("__i_branch").isNotNull()
-                )
-                proj = []
-                for c in table_cols:
-                    dt = eff_schema[c].dataType
-                    w = None
-                    for i, cl in enumerate(nm):
-                        v = _insert_value(
-                            c, dt, cl.get("set"), base.defaults,
-                            frozenset(base.generated),
-                        )
-                        cond_i = F.col("__i_branch") == i
-                        w = F.when(cond_i, v) if w is None else w.when(cond_i, v)
-                    proj.append(w.alias(c))
-                ins_parts.append(ins.select(*proj))
-
-            if mask_parts:
-                mask = mask_parts[0]
-                for m in mask_parts[1:]:
-                    mask = mask.unionByName(m)
-                rows = (
-                    mask.select("__dv_file", "__dv_pos", "__upd")
-                    .limit(self._DV_INLINE_CAP + 1)
-                    .collect()
-                )
-                truncated = len(rows) > self._DV_INLINE_CAP
-                base_by_name = {os.path.basename(p): p for p in cand}
-                hits, upd_hits = {}, {}
-                for r in rows:
-                    p = base_by_name[r["__dv_file"]]
-                    hits.setdefault(p, []).append(int(r["__dv_pos"]))
-                    if r["__upd"]:
-                        upd_hits.setdefault(p, []).append(int(r["__dv_pos"]))
-                hits = {p: sorted(x) for p, x in hits.items()}
-                upd_hits = {p: sorted(x) for p, x in upd_hits.items()}
-            else:
-                hits, upd_hits, truncated = {}, {}, False
+            j = _MergeJoin(
+                scan, src, keys, mc, nc, nm, table_cols, eff_schema,
+                base.defaults, frozenset(base.generated),
+            )
+            # the __upd flag rides the position collect so the commit can
+            # record which masked rows are UPDATE pre-images (Delta CDF
+            # parity, round 11) — one scan, no second collect
+            rows = (
+                j.frame.filter(j.update | j.delete)
+                .select("__dv_file", "__dv_pos", j.update.alias("__upd"))
+                .limit(self._DV_INLINE_CAP + 1)
+                .collect()
+            )
+            truncated = len(rows) > self._DV_INLINE_CAP
+            base_by_name = {os.path.basename(p): p for p in cand}
+            hits, upd_hits = {}, {}
+            for r in rows:
+                p = base_by_name[r["__dv_file"]]
+                hits.setdefault(p, []).append(int(r["__dv_pos"]))
+                if r["__upd"]:
+                    upd_hits.setdefault(p, []).append(int(r["__dv_pos"]))
+            hits = {p: sorted(x) for p, x in hits.items()}
+            upd_hits = {p: sorted(x) for p, x in upd_hits.items()}
             n_hits = sum(len(v) for v in hits.values())
             if truncated or (
                 n_hits + sum(len(v) for v in base.dvs.values())
@@ -5231,10 +5079,7 @@ class TableLog:
             ):
                 return _cow_fallback()
 
-            def _finish(parts_list: list[DataFrame]) -> list[dict]:
-                rows_df = parts_list[0]
-                for p in parts_list[1:]:
-                    rows_df = rows_df.unionByName(p)
+            def _finish(rows_df: DataFrame) -> list[dict]:
                 if base.generated:
                     # rewritten matched rows kept their identity
                     # (keep_cols above) and inserts carry NULL —
@@ -5255,12 +5100,12 @@ class TableLog:
             # add-action — Delta CDF parity); a trickle merge stages
             # small sets either way
             adds: list[dict] = []
-            if upd_parts:
-                for a in _finish(upd_parts):
+            if any(cl["action"] == "update" for cl in mc + nc):
+                for a in _finish(j.frame.filter(j.update).select(*j.post)):
                     a["cdc"] = "update_post"
                     adds.append(a)
-            if ins_parts:
-                adds += _finish(ins_parts)
+            if nm:
+                adds += _finish(j.frame.filter(j.insert).select(*j.post))
             new_gen = (
                 self._bump_identity_high(
                     base.generated, adds, base.column_mapping
@@ -5390,31 +5235,14 @@ class TableLog:
                         "files_skipped": len(base.files),
                         "rows_written": 0,
                     }
-            aggs = []
-            for k in keys:
-                aggs += [F.min(k).alias(f"mn_{k}"), F.max(k).alias(f"mx_{k}")]
-            bounds = source.agg(*aggs).head()
-            filters = [
-                (k, "between", (bounds[f"mn_{k}"], bounds[f"mx_{k}"]))
-                for k in keys
-                if bounds[f"mn_{k}"] is not None
-            ]
-            if not filters:
+            cand, pfilters, _ = self._merge_candidates(base, source, keys)
+            if cand is None:
                 return {
                     "version": base.version,
                     "files_rewritten": 0,
                     "files_skipped": len(base.files),
                     "rows_written": 0,
                 }
-            pfilters = _physical_filters(filters, base.column_mapping)
-            cand = {
-                p: m
-                for p, m in base.files.items()
-                if all(_may_match(m, f, self.data_dir) for f in pfilters)
-            }
-            cand = self._refine_by_key_membership(
-                cand, source, keys, base.column_mapping
-            )
             tgt = self._read_file_metas(
                 list(cand.values()),
                 base.schema,
@@ -5530,26 +5358,9 @@ class TableLog:
                     "a table column (hard removals would forget the "
                     "delete's order and let stale updates resurrect keys)"
                 )
-            aggs = []
-            for k in keys:
-                aggs += [F.min(k).alias(f"mn_{k}"), F.max(k).alias(f"mx_{k}")]
-            bounds = source.agg(*aggs).head()
-            filters = [
-                (k, "between", (bounds[f"mn_{k}"], bounds[f"mx_{k}"]))
-                for k in keys
-                if bounds[f"mn_{k}"] is not None
-            ]
-            if not filters:
+            cand, _, _ = self._merge_candidates(base, source, keys)
+            if cand is None:
                 return _noop(base.version, len(base.files))
-            pfilters = _physical_filters(filters, base.column_mapping)
-            cand = {
-                p: m
-                for p, m in base.files.items()
-                if all(_may_match(m, f, self.data_dir) for f in pfilters)
-            }
-            cand = self._refine_by_key_membership(
-                cand, source, keys, base.column_mapping
-            )
             skipped = len(base.files) - len(cand)
             # one windowed pass over (alive candidate rows WITH positions)
             # ∪ (source records with NULL positions): per key, the same
@@ -5702,53 +5513,80 @@ class TableLog:
 
     _MERGE_KEYSET_CAP = 100_000
 
-    def _refine_by_key_membership(
+    def _merge_candidates(
         self,
-        cand: dict,
+        base: "Snapshot",
         source: DataFrame,
         keys: list[str],
-        mapping: dict[str, str] | None = None,
-    ) -> dict:
-        """Drop candidate files whose [min, max] contains NO source key.
-        Single-key only, and only while the distinct key set fits a
-        driver-side list (cap = _MERGE_KEYSET_CAP — the same size class a
-        broadcast join would ship); larger sources keep the conservative
-        bounds-based candidate set. Ordering relies on the key's natural
-        Python order matching the engine's (ints/floats/strings — the
+        prune: bool = True,
+    ) -> tuple[dict | None, list[tuple], bool]:
+        """The MERGE pre-pass, shared by every merge form: ONE collect of
+        the source key columns (at most ``_MERGE_KEYSET_CAP`` + 1 rows)
+        yields ``(candidates, pfilters, repeats)``.
+
+        - ``candidates``: the files whose stats admit the key bounds and,
+          per key, at least one of its sorted distinct values (bisected
+          against the file's [min, max] — the answer a stats⋈keys join
+          would give, computed locally; bounds alone are coarse for
+          scattered keys, a trickle touching ids 5 and 2000 spans every
+          file).
+          Every other file provably holds no source key, so it hosts no
+          match and insert detection against the candidates alone is
+          exact. ``None`` for an empty source (the MERGE is a no-op);
+          empty when no row has a full non-NULL key (every row is NOT
+          MATCHED). ``prune=False`` keeps every file: a NOT MATCHED BY
+          SOURCE clause may touch any target row.
+        - ``pfilters``: the physical bound filters, for the commit-time
+          concurrent-append check.
+        - ``repeats``: whether a non-NULL key tuple occurs twice — only
+          then can two source rows match one target row, so only then
+          must the cardinality probe read the target.
+
+        A NULL key matches nothing, so rows with one neither widen the
+        bounds nor repeat. A source over the cap keeps the aggregate
+        path: one min/max job for the bounds, no per-file membership,
+        ``repeats`` assumed. Ordering relies on the key's natural Python
+        order matching the engine's (ints/floats/strings/dates — the
         types _file_stats records)."""
-        import bisect
-
-        from pyspark.sql import functions as F
-
-        if len(keys) != 1 or len(cand) <= 1:
-            # nothing to refine away: the collect below would pay a full
-            # distinct over the source for a decision with one outcome
-            # (the time-local CDC case — bounds already pruned to the
-            # hot file)
-            return cand
-        k = keys[0]
-        sk = _phys_name(mapping or {}, k)  # stats are keyed physically
         rows = (
-            source.select(k)
-            .filter(F.col(k).isNotNull())
-            .distinct()
-            .limit(self._MERGE_KEYSET_CAP + 1)
-            .collect()
+            source.select(*keys).limit(self._MERGE_KEYSET_CAP + 1).collect()
         )
+        vals = None
         if len(rows) > self._MERGE_KEYSET_CAP:
-            return cand
-        vals = sorted(r[0] for r in rows)
-        out = {}
-        for p, m in cand.items():
-            st = (m.get("stats") or {}).get(sk)
-            if not st or st.get("min") is None or st.get("max") is None:
-                out[p] = m  # no stats: must stay a candidate
-                continue
-            lo, hi = _dec_key(st["min"]), _dec_key(st["max"])
-            i = bisect.bisect_left(vals, lo)
-            if i < len(vals) and vals[i] <= hi:
-                out[p] = m
-        return out
+            repeats = True
+            if prune:
+                b = source.agg(
+                    *[f(k) for k in keys for f in (F.min, F.max)]
+                ).head()
+                bounds = [(b[2 * i], b[2 * i + 1]) for i in range(len(keys))]
+        else:
+            full = [tuple(r) for r in rows if None not in tuple(r)]
+            repeats = len(set(full)) < len(full)
+            vals = [sorted({r[i] for r in full}) for i in range(len(keys))]
+            bounds = [(v[0], v[-1]) if v else (None, None) for v in vals]
+        if not prune:
+            return dict(base.files), [], repeats
+        if not rows:
+            return None, [], False
+        if any(lo is None for lo, _ in bounds):
+            return {}, [], repeats
+        pfilters = _physical_filters(
+            [(k, "between", bd) for k, bd in zip(keys, bounds)],
+            base.column_mapping,
+        )
+        cand = {
+            p: m
+            for p, m in base.files.items()
+            if all(_may_match(m, f, self.data_dir) for f in pfilters)
+        }
+        if vals is not None:
+            phys = [_phys_name(base.column_mapping or {}, k) for k in keys]
+            cand = {
+                p: m
+                for p, m in cand.items()
+                if all(_range_holds_any(m, c, v) for c, v in zip(phys, vals))
+            }
+        return cand, pfilters, repeats
 
     def maintain(
         self,
@@ -6189,6 +6027,17 @@ def _bloom_ok(
     if op == "in":
         return any(_bloom_may_contain(bl, v, data_dir) for v in val)
     return True
+
+
+def _range_holds_any(meta: dict, col: str, vals: list) -> bool:
+    """Does the file's [min, max] of ``col`` hold one of the sorted
+    ``vals``? A file without stats for ``col`` always may."""
+    st = (meta.get("stats") or {}).get(col)
+    if not st or st.get("min") is None or st.get("max") is None:
+        return True
+    lo, hi = _dec_key(st["min"]), _dec_key(st["max"])
+    i = bisect.bisect_left(vals, lo)
+    return i < len(vals) and vals[i] <= hi
 
 
 def _may_match(meta: dict, flt: tuple, data_dir: str | None = None) -> bool:

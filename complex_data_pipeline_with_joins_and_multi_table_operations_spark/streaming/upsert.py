@@ -63,10 +63,10 @@ def apply_changes_batch(
         batch.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
-        # the merge machinery consumes the source THREE times (key-bounds
-        # aggregate for file pruning, key-membership refinement, the
-        # upsert join itself) — materialize the collapsed batch once or
-        # the upstream scan + window sort re-executes per consumer
+        # the merge machinery consumes the source twice (the key collect
+        # for file pruning, the upsert join itself) — materialize the
+        # collapsed batch once or the upstream scan + window sort
+        # re-executes per consumer
         # (measured ~2x the per-microbatch cost at the sf10 probe).
         # Batch-sized, values untouched: slicing-invariance holds.
         .localCheckpoint(eager=True)

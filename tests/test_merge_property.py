@@ -7,7 +7,12 @@ the same clause lists (per-row, first-match-wins, SQL tri-state NULL
 conditions, NULL-filling column-list inserts) over randomized tables and
 clause sets. Any divergence between the fused plan and the obvious
 semantics — branch-order bugs, NULL-condition mishandling, a clause
-leaking into another branch's columns — shows up as a row diff."""
+leaking into another branch's columns — shows up as a row diff.
+
+Both sides draw NULL keys too. A NULL key equals nothing, so a
+NULL-keyed target row is NOT MATCHED BY SOURCE (it survives unless an
+NMBS clause fires) and a NULL-keyed source row is NOT MATCHED (it
+inserts when an insert clause fires) — however many share the NULL."""
 
 from __future__ import annotations
 
@@ -127,17 +132,17 @@ def scenario(draw):
     n_s = draw(st.integers(0, 6))
     target = [
         (
-            i,
+            draw(st.sampled_from([i, i, None])),
             draw(st.sampled_from(["a", "b", None])),
             draw(st.sampled_from([0, 10, 25, 40, None])),
         )
         for i in range(n_t)
     ]
-    # source keys overlap the target range and beyond; UNIQUE (SQL
-    # MERGE cardinality precondition)
+    # source keys overlap the target range and beyond; non-NULL keys
+    # UNIQUE (SQL MERGE cardinality precondition), NULL ones repeat freely
     s_keys = draw(
         st.lists(st.integers(0, 9), unique=True, max_size=n_s)
-    )
+    ) + [None] * draw(st.integers(0, 2))
     source = [
         (
             k,
@@ -154,11 +159,12 @@ def scenario(draw):
 
 
 def _model(target, source, matched, nmbs, ins):
-    """The naive interpreter: per-row, clause lists in order."""
-    s_by_key = {r[0]: r for r in source}
+    """The naive interpreter: per-row, clause lists in order; a NULL key
+    matches nothing."""
+    s_by_key = {r[0]: r for r in source if r[0] is not None}
     out = []
     for t_row in target:
-        s_row = s_by_key.get(t_row[0])
+        s_row = s_by_key.get(t_row[0]) if t_row[0] is not None else None
         if s_row is None:
             # NOT MATCHED BY SOURCE: first true clause wins
             fired = None
@@ -183,9 +189,9 @@ def _model(target, source, matched, nmbs, ins):
             r = _apply_matched(fired[0], t_row, s_row)
             if r is not None:
                 out.append(r)
-    t_keys = {r[0] for r in target}
+    t_keys = {r[0] for r in target if r[0] is not None}
     for s_row in source:
-        if s_row[0] in t_keys:
+        if s_row[0] is not None and s_row[0] in t_keys:
             continue
         for kind, cond in ins:
             if _cond_eval(cond, (None, None, None), s_row):
@@ -194,7 +200,11 @@ def _model(target, source, matched, nmbs, ins):
                 else:  # column list (id, val) — name NULL-fills
                     out.append((s_row[0], None, s_row[2]))
                 break
-    return sorted(out, key=lambda r: (r[0], str(r[1]), str(r[2])))
+    return sorted(out, key=_row_order)
+
+
+def _row_order(r):
+    return (r[0] is None, r[0] or 0, str(r[1]), str(r[2]))
 
 
 @pytest.mark.slow
@@ -231,10 +241,7 @@ def test_merge_branches_matches_row_model(spark, sc):
             for a, c in nmbs
         ],
     )
-    got = sorted(
-        ((r.id, r.name, r.val) for r in out.collect()),
-        key=lambda r: (r[0], str(r[1]), str(r[2])),
-    )
+    got = sorted(((r.id, r.name, r.val) for r in out.collect()), key=_row_order)
     want = _model(target, source, matched, nmbs, ins)
     assert got == want, (
         f"\ntarget={target}\nsource={source}\nmatched={matched}"

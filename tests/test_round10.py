@@ -119,11 +119,12 @@ def test_merge_branches_operator_semantics(spark):
         )
 
 
-def test_merge_branches_plan_is_one_join_per_side(spark):
+def test_merge_branches_plan_is_one_full_outer_join(spark):
     """Plan-shape contract (PLANS.md §multi-branch MERGE): however many
-    matched clauses, the plan carries exactly ONE inner join (all clause
-    outcomes in a per-column CASE) plus one anti join per remaining side
-    — no per-clause joins, no extra shuffles at 100 TB."""
+    clauses, the plan carries exactly ONE join — a full outer join of
+    target and source whose per-column CASE carries every clause
+    outcome, matched, inserted and untouched rows alike. No per-clause
+    joins and no anti joins rescanning the target."""
     import re
 
     t = spark.createDataFrame(TARGET, T_SCHEMA)
@@ -131,10 +132,11 @@ def test_merge_branches_plan_is_one_join_per_side(spark):
     out = merge_branches(
         t, s, ["id"], matched=CDC_MATCHED,
         insert=True, insert_condition="s.op <> 'D'",
+        not_matched_by_source=CDC_NMBS,
     )
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     joins = re.findall(r"Join (\w+)", plan)
-    assert sorted(joins) == ["Inner", "LeftAnti", "LeftAnti"], joins
+    assert joins == ["FullOuter"], joins
 
 
 def test_sql_merge_multi_branch_end_to_end(spark, tmp_path):

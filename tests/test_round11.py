@@ -117,6 +117,21 @@ def test_unmatched_duplicate_source_keys_insert(spark):
     assert rows == {(1, "u"), (2, "b"), (9, "x"), (9, "y")}
 
 
+def test_duplicate_source_keys_without_matched_clause_keep_target_once(spark):
+    """Insert-only and NMBS-only merges never check cardinality: a target
+    row whose key two source rows share is matched (so neither inserts),
+    untouched, and comes out exactly once."""
+    tgt = spark.createDataFrame(TARGET, T_SCHEMA)
+    src = spark.createDataFrame(
+        [(1, "x", 90), (1, "y", 91), (9, "z", 99), (9, "w", 98)], T_SCHEMA
+    )
+    for nmbs in (None, [{"action": "delete", "condition": None}]):
+        out = merge_branches(tgt, src, ["id"], not_matched_by_source=nmbs)
+        rows = sorted((r.id, r.name) for r in out.collect())
+        kept = [] if nmbs else [(2, "b")]
+        assert rows == sorted([(1, "a"), (9, "w"), (9, "z")] + kept)
+
+
 def test_matched_duplicate_source_keys_still_raise(spark):
     tgt = spark.createDataFrame(TARGET, T_SCHEMA)
     src = spark.createDataFrame(

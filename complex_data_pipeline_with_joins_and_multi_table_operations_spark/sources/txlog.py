@@ -272,6 +272,19 @@ def _rename_columns(df: DataFrame, renames: dict[str, str]) -> DataFrame:
     return df
 
 
+def _with_positions(df: DataFrame, names) -> DataFrame:
+    """``names`` plus each row's deletion-vector coordinates: its file
+    basename (uuid-unique across a table) as ``__dv_file`` and its
+    ``row_index`` as ``__dv_pos``."""
+    return df.select(
+        *names,
+        F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias(
+            "__dv_file"
+        ),
+        F.col("_metadata.row_index").alias("__dv_pos"),
+    )
+
+
 def _physical_filters(filters: list[tuple], mapping: dict[str, str]) -> list[tuple]:
     """Translate logical filter columns to physical for stats/partition
     pruning (footer stats and partition dirs carry physical names)."""
@@ -410,17 +423,16 @@ def _translate_legacy_merge(
     delete_condition: str | None,
     insert_unmatched_deletes: bool,
     update_set: dict[str, str] | None,
-) -> tuple[DataFrame, list[dict], str | None]:
-    """Legacy merge parameters → the ordered clause form, with identical
-    semantics (shared by the general dv merge and, round 11, by CoW
-    merges on tables with generated columns — the legacy source-wins
-    path would otherwise need the source to carry generated columns).
-    The ``__mrg_del`` flag column reproduces merge_upsert's rule
-    exactly: a delete-flagged source row drops its target match, and
-    inserts only under ``insert_unmatched_deletes``. Returns
-    (source', matched_clauses, insert_condition)."""
-    from pyspark.sql import functions as F
-
+    nmbs_delete: bool,
+    nmbs_condition: str | None,
+) -> tuple[DataFrame, list[dict], str | None, list[dict]]:
+    """TableLog.merge's legacy keywords → the ordered clause form. The
+    delete condition is over the bare source row, which a matched clause
+    cannot name (its columns resolve under ``t``/``s``), so it is
+    evaluated on the source as the ``__mrg_del`` flag column: a flagged
+    row deletes its target match, and inserts only under
+    ``insert_unmatched_deletes``. Returns (source', matched_clauses,
+    insert_condition, not_matched_by_source_clauses)."""
     src = source
     mc: list[dict] = []
     ic: str | None = None
@@ -435,7 +447,38 @@ def _translate_legacy_merge(
         if not insert_unmatched_deletes:
             ic = "NOT s.__mrg_del"
     mc.append({"action": "update", "condition": None, "set": update_set})
-    return src, mc, ic
+    nc = (
+        [{"action": "delete", "condition": nmbs_condition}]
+        if nmbs_delete
+        else []
+    )
+    return src, mc, ic, nc
+
+
+def _evolved_schema(
+    base: Snapshot, evolve: StructType | None
+) -> tuple[str, StructType]:
+    """The schema a MERGE commits: the table's, extended by the new
+    columns of ``evolve`` (the caller's source schema) as nullable —
+    Delta's autoMerge, the _merge_schemas contract of the
+    schema-evolving append (a type conflict on a shared column
+    raises)."""
+    if evolve is None:
+        return base.schema_json, base.schema
+    merged = _merge_schemas(base.schema_json, evolve.json())
+    if merged == base.schema_json:
+        return merged, base.schema
+    return merged, StructType.fromJson(json.loads(merged))
+
+
+def _merge_noop(snap: Snapshot) -> dict:
+    """The result of a MERGE that commits nothing against ``snap``."""
+    return {
+        "version": snap.version,
+        "files_rewritten": 0,
+        "files_skipped": len(snap.files),
+        "rows_written": 0,
+    }
 
 
 class ConstraintViolationError(ValueError):
@@ -2191,21 +2234,10 @@ class TableLog:
             # bucketed-fact shape stops paying file rewrites. The
             # vector is _DV_INLINE_CAP-bounded, so the broadcast side
             # is always tiny.
-            phys_names = df.columns
-            positions = spark.createDataFrame(
-                [(b, int(p)) for b, ps in dvs.items() for p in ps],
-                "__dv_file string, __dv_pos long",
-            )
             df = (
-                df.select(
-                    *phys_names,
-                    F.element_at(
-                        F.split(F.col("_metadata.file_path"), "/"), -1
-                    ).alias("__dv_file"),
-                    F.col("_metadata.row_index").alias("__dv_pos"),
-                )
+                _with_positions(df, df.columns)
                 .join(
-                    F.broadcast(positions),
+                    F.broadcast(self._positions_frame(dvs)),
                     ["__dv_file", "__dv_pos"],
                     "left_anti",
                 )
@@ -2886,56 +2918,18 @@ class TableLog:
             if v and p in present
         }
 
-        def _grouped(ms: list[dict], with_meta: bool) -> DataFrame:
-            phys = _physical_schema(schema, mapping or {})
-            groups: dict[tuple, list] = {}
-            for m in ms:
-                key = tuple(sorted((m.get("partition_values") or {}).keys()))
-                groups.setdefault(key, []).append(m)
-            dfs = []
-            for key, group in groups.items():
-                paths = [os.path.join(self.data_dir, m["path"]) for m in group]
-                reader = self.spark.read.schema(phys)
-                if key:
-                    reader = reader.option("basePath", self.data_dir)
-                d = reader.parquet(*paths)
-                if with_meta:
-                    d = d.select(
-                        *phys.names,
-                        F.element_at(
-                            F.split(F.col("_metadata.file_path"), "/"), -1
-                        ).alias("__dv_file"),
-                        F.col("_metadata.row_index").alias("__dv_pos"),
-                    )
-                dfs.append(d)
-            cols = list(phys.names) + (
-                ["__dv_file", "__dv_pos"] if with_meta else []
-            )
-            out = dfs[0]
-            if len(dfs) > 1:
-                # pin the declared column order before unioning: partition
-                # columns reconstructed from dirs can land at the tail
-                out = out.select(*[out[n] for n in cols])
-                for d in dfs[1:]:
-                    out = out.unionByName(d.select(*[d[n] for n in cols]))
-            return out
-
         clean = [m for m in metas if os.path.basename(m["path"]) not in dvs]
         parts = []
         if clean:
-            parts.append(_grouped(clean, with_meta=False))
+            parts.append(self._grouped_scan(clean, schema, mapping))
         if dvs:
             dv_metas = [
                 m for m in metas if os.path.basename(m["path"]) in dvs
             ]
-            positions = self.spark.createDataFrame(
-                [(b, int(p)) for b, ps in dvs.items() for p in ps],
-                "__dv_file string, __dv_pos long",
-            )
             kept = (
-                _grouped(dv_metas, with_meta=True)
+                self._grouped_scan(dv_metas, schema, mapping, positions=True)
                 .join(
-                    F.broadcast(positions),
+                    F.broadcast(self._positions_frame(dvs)),
                     ["__dv_file", "__dv_pos"],
                     "left_anti",
                 )
@@ -2949,6 +2943,51 @@ class TableLog:
             out = _rename_columns(out, {p: l for l, p in mapping.items()})
             out = out.select(*[out[n] for n in schema.names])
         return out
+
+    def _grouped_scan(
+        self,
+        metas: list[dict],
+        schema,
+        mapping: dict[str, str] | None,
+        positions: bool = False,
+    ) -> DataFrame:
+        """The files of ``metas`` under physical column names, one read
+        per partition spec (see _read_file_metas) unioned by name.
+        ``positions`` adds each row's deletion-vector coordinates
+        (``_with_positions``)."""
+        phys = _physical_schema(schema, mapping or {})
+        groups: dict[tuple, list] = {}
+        for m in metas:
+            key = tuple(sorted((m.get("partition_values") or {}).keys()))
+            groups.setdefault(key, []).append(m)
+        dfs = []
+        for key, group in groups.items():
+            paths = [os.path.join(self.data_dir, m["path"]) for m in group]
+            reader = self.spark.read.schema(phys)
+            if key:
+                reader = reader.option("basePath", self.data_dir)
+            d = reader.parquet(*paths)
+            dfs.append(_with_positions(d, phys.names) if positions else d)
+        cols = list(phys.names) + (
+            ["__dv_file", "__dv_pos"] if positions else []
+        )
+        out = dfs[0]
+        if len(dfs) > 1:
+            # pin the declared column order before unioning: partition
+            # columns reconstructed from dirs can land at the tail
+            out = out.select(*[out[n] for n in cols])
+            for d in dfs[1:]:
+                out = out.unionByName(d.select(*[d[n] for n in cols]))
+        return out
+
+    def _positions_frame(self, dvs: dict[str, list[int]]) -> DataFrame:
+        """``(__dv_file, __dv_pos)`` rows of file basename → row
+        positions: the broadcast side of every deletion-vector join
+        (bounded by ``_DV_INLINE_CAP``)."""
+        return self.spark.createDataFrame(
+            [(b, int(p)) for b, ps in dvs.items() for p in ps],
+            "__dv_file string, __dv_pos long",
+        )
 
     def files_df(self, version: int | None = None) -> DataFrame:
         """Iceberg's ``table.files`` metadata relation: one row per active
@@ -3927,45 +3966,28 @@ class TableLog:
                 f"change feed for v{c['version']} references vacuumed "
                 f"files: {missing[:3]}…"
             )
-        phys = _physical_schema(schema, mapping)
-        groups: dict[tuple, list[str]] = {}
-        for p in new_pos:
-            key = tuple(
-                sorted(
-                    _parse_partition_values(os.path.dirname(p) or ".").keys()
-                )
+        metas = [
+            {
+                "path": p,
+                "partition_values": _parse_partition_values(
+                    os.path.dirname(p) or "."
+                ),
+            }
+            for p in new_pos
+        ]
+        out = (
+            self._grouped_scan(metas, schema, mapping, positions=True)
+            .join(
+                F.broadcast(
+                    self._positions_frame(
+                        {os.path.basename(p): v for p, v in new_pos.items()}
+                    )
+                ),
+                ["__dv_file", "__dv_pos"],
+                "inner",
             )
-            groups.setdefault(key, []).append(p)
-        parts = []
-        for key, ps in groups.items():
-            reader = self.spark.read.schema(phys)
-            if key:
-                reader = reader.option("basePath", self.data_dir)
-            parts.append(
-                reader.parquet(
-                    *[os.path.join(self.data_dir, p) for p in ps]
-                ).select(
-                    *phys.names,
-                    F.element_at(
-                        F.split(F.col("_metadata.file_path"), "/"), -1
-                    ).alias("__dv_file"),
-                    F.col("_metadata.row_index").alias("__dv_pos"),
-                )
-            )
-        scan = parts[0]
-        for p in parts[1:]:
-            scan = scan.unionByName(p)
-        positions = self.spark.createDataFrame(
-            [
-                (os.path.basename(p), int(pos))
-                for p, v in new_pos.items()
-                for pos in v
-            ],
-            "__dv_file string, __dv_pos long",
+            .drop("__dv_file", "__dv_pos")
         )
-        out = scan.join(
-            F.broadcast(positions), ["__dv_file", "__dv_pos"], "inner"
-        ).drop("__dv_file", "__dv_pos")
         if mapping:
             out = _rename_columns(out, {p: l for l, p in mapping.items()})
             out = out.select(*[out[n] for n in schema.names])
@@ -4342,77 +4364,57 @@ class TableLog:
         not_matched_by_source_clauses: list[dict] | None = None,
         not_matched_clauses: list[dict] | None = None,
         schema_evolution: bool = False,
-        _skip_dup_check: bool = False,
     ) -> dict:
-        """MERGE INTO the table (WHEN MATCHED UPDATE, WHEN NOT MATCHED
-        INSERT, optionally WHEN MATCHED AND <delete_condition> DELETE —
-        the operators/changes.py merge_upsert semantics, including the
-        NULL-condition and unmatched-delete-row rules) with stats-based
-        file pruning: only files whose per-key min/max INTERSECT the
-        source's key bounds are rewritten; every other file provably
-        contains no source key, keeps its path, and — crucially — cannot
-        host a match, so insert detection against the candidate subset
-        alone is exact. The swap (removes = candidates, adds = merged
-        candidates ∪ inserts) publishes as one atomic commit with the
-        copy-on-write frozen-set concurrency guard; ``rows_written``
-        comes free from the staged files' harvested stats.
+        """MERGE INTO the table, as ordered clause lists (the grammar and
+        plan shape of operators/changes.merge_branches):
+        ``matched_clauses`` is an ORDERED list of ``{"action":
+        "update"|"delete", "condition": sql|None, "set": {col: sql}|None}``
+        (``set=None`` = ``SET *``), first-match-wins, conditions over the
+        ``t`` (target row) / ``s`` (source row) aliases; a matched pair no
+        clause takes keeps the target row. ``not_matched_clauses`` are the
+        ordered INSERT clauses (or ``insert=False`` / ``insert_condition``
+        for the one ``INSERT *`` clause); ``not_matched_by_source_clauses``
+        are UPDATE/DELETE clauses over the bare target row. A NULL
+        condition is false. Two source rows matching one target row raise
+        (the SQL MERGE cardinality rule).
 
-        ``source`` may carry extra columns (e.g. the delete flag) — the
-        output projects to the table schema; shared columns must be
-        type-compatible.
+        The legacy keywords are shorthand for clauses, translated once
+        here and mutually exclusive with them:
 
-        ``via="dv"`` is the merge-on-read MERGE: matched ALIVE target
-        rows join the deletion vectors (updates and WHEN-MATCHED deletes
-        alike) and only the source-derived rows append — a dimension
-        trickle into a 100 TB fact appends one tiny file instead of
-        rewriting every touched host file. merge_upsert's source-wins
-        rule makes the appended set exactly the source after the
-        delete-branch rules, so the two forms commit identical logical
-        states. Same cap-and-fallback policy as delete(via='dv').
+        - none given: ``WHEN MATCHED THEN UPDATE SET *`` (source wins),
+          ``WHEN NOT MATCHED THEN INSERT *``;
+        - ``update_set``: the matched update assigns only these columns
+          (SQL over ``t``/``s``); the others keep their target values;
+        - ``delete_condition`` (SQL over the source row): ``WHEN MATCHED
+          AND <cond> THEN DELETE`` ahead of the update; an unmatched
+          flagged row still inserts, unless ``insert_unmatched_deletes``
+          is False (the CDC apply's rule: a delete for a key the table
+          never had is a no-op);
+        - ``not_matched_by_source_delete``: ``WHEN NOT MATCHED BY SOURCE
+          [AND not_matched_by_source_condition] THEN DELETE``.
 
-        ``update_set`` (round 9): explicit WHEN MATCHED THEN UPDATE SET
-        assignments — target column → SQL expression over the ``t``
-        (target row) / ``s`` (source row) aliases; unlisted columns keep
-        their target values (see operators/changes.merge_upsert).
-        Copy-on-write only: the merge-on-read form appends
-        source-derived rows without reading targets, which the default
-        source-wins semantics permit but a partial update cannot.
+        Pruning: only files whose key stats admit a source key are
+        candidates. Every other file provably holds no match, keeps its
+        path, and insert detection against the candidates alone is
+        exact. A NOT MATCHED BY SOURCE clause may touch any target row,
+        so it makes every file a candidate (a full-sync merge reads the
+        whole table, like Delta).
 
-        ``not_matched_by_source_delete=True`` (round 9 — Delta's
-        three-way merge, the full-sync shape): target rows whose keys
-        are ABSENT from the source delete, optionally gated by
-        ``not_matched_by_source_condition`` (a SQL expression over the
-        target row; NULL keeps the row). This branch makes every active
-        file a rewrite candidate BY DEFINITION — any target row may be
-        unmatched — so the stats-based candidate pruning is disabled
-        for it (a full-sync merge reads the full table, exactly like
-        Delta).
+        ``via="cow"`` rewrites the candidates: removes = candidates, adds
+        = the merged rows, one atomic commit under the copy-on-write
+        frozen-set guard; ``rows_written`` comes from the staged files'
+        harvested stats. ``via="dv"`` is merge-on-read: the same join over
+        the alive candidate rows gives the positions of updated and
+        deleted rows, which join the deletion vectors, and the
+        post-images and inserts append — a CDC trickle never rewrites
+        host files. It falls back to copy-on-write when the vectors would
+        exceed ``_DV_INLINE_CAP`` (the delete(via='dv') policy).
 
-        Clause mode (round 10 — the full multi-branch grammar):
-        ``matched_clauses`` is an ORDERED list of
-        ``{"action": "update"|"delete", "condition": sql|None,
-        "set": {col: sql}|None}`` clauses (``set=None`` = ``SET *``),
-        first-match-wins, conditions over the canonical ``t``/``s``
-        aliases; ``insert=False`` drops the INSERT branch and
-        ``insert_condition`` gates it; ``not_matched_by_source_clauses``
-        generalizes the r9 delete flag to ordered UPDATE/DELETE clauses
-        over the target row. Clause mode is mutually exclusive with the
-        legacy ``delete_condition``/``update_set``/
-        ``not_matched_by_source_delete`` params — see
-        operators/changes.merge_branches for the semantics and plan
-        shape.
-
-        Round 10: every form now works under ``via="dv"`` (merge-on-read)
-        too — explicit assignments and NOT MATCHED BY SOURCE clauses read
-        the affected target rows (candidates only, stats-pruned, unless
-        an NMBS clause forces the full scan by definition), mask their
-        positions, and append the rewritten rows — a CDC trickle with
-        partial updates never rewrites host files. Same cap-and-fallback
-        policy as delete(via='dv')."""
-        from pyspark.sql import functions as F
-
-        from ..operators.changes import merge_branches, merge_upsert
-
+        ``schema_evolution=True`` (Delta's autoMerge): source columns
+        absent from the table extend it as nullable. ``txn`` is write()'s
+        idempotent-writer token: a merge at or below the app's high-water
+        mark commits nothing. ``source`` may carry extra columns; shared
+        columns must be type-compatible."""
         clause_mode = (
             matched_clauses is not None
             or not_matched_by_source_clauses is not None
@@ -4433,160 +4435,90 @@ class TableLog:
                 "not_matched_by_source_* parameters — express everything "
                 "as clauses"
             )
-        snap0 = self.snapshot() if self.exists() else None
-        gen0 = snap0.generated if snap0 else {}
-        # CDF sidecar gate (round 11): with delta.enableChangeDataFeed
-        # on, CoW merges write their exact change rows — requires clause
-        # form (the legacy source-wins path has no branch split), so
-        # legacy calls translate below; identity columns opt the commit
-        # out (the sidecar would re-allocate ids independently of the
-        # staged data — two evaluations of a nondeterministic expr)
-        cdf0 = (
-            snap0 is not None
-            and self._cdf_enabled(snap0)
-            and not any("identity" in s for s in gen0.values())
-        )
-        if gen0 or cdf0:
-            # generated columns (round 11): clauses may never assign
-            # them — the engine computes/allocates. Checked across every
-            # clause family in one place, before any work runs.
-            targets: set[str] = set(update_set or {})
-            for cl in (
-                (matched_clauses or [])
-                + (not_matched_by_source_clauses or [])
-                + (not_matched_clauses or [])
-            ):
-                targets |= set(cl.get("set") or {})
-            self._refuse_generated_targets(gen0, targets, "MERGE clause")
-            if not clause_mode:
-                # legacy source-wins SET * would take every column from
-                # the source — losing target identity values and
-                # requiring the source to carry generated columns.
-                # Translate to clause form (identical semantics — the
-                # same translation the dv path uses) so the clause
-                # machinery's keep-rules apply.
-                source, matched_clauses, insert_condition = (
-                    _translate_legacy_merge(
-                        source,
-                        delete_condition,
-                        insert_unmatched_deletes,
-                        update_set,
-                    )
-                )
-                if not_matched_by_source_delete:
-                    not_matched_by_source_clauses = [
-                        {
-                            "action": "delete",
-                            "condition": not_matched_by_source_condition,
-                        }
-                    ]
-                delete_condition = None
-                update_set = None
-                not_matched_by_source_delete = False
-                not_matched_by_source_condition = None
-                clause_mode = True
-        nmbs_any = not_matched_by_source_delete or bool(
-            not_matched_by_source_clauses
-        )
-        if via == "dv":
-            if (
-                clause_mode
-                or update_set is not None
-                or nmbs_any
-                or schema_evolution
-                or gen0
-            ):
-                # the general merge-on-read path: reads affected target
-                # rows, masks positions, appends rewritten rows
-                return self._merge_dv_general(
-                    source,
-                    keys,
-                    clause_mode=clause_mode,
-                    delete_condition=delete_condition,
-                    insert_unmatched_deletes=insert_unmatched_deletes,
-                    update_set=update_set,
-                    matched_clauses=matched_clauses,
-                    insert=insert,
-                    insert_condition=insert_condition,
-                    nm_clauses=not_matched_clauses,
-                    nmbs_clauses=not_matched_by_source_clauses,
-                    nmbs_delete=not_matched_by_source_delete,
-                    nmbs_condition=not_matched_by_source_condition,
-                    schema_evolution=schema_evolution,
-                    max_retries=max_retries,
-                    txn=txn,
-                )
-            return self._merge_dv(
-                source,
-                keys,
-                delete_condition,
-                max_retries,
-                txn,
-                insert_unmatched_deletes,
-            )
-        if via != "cow":
+        if via not in ("cow", "dv"):
             raise ValueError(f"via must be 'cow' or 'dv', got {via!r}")
+        # schema evolution reads the caller's columns, never the flag
+        # column the translation adds
+        evolve = source.schema if schema_evolution else None
+        if not clause_mode:
+            (
+                source,
+                matched_clauses,
+                insert_condition,
+                not_matched_by_source_clauses,
+            ) = _translate_legacy_merge(
+                source,
+                delete_condition,
+                insert_unmatched_deletes,
+                update_set,
+                not_matched_by_source_delete,
+                not_matched_by_source_condition,
+            )
+        clauses = {
+            "matched": matched_clauses or [],
+            "insert": insert,
+            "insert_condition": insert_condition,
+            "not_matched": not_matched_clauses,
+            "not_matched_by_source": not_matched_by_source_clauses or [],
+        }
+        assigned = {
+            c
+            for cl in clauses["matched"]
+            + clauses["not_matched_by_source"]
+            + (not_matched_clauses or [])
+            for c in cl.get("set") or {}
+        }
+        if assigned and self.exists():
+            # generated columns: no clause may assign them (the engine
+            # computes/allocates them) — checked before any work runs
+            self._refuse_generated_targets(
+                self.snapshot().generated, assigned, "MERGE clause"
+            )
+        body = self._merge_dv if via == "dv" else self._merge_cow
+        return body(source, keys, clauses, evolve, max_retries, txn)
 
-        if txn is not None:
-            # the write() idempotent-writer token, for streaming CDC
-            # apply: a replayed microbatch merge at or below the app's
-            # high-water mark commits nothing
-            seen = self.last_txn_version(txn[0])
-            if seen is not None and txn[1] <= seen:
-                v = self.versions()[-1]
-                return {
-                    "version": v,
-                    "files_rewritten": 0,
-                    "files_skipped": len(self.snapshot().files),
-                    "rows_written": 0,
-                }
+    def _replayed(self, txn: tuple[str, int] | None) -> dict | None:
+        """The no-op result of a merge whose ``txn`` token is at or below
+        its app's high-water mark, else None. Checked on every attempt:
+        a replayed microbatch commits nothing, and a lost race may have
+        been lost to our own replayed twin (same app_id), which must not
+        apply the same logical transaction twice."""
+        if txn is None:
+            return None
+        seen = self.last_txn_version(txn[0])
+        if seen is None or txn[1] > seen:
+            return None
+        return _merge_noop(self.snapshot())
+
+    def _merge_cow(
+        self,
+        source: DataFrame,
+        keys: list[str],
+        clauses: dict,
+        evolve: StructType | None,
+        max_retries: int,
+        txn: tuple[str, int] | None,
+        dup_checked: bool = False,
+    ) -> dict:
+        """Copy-on-write MERGE (see :meth:`merge`): the candidate files
+        are replaced by merge_branches' output over them in one commit.
+        ``dup_checked``: the cardinality probe already ran."""
+        from ..operators.changes import merge_branches
 
         for _attempt in range(max_retries):
+            replayed = self._replayed(txn)
+            if replayed is not None:
+                return replayed
             base = self.snapshot()
-            # schema evolution (Delta's autoMerge for MERGE): source
-            # columns absent from the table extend the schema as
-            # nullable — old files read them as NULL, type conflicts on
-            # shared columns raise (same _merge_schemas contract as the
-            # schema-evolving append). Computed per attempt so a
-            # concurrent schema change retries against fresh state.
-            eff_schema_json = base.schema_json
-            eff_schema = base.schema
-            if schema_evolution:
-                eff_schema_json = _merge_schemas(
-                    base.schema_json, source.schema.json()
-                )
-                if eff_schema_json != base.schema_json:
-                    eff_schema = StructType.fromJson(
-                        json.loads(eff_schema_json)
-                    )
-            if _attempt and txn is not None:
-                # mirror write(): a lost race may have been lost to OUR
-                # OWN replayed twin (same app_id) — re-check the
-                # high-water mark before re-applying the same logical
-                # transaction, or a replayed microbatch merge racing its
-                # twin could apply twice
-                seen = self.last_txn_version(txn[0])
-                if seen is not None and txn[1] <= seen:
-                    return {
-                        "version": self.versions()[-1],
-                        "files_rewritten": 0,
-                        "files_skipped": len(base.files),
-                        "rows_written": 0,
-                    }
-            # full-sync semantics (NMBS): EVERY file may hold unmatched
-            # target rows — no pruning possible, all files rewrite
+            # computed per attempt so a concurrent schema change retries
+            # against fresh state
+            eff_schema_json, eff_schema = _evolved_schema(base, evolve)
             cand, pfilters, repeats = self._merge_candidates(
-                base, source, keys, prune=not nmbs_any
+                base, source, keys, prune=not clauses["not_matched_by_source"]
             )
             if cand is None:
                 # empty source: MERGE is a no-op
-                return {
-                    "version": base.version,
-                    "files_rewritten": 0,
-                    "files_skipped": len(base.files),
-                    "rows_written": 0,
-                }
-            check_dups = repeats and not _skip_dup_check
+                return _merge_noop(base)
             tgt = self._read_file_metas(
                 list(cand.values()),
                 base.schema,
@@ -4598,52 +4530,24 @@ class TableLog:
                     tgt = tgt.withColumn(
                         fld.name, F.lit(None).cast(fld.dataType)
                     )
-            want_cdc = (
-                clause_mode
-                and self._cdf_enabled(base)
-                and not any(
-                    "identity" in s for s in base.generated.values()
-                )
+            # CDF sidecar: with delta.enableChangeDataFeed on, the commit
+            # carries its exact change rows; identity columns opt out (the
+            # sidecar would re-allocate ids independently of the staged
+            # data — two evaluations of a nondeterministic expr)
+            want_cdc = self._cdf_enabled(base) and not any(
+                "identity" in s for s in base.generated.values()
             )
-            changes = None
-            if clause_mode:
-                res_mb = merge_branches(
-                    tgt,
-                    source,
-                    keys,
-                    matched=matched_clauses,
-                    insert=insert,
-                    insert_condition=insert_condition,
-                    not_matched=not_matched_clauses,
-                    not_matched_by_source=not_matched_by_source_clauses,
-                    check_cardinality=check_dups,
-                    defaults=base.defaults,
-                    generated_cols=frozenset(base.generated),
-                    with_changes=want_cdc,
-                )
-                merged = res_mb[0] if want_cdc else res_mb
-                if want_cdc:
-                    changes = res_mb[1]
-            else:
-                merged = merge_upsert(
-                    tgt,
-                    source,
-                    keys,
-                    delete_condition=(
-                        F.expr(delete_condition)
-                        if delete_condition is not None
-                        else None
-                    ),
-                    insert_unmatched_deletes=insert_unmatched_deletes,
-                    update_set=update_set,
-                    not_matched_by_source_delete=not_matched_by_source_delete,
-                    not_matched_by_source_condition=(
-                        F.expr(not_matched_by_source_condition)
-                        if not_matched_by_source_condition is not None
-                        else None
-                    ),
-                    check_cardinality=check_dups,
-                )
+            res = merge_branches(
+                tgt,
+                source,
+                keys,
+                **clauses,
+                check_cardinality=repeats and not dup_checked,
+                defaults=base.defaults,
+                generated_cols=frozenset(base.generated),
+                with_changes=want_cdc,
+            )
+            merged, changes = res if want_cdc else (res, None)
             if base.generated:
                 # matched rows kept identity values (keep_cols inside
                 # merge_branches), inserts carry NULL — recompute
@@ -4741,200 +4645,21 @@ class TableLog:
         self,
         source: DataFrame,
         keys: list[str],
-        delete_condition: str | None,
+        clauses: dict,
+        evolve: StructType | None,
         max_retries: int,
         txn: tuple[str, int] | None,
-        insert_unmatched_deletes: bool,
     ) -> dict:
-        def _noop(version: int, n_files: int) -> dict:
-            return {
-                "version": version,
-                "files_rewritten": 0,
-                "files_skipped": n_files,
-                "rows_written": 0,
-            }
-
-        if txn is not None:
-            seen = self.last_txn_version(txn[0])
-            if seen is not None and txn[1] <= seen:
-                return _noop(self.versions()[-1], len(self.snapshot().files))
-        for _attempt in range(max_retries):
-            base = self.snapshot()
-            if _attempt and txn is not None:
-                seen = self.last_txn_version(txn[0])
-                if seen is not None and txn[1] <= seen:
-                    return _noop(self.versions()[-1], len(base.files))
-            cand, _, _ = self._merge_candidates(base, source, keys)
-            if cand is None:
-                return _noop(base.version, len(base.files))
-            skipped = len(base.files) - len(cand)
-            # positions of ALIVE matched target rows — the rows the merge
-            # updates or (delete branch) removes. The join carries the
-            # source's delete flag per key (round 11) so the commit can
-            # record which masked rows are UPDATE pre-images
-            # (``dv_update``, Delta CDF parity) — same one-scan cap
-            # discipline as _dv_positions_join.
-            scan = self._scan_with_positions(cand, base)
-            if delete_condition is not None:
-                flagged = (
-                    source.select(
-                        *keys,
-                        F.coalesce(
-                            F.expr(delete_condition).cast("boolean"),
-                            F.lit(False),
-                        ).alias("__del"),
-                    )
-                    .groupBy(*keys)
-                    .agg(F.bool_or("__del").alias("__del"))
-                )
-            else:
-                flagged = source.select(*keys).distinct().withColumn(
-                    "__del", F.lit(False)
-                )
-            mrows = (
-                scan.join(flagged, keys, "inner")
-                .select("__dv_file", "__dv_pos", "__del")
-                .limit(self._DV_INLINE_CAP + 1)
-                .collect()
-            )
-            truncated = len(mrows) > self._DV_INLINE_CAP
-            base_by_name = {os.path.basename(p): p for p in cand}
-            hits, upd_hits = {}, {}
-            for r in mrows:
-                p = base_by_name[r["__dv_file"]]
-                hits.setdefault(p, []).append(int(r["__dv_pos"]))
-                if not r["__del"]:
-                    upd_hits.setdefault(p, []).append(int(r["__dv_pos"]))
-            hits = {p: sorted(x) for p, x in hits.items()}
-            upd_hits = {p: sorted(x) for p, x in upd_hits.items()}
-            n_hits = sum(len(v) for v in hits.values())
-            if truncated or (
-                n_hits + sum(len(v) for v in base.dvs.values())
-                > self._DV_INLINE_CAP
-            ):
-                return self.merge(
-                    source,
-                    keys,
-                    delete_condition=delete_condition,
-                    max_retries=max_retries,
-                    txn=txn,
-                    insert_unmatched_deletes=insert_unmatched_deletes,
-                )
-            # appended rows: merge_upsert's source-wins rule restricted to
-            # the source side — matched rows take the source's values,
-            # unmatched insert; the delete branch follows SQL MERGE (a
-            # matched delete row appends nothing; an unmatched one falls
-            # through to INSERT unless insert_unmatched_deletes=False).
-            # The membership probe runs against the ALIVE candidate rows,
-            # exact for the same stats-pruning reason as CoW merge.
-            table_cols = [f.name for f in base.schema.fields]
-            alive_keys = scan.select(*keys)
-            src_eff = source
-            if delete_condition is not None:
-                cond = F.coalesce(F.expr(delete_condition), F.lit(False))
-                if insert_unmatched_deletes:
-                    unmatched_del = source.filter(cond).join(
-                        alive_keys, keys, "left_anti"
-                    )
-                    src_eff = source.filter(~cond).unionByName(unmatched_del)
-                else:
-                    src_eff = source.filter(~cond)
-            # post-image rows (matched keys) stage separately from
-            # inserts so the change feed tells them apart — key-column-
-            # pruned probes against the candidate scan, trickle-sized
-            adds: list[dict] = []
-            upd_rows = (
-                src_eff.join(alive_keys, keys, "left_semi")
-                .select(*table_cols)
-            )
-            ins_rows = (
-                src_eff.join(alive_keys, keys, "left_anti")
-                .select(*table_cols)
-            )
-            self._enforce_constraints(
-                src_eff.select(*table_cols), base.constraints, "merge"
-            )
-            for rows_df, tag in ((upd_rows, "update_post"), (ins_rows, None)):
-                staged = self._stage_for(base, rows_df)
-                for a in staged:
-                    if tag:
-                        a["cdc"] = tag
-                    adds.append(a)
-            dvs = {p: list(v) for p, v in base.dvs.items()}
-            for p, pos in hits.items():
-                dvs[p] = sorted(set(dvs.get(p, [])) | set(pos))
-            cur = self.snapshot()
-            if cur.version != base.version:
-                # positions, membership probe, and staged rows are only
-                # valid against the exact base state — retry from fresh
-                continue
-            version = base.version + 1
-            payload = {
-                "version": version,
-                "snapshot_id": _snapshot_id(version, adds, [], base),
-                "parent_id": base.snapshot_id,
-                "operation": "merge_dv",
-                "schema": base.schema_json,
-                "partition_by": list(base.partition_by or []),
-                "dvs": dvs,
-                "adds": adds,
-                "removes": [],
-                **({"txn": [txn[0], txn[1]]} if txn is not None else {}),
-                **({"dv_update": upd_hits} if upd_hits else {}),
-            }
-            try:
-                self._commit(version, payload)
-            except ConcurrentCommitError:
-                continue
-            self._maybe_checkpoint(version)
-            return {
-                "version": version,
-                "files_rewritten": 0,
-                "files_skipped": skipped,
-                "rows_written": sum(a.get("rows", 0) for a in adds),
-            }
-        raise ConcurrentCommitError(
-            f"lost {max_retries} commit races on {self.root}"
-        )
-
-    def _merge_dv_general(
-        self,
-        source: DataFrame,
-        keys: list[str],
-        *,
-        clause_mode: bool = False,
-        delete_condition: str | None = None,
-        insert_unmatched_deletes: bool = True,
-        update_set: dict[str, str] | None = None,
-        matched_clauses: list[dict] | None = None,
-        insert: bool = True,
-        insert_condition: str | None = None,
-        nm_clauses: list[dict] | None = None,
-        nmbs_clauses: list[dict] | None = None,
-        nmbs_delete: bool = False,
-        nmbs_condition: str | None = None,
-        schema_evolution: bool = False,
-        max_retries: int = 3,
-        txn: tuple[str, int] | None = None,
-    ) -> dict:
-        """The GENERAL merge-on-read MERGE (round 10): any mix of
-        conditional/partial WHEN MATCHED clauses, conditional INSERT, and
-        NOT MATCHED BY SOURCE clauses commits as deletion-vector masks
-        over the affected target rows plus one appended file of rewritten
-        rows — a CDC trickle with explicit assignments never rewrites
-        host files. Legacy parameters (``update_set`` /
-        ``delete_condition`` / ``not_matched_by_source_delete``)
-        translate to clause form here, so the copy-on-write and
+        """Merge-on-read MERGE (see :meth:`merge`): any mix of clauses
+        commits as deletion-vector masks over the affected target rows
+        plus appended files of rewritten rows, so the copy-on-write and
         merge-on-read answers stay equality-identical.
 
-        Candidate pruning is the CoW merge's stats argument verbatim:
-        non-candidate files provably hold no source key, so their rows
-        are untouched and insert detection against candidates alone is
-        exact — EXCEPT when an NMBS clause exists, which touches
-        unmatched rows anywhere (full scan by definition, like Delta).
-        Cap-and-fallback: if the masked-position count would exceed
-        ``_DV_INLINE_CAP``, fall back to the equivalent copy-on-write
-        merge with the ORIGINAL parameters."""
+        Candidate pruning is the copy-on-write argument verbatim
+        (non-candidate files hold no source key), except that a NOT
+        MATCHED BY SOURCE clause touches unmatched rows anywhere (full
+        scan). Cap-and-fallback: if the masked-position count would
+        exceed ``_DV_INLINE_CAP``, the same clauses run copy-on-write."""
         from ..operators.changes import (
             _insert_clauses,
             _MergeJoin,
@@ -4942,94 +4667,25 @@ class TableLog:
             check_merge_cardinality,
         )
 
+        mc, nc = clauses["matched"], clauses["not_matched_by_source"]
         dup_checked = False
-
-        def _cow_fallback() -> dict:
-            return self.merge(
-                source,
-                keys,
-                delete_condition=delete_condition,
-                max_retries=max_retries,
-                txn=txn,
-                insert_unmatched_deletes=insert_unmatched_deletes,
-                update_set=update_set,
-                not_matched_by_source_delete=nmbs_delete,
-                not_matched_by_source_condition=nmbs_condition,
-                matched_clauses=matched_clauses,
-                insert=insert,
-                insert_condition=insert_condition,
-                not_matched_clauses=nm_clauses,
-                not_matched_by_source_clauses=nmbs_clauses,
-                schema_evolution=schema_evolution,
-                via="cow",
-                # the cardinality probe ran here already (advice r10:
-                # the cap-fallback used to re-run it twice more)
-                _skip_dup_check=dup_checked,
-            )
-
-        def _noop(version: int, n_files: int) -> dict:
-            return {
-                "version": version,
-                "files_rewritten": 0,
-                "files_skipped": n_files,
-                "rows_written": 0,
-            }
-
-        # ---- translate the legacy parameter forms into clause form ----
-        # ONLY legacy calls translate: in clause mode an absent matched
-        # list means NO matched action (the target row is untouched),
-        # not the legacy source-wins SET *.
-        src = source
-        mc = matched_clauses
-        ic = insert_condition
-        do_insert = insert
-        if clause_mode:
-            mc = mc or []
-        elif mc is None:
-            src, mc, tic = _translate_legacy_merge(
-                source,
-                delete_condition,
-                insert_unmatched_deletes,
-                update_set,
-            )
-            ic = tic if tic is not None else ic
-        nc = nmbs_clauses
-        if nc is None and nmbs_delete:
-            nc = [{"action": "delete", "condition": nmbs_condition}]
-        nc = nc or []
-
-        if txn is not None:
-            seen = self.last_txn_version(txn[0])
-            if seen is not None and txn[1] <= seen:
-                return _noop(self.versions()[-1], len(self.snapshot().files))
-
         for _attempt in range(max_retries):
+            replayed = self._replayed(txn)
+            if replayed is not None:
+                return replayed
             base = self.snapshot()
-            if _attempt and txn is not None:
-                seen = self.last_txn_version(txn[0])
-                if seen is not None and txn[1] <= seen:
-                    return _noop(self.versions()[-1], len(base.files))
-            eff_schema_json = base.schema_json
-            eff_schema = base.schema
-            if schema_evolution:
-                eff_schema_json = _merge_schemas(
-                    base.schema_json, source.schema.json()
-                )
-                if eff_schema_json != base.schema_json:
-                    eff_schema = StructType.fromJson(
-                        json.loads(eff_schema_json)
-                    )
+            eff_schema_json, eff_schema = _evolved_schema(base, evolve)
             table_cols = [f.name for f in eff_schema.fields]
             _validate_clauses(mc, table_cols, keys, "MATCHED")
             _validate_clauses(nc, table_cols, keys, "NOT MATCHED BY SOURCE")
             # NMBS touches unmatched rows anywhere: no pruning
             cand, _, repeats = self._merge_candidates(
-                base, src, keys, prune=not nc
+                base, source, keys, prune=not nc
             )
             if cand is None:
                 # empty source and no NMBS clause: nothing matches,
                 # nothing inserts
-                return _noop(base.version, len(base.files))
+                return _merge_noop(base)
             skipped = len(base.files) - len(cand)
             scan = self._scan_with_positions(cand, base)
             if mc and repeats and not dup_checked:
@@ -5037,7 +4693,7 @@ class TableLog:
                 # (candidates are exhaustive for source-key matches by
                 # the pruning argument above); the flag keeps the
                 # cap-fallback from re-running the probe in CoW
-                check_merge_cardinality(scan, src, keys)
+                check_merge_cardinality(scan, source, keys)
                 dup_checked = True
             for fld in eff_schema.fields:
                 if fld.name not in scan.columns:
@@ -5048,9 +4704,14 @@ class TableLog:
             # positions to mask, the update post-images, the inserts.
             # Alive candidate keys are exact for insert detection (the
             # pruning argument above).
-            nm = _insert_clauses(do_insert, ic, nm_clauses, table_cols)
+            nm = _insert_clauses(
+                clauses["insert"],
+                clauses["insert_condition"],
+                clauses["not_matched"],
+                table_cols,
+            )
             j = _MergeJoin(
-                scan, src, keys, mc, nc, nm, table_cols, eff_schema,
+                scan, source, keys, mc, nc, nm, table_cols, eff_schema,
                 base.defaults, frozenset(base.generated),
             )
             # the __upd flag rides the position collect so the commit can
@@ -5077,7 +4738,10 @@ class TableLog:
                 n_hits + sum(len(v) for v in base.dvs.values())
                 > self._DV_INLINE_CAP
             ):
-                return _cow_fallback()
+                return self._merge_cow(
+                    source, keys, clauses, evolve, max_retries, txn,
+                    dup_checked,
+                )
 
             def _finish(rows_df: DataFrame) -> list[dict]:
                 if base.generated:
@@ -5208,41 +4872,14 @@ class TableLog:
         if via != "cow":
             raise ValueError(f"via must be 'cow' or 'dv', got {via!r}")
 
-        if txn is not None:
-            seen = self.last_txn_version(txn[0])
-            if seen is not None and txn[1] <= seen:
-                v = self.versions()[-1]
-                return {
-                    "version": v,
-                    "files_rewritten": 0,
-                    "files_skipped": len(self.snapshot().files),
-                    "rows_written": 0,
-                }
-
         for _attempt in range(max_retries):
+            replayed = self._replayed(txn)
+            if replayed is not None:
+                return replayed
             base = self.snapshot()
-            if _attempt and txn is not None:
-                # mirror write(): a lost race may have been lost to OUR
-                # OWN replayed twin (same app_id) — re-check the
-                # high-water mark before re-applying the same logical
-                # transaction, or a replayed microbatch merge racing its
-                # twin could apply twice
-                seen = self.last_txn_version(txn[0])
-                if seen is not None and txn[1] <= seen:
-                    return {
-                        "version": self.versions()[-1],
-                        "files_rewritten": 0,
-                        "files_skipped": len(base.files),
-                        "rows_written": 0,
-                    }
             cand, pfilters, _ = self._merge_candidates(base, source, keys)
             if cand is None:
-                return {
-                    "version": base.version,
-                    "files_rewritten": 0,
-                    "files_skipped": len(base.files),
-                    "rows_written": 0,
-                }
+                return _merge_noop(base)
             tgt = self._read_file_metas(
                 list(cand.values()),
                 base.schema,
@@ -5333,24 +4970,11 @@ class TableLog:
     ) -> dict:
         from pyspark.sql import Window
 
-        def _noop(version: int, n_files: int) -> dict:
-            return {
-                "version": version,
-                "files_rewritten": 0,
-                "files_skipped": n_files,
-                "rows_written": 0,
-            }
-
-        if txn is not None:
-            seen = self.last_txn_version(txn[0])
-            if seen is not None and txn[1] <= seen:
-                return _noop(self.versions()[-1], len(self.snapshot().files))
         for _attempt in range(max_retries):
+            replayed = self._replayed(txn)
+            if replayed is not None:
+                return replayed
             base = self.snapshot()
-            if _attempt and txn is not None:
-                seen = self.last_txn_version(txn[0])
-                if seen is not None and txn[1] <= seen:
-                    return _noop(self.versions()[-1], len(base.files))
             table_cols = [f.name for f in base.schema.fields]
             if delete_col is not None and delete_col not in table_cols:
                 raise ValueError(
@@ -5360,7 +4984,7 @@ class TableLog:
                 )
             cand, _, _ = self._merge_candidates(base, source, keys)
             if cand is None:
-                return _noop(base.version, len(base.files))
+                return _merge_noop(base)
             skipped = len(base.files) - len(cand)
             # one windowed pass over (alive candidate rows WITH positions)
             # ∪ (source records with NULL positions): per key, the same
@@ -5470,44 +5094,22 @@ class TableLog:
             return out.withColumn(
                 "__dv_file", F.lit(None).cast("string")
             ).withColumn("__dv_pos", F.lit(None).cast("long"))
-        phys = _physical_schema(base.schema, base.column_mapping or {})
-        groups: dict[tuple, list] = {}
-        for m in cand.values():
-            key = tuple(sorted((m.get("partition_values") or {}).keys()))
-            groups.setdefault(key, []).append(m)
-        parts = []
-        for key, ms in groups.items():
-            paths = [os.path.join(self.data_dir, m["path"]) for m in ms]
-            reader = self.spark.read.schema(phys)
-            if key:
-                reader = reader.option("basePath", self.data_dir)
-            parts.append(
-                reader.parquet(*paths).select(
-                    *phys.names,
-                    F.element_at(
-                        F.split(F.col("_metadata.file_path"), "/"), -1
-                    ).alias("__dv_file"),
-                    F.col("_metadata.row_index").alias("__dv_pos"),
-                )
-            )
-        scan = parts[0]
-        for p in parts[1:]:
-            scan = scan.unionByName(p)
+        scan = self._grouped_scan(
+            list(cand.values()),
+            base.schema,
+            base.column_mapping,
+            positions=True,
+        )
         if base.column_mapping:
             scan = _rename_columns(
                 scan, {p: l for l, p in base.column_mapping.items()}
             )
-        if base.dvs:
-            dead = self.spark.createDataFrame(
-                [
-                    (os.path.basename(p), int(pos))
-                    for p, v in base.dvs.items()
-                    for pos in v
-                ],
-                "__dv_file string, __dv_pos long",
-            )
+        dead = {os.path.basename(p): v for p, v in base.dvs.items() if v}
+        if dead:
             scan = scan.join(
-                F.broadcast(dead), ["__dv_file", "__dv_pos"], "left_anti"
+                F.broadcast(self._positions_frame(dead)),
+                ["__dv_file", "__dv_pos"],
+                "left_anti",
             )
         return scan
 

@@ -146,23 +146,75 @@ def test_matched_duplicate_source_keys_still_raise(spark):
         ).collect()
 
 
+# the keyword form is shorthand for the SET * clause: same answers
+_SET_STAR = {
+    "clauses": {
+        "matched_clauses": [
+            {"action": "update", "condition": None, "set": None}
+        ]
+    },
+    "legacy": {},
+}
+
+
 @pytest.mark.parametrize("via", ["cow", "dv"])
 def test_txlog_merge_unmatched_duplicates_insert(spark, tmp_path, via):
-    log = TableLog(spark, str(tmp_path / f"t_{via}"))
-    log.write(spark.createDataFrame(TARGET, T_SCHEMA))
     src = spark.createDataFrame(
         [(9, "x", 90), (9, "y", 91), (1, "u", 100)], T_SCHEMA
     )
-    log.merge(
-        src,
-        ["id"],
-        matched_clauses=[
-            {"action": "update", "condition": None, "set": None}
-        ],
-        via=via,
+    for form, kwargs in _SET_STAR.items():
+        log = TableLog(spark, str(tmp_path / f"t_{via}_{form}"))
+        log.write(spark.createDataFrame(TARGET, T_SCHEMA))
+        log.merge(src, ["id"], via=via, **kwargs)
+        rows = {(r.id, r.name) for r in log.read().collect()}
+        assert rows == {(1, "u"), (2, "b"), (9, "x"), (9, "y")}, form
+
+
+@pytest.mark.parametrize("via", ["cow", "dv"])
+def test_txlog_merge_matched_duplicates_raise(spark, tmp_path, via):
+    """Two source rows matching one target row violate the cardinality
+    rule in either form: the keyword (source-wins) form used to write
+    both rows."""
+    src = spark.createDataFrame(
+        [(1, "x", 11), (1, "y", 12), (2, "b", 20)], T_SCHEMA
     )
-    rows = {(r.id, r.name) for r in log.read().collect()}
-    assert rows == {(1, "u"), (2, "b"), (9, "x"), (9, "y")}
+    for form, kwargs in _SET_STAR.items():
+        log = TableLog(spark, str(tmp_path / f"t_{via}_{form}"))
+        log.write(spark.createDataFrame(TARGET, T_SCHEMA))
+        v0 = log.versions()[-1]
+        with pytest.raises(ValueError, match="cardinality"):
+            log.merge(src, ["id"], via=via, **kwargs)
+        assert log.versions()[-1] == v0, form
+        rows = sorted(tuple(r) for r in log.read().collect())
+        assert rows == TARGET, form
+
+
+@pytest.mark.parametrize("cdf", [False, True])
+@pytest.mark.parametrize("via", ["cow", "dv"])
+def test_legacy_delete_merge_evolution_adds_no_flag_column(
+    spark, tmp_path, via, cdf
+):
+    """A keyword-form delete merge evaluates its condition into an
+    internal flag column; schema evolution reads the caller's columns,
+    so only the source's new column reaches the table."""
+    log = TableLog(spark, str(tmp_path / f"t_{via}_{cdf}"))
+    log.write(spark.createDataFrame(TARGET, T_SCHEMA))
+    if cdf:
+        log.set_properties({"delta.enableChangeDataFeed": "true"})
+    src = spark.createDataFrame(
+        [(1, "u", 100, False, "n1"), (2, "b", 20, True, "n2"),
+         (3, "c", 30, False, "n3")],
+        T_SCHEMA + ", del boolean, note string",
+    )
+    log.merge(
+        src, ["id"], delete_condition="del", schema_evolution=True, via=via
+    )
+    df = log.read()
+    assert df.columns == ["id", "name", "val", "del", "note"]
+    assert sorted(tuple(r) for r in df.collect()) == [
+        (1, "u", 100, False, "n1"),
+        (3, "c", 30, False, "n3"),
+    ]
 
 
 def test_check_merge_cardinality_no_dups_never_probes_target(spark):

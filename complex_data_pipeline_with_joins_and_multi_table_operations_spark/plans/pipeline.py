@@ -31,154 +31,6 @@ from ..sources import Catalog
 from ..sources.io import local_frame
 
 
-
-def _where_lit(tok: str):
-    import re as _re
-    from datetime import date as _date
-
-    tok = tok.strip()
-    m = _re.match(r"^DATE\s*'([^']+)'$", tok, _re.IGNORECASE)
-    if m:
-        return _date.fromisoformat(m.group(1))
-    if _re.match(r"^'.*'$", tok, _re.DOTALL):
-        return tok[1:-1].replace("''", "'")
-    if tok.upper() in ("TRUE", "FALSE"):
-        return tok.upper() == "TRUE"
-    if _re.match(r"^-?\d+$", tok):
-        return int(tok)
-    if _re.match(r"^-?\d*\.\d+$", tok):
-        return float(tok)
-    if _re.match(r"^\w+\s*\(", tok):
-        return _fold_date_fn(tok)
-    raise ValueError(
-        f"unsupported literal {tok!r} in WHERE (number, 'string', "
-        "TRUE/FALSE, DATE 'yyyy-mm-dd', or a foldable date function — "
-        "current_date/current_timestamp/to_date/date_sub/date_add)"
-    )
-
-
-def _session_now():
-    """Wall-clock **in the session's timezone** — the zone Spark itself
-    evaluates ``current_date()``/``current_timestamp()`` in
-    (``spark.sql.session.timeZone``, round 11: the r10 fold used
-    driver-local time, which diverges for up to 24 h around midnight
-    when the session is configured to a different zone). Returns a
-    naive datetime representing session-zone wall time, matching how
-    Spark renders the values as literals. Region names resolve through
-    zoneinfo; ``GMT+8`` / ``+08:00`` style fixed offsets parse
-    directly; an unresolvable zone falls back to driver-local time
-    (the r10 behavior) rather than failing the statement."""
-    import re as _re
-    from datetime import datetime as _datetime
-    from datetime import timedelta as _td
-    from datetime import timezone as _tz
-
-    tz_name = None
-    try:
-        from pyspark.sql import SparkSession as _SS
-
-        spark = _SS.getActiveSession()
-        if spark is not None:
-            tz_name = spark.conf.get("spark.sql.session.timeZone")
-    except Exception:
-        tz_name = None
-    tzinfo = None
-    if tz_name:
-        m = _re.match(
-            r"^(?:GMT|UTC)?([+-])(\d{1,2})(?::?(\d{2}))?$", tz_name
-        )
-        if m:
-            sign = 1 if m.group(1) == "+" else -1
-            tzinfo = _tz(
-                sign
-                * _td(hours=int(m.group(2)), minutes=int(m.group(3) or 0))
-            )
-        elif tz_name.upper() in ("UTC", "GMT", "Z"):
-            tzinfo = _tz.utc
-        else:
-            try:
-                from zoneinfo import ZoneInfo as _ZI
-
-                tzinfo = _ZI(tz_name)
-            except Exception:
-                tzinfo = None
-    if tzinfo is not None:
-        return _datetime.now(_tz.utc).astimezone(tzinfo).replace(tzinfo=None)
-    return _datetime.now()
-
-
-def _fold_date_fn(tok: str):
-    """Round 10: DETERMINISTIC date functions in DML WHERE, constant-
-    folded driver-side into plain literals so the existing min/max/
-    Bloom file pruning keeps working on the folded value — the
-    retention-job shape ``DELETE WHERE ship_date <
-    date_sub(current_date(), 90)`` prunes exactly like a DATE literal.
-    Folding current_date()/current_timestamp() at parse time matches
-    Spark's semantics (both are fixed once per statement, evaluated in
-    the SESSION timezone — see ``_session_now``).
-    Non-deterministic functions refuse loudly."""
-    import re as _re
-    from datetime import date as _date
-    from datetime import datetime as _datetime
-    from datetime import timedelta as _td
-
-    tok = tok.strip()
-    m = _re.match(r"^current_date\s*\(\s*\)$", tok, _re.IGNORECASE)
-    if m:
-        return _session_now().date()
-    m = _re.match(
-        r"^(?:current_timestamp|now)\s*\(\s*\)$", tok, _re.IGNORECASE
-    )
-    if m:
-        return _session_now()
-    m = _re.match(r"^(rand|randn|random|uuid)\s*\(", tok, _re.IGNORECASE)
-    if m:
-        raise ValueError(
-            f"non-deterministic function in WHERE literal {tok!r} — a "
-            "row-level DML predicate must fold to a constant"
-        )
-    m = _re.match(
-        r"^to_date\s*\(\s*'([^']+)'\s*\)$", tok, _re.IGNORECASE
-    )
-    if m:
-        return _date.fromisoformat(m.group(1))
-    m = _re.match(
-        r"^(date_sub|date_add)\s*\((.+)\)$", tok, _re.IGNORECASE | _re.DOTALL
-    )
-    if m:
-        args = _split_in_list(m.group(2))
-        if len(args) != 2:
-            raise ValueError(
-                f"{m.group(1)} takes (date_expr, days), got {tok!r}"
-            )
-        base = _where_lit(args[0])  # literal or nested foldable fn
-        if isinstance(base, str):
-            base = _date.fromisoformat(base)  # Spark casts 'yyyy-mm-dd'
-        if isinstance(base, _datetime):
-            # Spark's date_sub/date_add cast a timestamp argument to
-            # DATE (session-zone day) before the arithmetic; a naive
-            # datetime here IS session-zone wall time, so truncation is
-            # exactly that cast (round 11 — datetime subclasses date,
-            # the bare isinstance check silently kept the time part)
-            base = base.date()
-        if not isinstance(base, _date):
-            raise ValueError(
-                f"{m.group(1)} needs a date first argument, got {base!r}"
-            )
-        days = _where_lit(args[1])
-        if not isinstance(days, int):
-            raise ValueError(
-                f"{m.group(1)} needs an integer day count, got {args[1]!r}"
-            )
-        sign = 1 if m.group(1).lower() == "date_add" else -1
-        return base + _td(days=sign * days)
-    raise ValueError(
-        f"cannot fold function {tok!r} in a WHERE literal; supported: "
-        "current_date(), current_timestamp(), to_date('yyyy-mm-dd'), "
-        "date_sub(d, n), date_add(d, n) — pre-compute anything richer"
-    )
-
-
 def _split_in_list(s: str) -> list[str]:
     """Split a comma-separated SQL fragment on TOP-LEVEL commas,
     respecting ''-escaped string literals (a quoted comma is part of
@@ -366,9 +218,8 @@ def _parse_props_body(body: str) -> dict[str, str]:
 
 def _outside_literal_spans(s: str) -> list[tuple[int, int]]:
     """(start, end) spans of ``s`` OUTSIDE ''-escaped string literals —
-    the structural scanner under the MERGE clause splitter and the alias
-    canonicalizer, so SQL keywords or alias-lookalikes inside a string
-    literal are never treated as syntax."""
+    the scanner under the alias canonicalizer, so an alias-lookalike
+    inside a string literal is never rewritten."""
     spans = []
     i, n, start = 0, len(s), 0
     while i < n:
@@ -390,44 +241,6 @@ def _outside_literal_spans(s: str) -> list[tuple[int, int]]:
             i += 1
     spans.append((start, n))
     return spans
-
-
-def _split_top_level_when(s: str) -> list[str]:
-    """Split on clause-starting WHEN keywords outside string literals:
-    segment 0 is the text before the first WHEN (the MERGE ON
-    expression), each further segment is one clause body (sans the WHEN
-    itself). Only ``WHEN MATCHED``/``WHEN NOT`` split, so a ``CASE WHEN
-    <expr>`` inside a condition or SET expression survives — unless the
-    CASE predicate itself starts with the token ``matched`` or ``not``,
-    which the clause parser then rejects loudly rather than silently
-    mis-scoping."""
-    import re as _re
-
-    cuts = []
-    for lo, hi in _outside_literal_spans(s):
-        for m in _re.finditer(
-            r"\bWHEN\b(?=\s+(?:MATCHED|NOT)\b)", s[lo:hi], _re.IGNORECASE
-        ):
-            cuts.append((lo + m.start(), lo + m.end()))
-    parts = []
-    prev = 0
-    for lo, hi in cuts:
-        parts.append(s[prev:lo].strip())
-        prev = hi
-    parts.append(s[prev:].strip())
-    return parts
-
-
-def _split_top_level_then(seg: str) -> tuple[str, str]:
-    """One MERGE clause body → (head, action) at its first THEN outside
-    string literals."""
-    import re as _re
-
-    for lo, hi in _outside_literal_spans(seg):
-        m = _re.search(r"\bTHEN\b", seg[lo:hi], _re.IGNORECASE)
-        if m:
-            return seg[: lo + m.start()], seg[lo + m.end():]
-    raise ValueError(f"MERGE clause 'WHEN {seg.strip()}' has no THEN")
 
 
 def _canon_merge_expr(
@@ -475,389 +288,310 @@ def _canon_merge_expr(
     return "".join(out).strip()
 
 
-def _parse_where_term(term: str) -> tuple:
-    """One WHERE leaf as a read()-style pruning filter tuple: ``col op
-    literal`` (op also ``!=``/``<>``), ``col BETWEEN a AND b``,
-    ``col [NOT] IN (…)``, ``col IS [NOT] NULL`` (round 9 — each a
-    first-class stats-prunable op, so an IN over a thousand ids never
-    explodes the DNF and IS NULL prunes on per-file null counts)."""
-    import re as _re
-
-    term = term.strip().rstrip(";").strip()
-    m = _re.match(r"^`?(\w+)`?\s+IS\s+NOT\s+NULL$", term, _re.IGNORECASE)
-    if m:
-        return (m.group(1), "notnull", None)
-    m = _re.match(r"^`?(\w+)`?\s+IS\s+NULL$", term, _re.IGNORECASE)
-    if m:
-        return (m.group(1), "isnull", None)
-    m = _re.match(
-        r"^`?(\w+)`?\s+(NOT\s+)?IN\s*\(\s*(.+?)\s*\)$",
-        term,
-        _re.IGNORECASE | _re.DOTALL,
-    )
-    if m:
-        items = _split_in_list(m.group(3))
-        if not items or any(not it for it in items):
-            raise ValueError(f"empty IN list in WHERE term {term!r}")
-        vals = tuple(_where_lit(it) for it in items)
-        return (m.group(1), "notin" if m.group(2) else "in", vals)
-    m = _re.match(
-        r"^`?(\w+)`?\s+BETWEEN\s+(.+?)\s+AND\s+(.+)$", term, _re.IGNORECASE
-    )
-    if m:
-        return (m.group(1), "between", (_where_lit(m.group(2)), _where_lit(m.group(3))))
-    m = _re.match(
-        r"^`?(\w+)`?\s*(!=|<>|==|=|<=|>=|<|>)\s*(.+)$", term, _re.DOTALL
-    )
-    if m:
-        op = m.group(2)
-        op = "==" if op in ("=", "==") else ("!=" if op in ("!=", "<>") else op)
-        return (m.group(1), op, _where_lit(m.group(3)))
-    raise ValueError(f"cannot parse WHERE term {term!r}")
+# -- SQL DML through Spark's own parser --------------------------------------
+#
+# Warehouse.sql hands DELETE, TRUNCATE, UPDATE, MERGE and INSERT to Spark's
+# parser and reads the unresolved logical plan it returns: the grammar,
+# quoting, clause-order rules and syntax errors are Spark's. Every parsed
+# node carries the span of statement text it came from, so a MERGE condition
+# or SET value reaches the engine as the statement's exact text.
 
 
-# sentinel for the explicit DEFAULT keyword in INSERT VALUES (round 10)
-_DEFAULT = object()
+def _parse_sql(spark: SparkSession, method: str, text: str):
+    """Spark's parser on ``text`` (``method`` is ``parsePlan`` or
+    ``parseExpression``); a syntax error raises ValueError with Spark's
+    message."""
+    from pyspark.errors import ParseException
+
+    parser = spark._jsparkSession.sessionState().sqlParser()
+    try:
+        return getattr(parser, method)(text)
+    except ParseException as e:
+        raise ValueError(str(e)) from e
 
 
-def _parse_values_rows(text: str) -> list[list]:
-    """INSERT … VALUES body: top-level parenthesized tuples (scanned
-    with ''-escaped string awareness), each split on commas and parsed
-    with the WHERE-literal grammar plus NULL and the DEFAULT keyword
-    (resolved to the column's declared default at bind time)."""
-    rows: list[list] = []
-    i, n = 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch == "(":
-            j, depth = i + 1, 1
-            while j < n and depth:
-                if text[j] == "'":
-                    k = j + 1
-                    while k < n:
-                        if text[k] == "'" and k + 1 < n and text[k + 1] == "'":
-                            k += 2
-                            continue
-                        if text[k] == "'":
-                            break
-                        k += 1
-                    if k >= n:
-                        raise ValueError("unterminated string in VALUES")
-                    j = k + 1
-                    continue
-                if text[j] == "(":
-                    depth += 1
-                elif text[j] == ")":
-                    depth -= 1
-                j += 1
-            if depth:
-                raise ValueError("unbalanced parentheses in VALUES")
-            body = text[i + 1 : j - 1]
-            rows.append(
-                [
-                    None
-                    if it.strip().upper() == "NULL"
-                    else _DEFAULT
-                    if it.strip().upper() == "DEFAULT"
-                    else _where_lit(it)
-                    for it in _split_in_list(body)
-                ]
-            )
-            i = j
-        elif ch in " ,\t\r\n":
-            i += 1
-        else:
-            raise ValueError(
-                f"cannot parse VALUES at {text[i : i + 20]!r}; expected "
-                "comma-separated parenthesized rows"
-            )
-    if not rows:
-        raise ValueError("empty VALUES list")
-    return rows
+def _cls(node) -> str:
+    return node.nodeName()  # the plan or expression class's simple name
 
 
-def _coerce_literal(v, dtype):
-    """Coerce a parsed SQL literal to the python type Spark's
-    createDataFrame verifier expects for ``dtype`` (an int literal into
-    a DOUBLE column, a 'yyyy-mm-dd' string into a DATE, …)."""
-    from datetime import date as _date
-    from datetime import datetime as _datetime
-    from decimal import Decimal as _Dec
+def _seq(s) -> list:
+    return [s.apply(i) for i in range(s.size())]
 
-    if v is None:
+
+def _text(sql: str, node) -> str:
+    """The exact text of ``sql`` that Spark parsed into ``node``. The
+    parser hands out TRUE and FALSE as shared constants whose position,
+    if any, is from whichever statement first made them; their SQL is
+    their text."""
+    if _cls(node) == "Literal":
+        text = node.sql()
+        if text in ("true", "false"):
+            return text
+    o = node.origin()
+    return sql[o.startIndex().get() : o.stopIndex().get() + 1]
+
+
+def _column(e) -> str | None:
+    """The name of a bare one-part column reference, else None."""
+    if _cls(e) != "UnresolvedAttribute":
         return None
-    s = dtype.simpleString()
-    if s in ("tinyint", "smallint", "int", "bigint"):
-        return int(v)
-    if s in ("float", "double"):
-        return float(v)
-    if s.startswith("decimal"):
-        return _Dec(str(v))
-    if s == "string":
-        return str(v)
-    if s == "boolean":
-        # only TRUE/FALSE literals (parsed to python bools) are valid:
-        # bool('false') is True, so a quoted string here would silently
-        # invert — parse the two spellings, refuse everything else
-        # (Spark's string→boolean cast accepts exactly these, case-
-        # insensitively; anything else is an error, not truthiness)
-        if isinstance(v, bool):
-            return v
-        if isinstance(v, str) and v.strip().lower() in ("true", "false"):
-            return v.strip().lower() == "true"
-        raise ValueError(
-            f"cannot coerce literal {v!r} to BOOLEAN; use TRUE/FALSE"
-        )
-    if s == "date":
-        return v if isinstance(v, _date) else _date.fromisoformat(str(v))
-    if s.startswith("timestamp"):
-        return (
-            v
-            if isinstance(v, _datetime)
-            else _datetime.fromisoformat(str(v))
-        )
-    return v
+    parts = _seq(e.nameParts())
+    return parts[0] if len(parts) == 1 else None
 
 
-# NOT over a leaf negates the op (tri-state-preserving: both sides of
-# each pair are null-unsafe, so a NULL input selects nothing either way)
-_NEG_OP = {
-    "==": "!=", "!=": "==", "<": ">=", "<=": ">", ">": "<=", ">=": "<",
+def _relation(node, role: str) -> tuple[str, str]:
+    """(name, alias) of a parsed table reference; the alias defaults to
+    the name."""
+    alias = None
+    if _cls(node) == "SubqueryAlias":
+        alias, node = node.alias(), node.child()
+    parts = (
+        _seq(node.multipartIdentifier())
+        if _cls(node) in ("UnresolvedRelation", "UnresolvedTable")
+        else []
+    )
+    if len(parts) != 1:
+        raise ValueError(f"{role} must name a table or view (one-part name)")
+    return parts[0], alias or parts[0]
+
+
+_DNF_DISJUNCT_CAP = 64
+_CMP_OPS = {
+    "EqualTo": "==", "LessThan": "<", "LessThanOrEqual": "<=",
+    "GreaterThan": ">", "GreaterThanOrEqual": ">=",
+}
+# a comparison read from its other side: ``5 < id`` is ``id > 5``
+_FLIP = {"==": "==", "<": ">", "<=": ">=", ">": "<", ">=": "<="}
+# NOT over a leaf negates its op; both ops of each pair are null-unsafe, so
+# a NULL input selects no row either way (SQL three-valued logic)
+_NEGATE = {
+    "==": "!=", "<": ">=", "<=": ">", ">": "<=", ">=": "<",
     "in": "notin", "notin": "in", "isnull": "notnull", "notnull": "isnull",
 }
 
 
-def _negate_term_dnf(t: tuple) -> list[list[tuple]]:
-    """NOT over one leaf term, as DNF. BETWEEN negates to the two-range
-    disjunction (NULL-equivalent under WHERE: both forms select no NULL
-    rows)."""
-    col, op, val = t
-    if op == "between":
-        lo, hi = val
-        return [[(col, "<", lo)], [(col, ">", hi)]]
-    if op in _NEG_OP:
-        return [[(col, _NEG_OP[op], val)]]
-    raise ValueError(f"cannot negate WHERE operator {op!r}")
+def _where_dnf(spark: SparkSession, text: str, expr=None) -> list[list[tuple]]:
+    """A WHERE predicate as DNF: a list of AND-conjunctions of ``(col, op,
+    value)`` terms, the filters ``TableLog.delete/update/optimize`` prune
+    files with and re-apply to rows. ``expr`` is the predicate Spark's
+    parser made from ``text``; it is parsed here when omitted.
 
+    NOT moves to the leaves by De Morgan's laws, which hold in SQL's
+    three-valued logic (``<>`` arrives as NOT over ``=``; NOT BETWEEN
+    becomes the two-range disjunction). AND over OR distributes, capped at
+    ``_DNF_DISJUNCT_CAP`` disjuncts. A leaf compares one bare column with
+    constants: a comparison, ``[NOT] IN (…)``, ``IS [NOT] NULL`` or
+    ``[NOT] BETWEEN``. The constants fold to Python values in one select
+    over an inline table — a local relation, so no job runs — with Spark's
+    own semantics: ``date_sub(current_date(), 90)`` folds to a DATE in the
+    session time zone, and stats pruning sees a plain literal."""
+    if expr is None:
+        expr = _parse_sql(spark, "parseExpression", text)
+    consts: list = []  # value-side expressions; terms hold their indexes
+    unresolved = (
+        spark._jvm.org.apache.spark.sql.catalyst.trees.TreePattern
+    ).UNRESOLVED_ATTRIBUTE()
 
-def _negate_leaf_dnf(dnf: list[list[tuple]]) -> list[list[tuple]]:
-    """NOT over a leaf-derived DNF (each disjunct a single term — the
-    only shape leaf parsing produces): De Morgan turns the OR of terms
-    into an AND of negated terms, re-distributed to DNF (a negated
-    BETWEEN contributes a two-range disjunction)."""
-    if not all(len(d) == 1 for d in dnf):
-        raise ValueError("cannot negate a composite WHERE predicate")
-    out: list[list[tuple]] = [[]]
-    for (t,) in dnf:
-        nd = _negate_term_dnf(t)
-        out = [a + b for a in out for b in nd]
-    return out
+    def leaf(e, col_e, op: str, vals: list, neg: bool) -> list[list[tuple]]:
+        col = _column(col_e)
+        if col is None or any(v.containsPattern(unresolved) for v in vals):
+            raise ValueError(
+                f"cannot parse WHERE term {_text(text, e)!r}: a term compares "
+                "one bare column with constants — use the TableLog API with "
+                "a Column predicate for anything richer"
+            )
+        ids = tuple(range(len(consts), len(consts) + len(vals)))
+        consts.extend(vals)
+        if op == "between":
+            if neg:
+                return [[(col, "<", ids[0])], [(col, ">", ids[1])]]
+            return [[(col, op, ids)]]
+        val = ids if op == "in" else (ids[0] if ids else None)
+        return [[(col, _NEGATE[op] if neg else op, val)]]
 
-
-def _parse_where_leaf(text: str) -> list[list[tuple]]:
-    """One leaf as DNF: ``col NOT BETWEEN a AND b`` is the two-range
-    disjunction (it cannot be a single pruning tuple); everything else
-    is a single term."""
-    import re as _re
-
-    m = _re.match(
-        r"^`?(\w+)`?\s+NOT\s+BETWEEN\s+(.+?)\s+AND\s+(.+)$",
-        text.strip(),
-        _re.IGNORECASE,
-    )
-    if m:
-        lo, hi = _where_lit(m.group(2)), _where_lit(m.group(3))
-        return [[(m.group(1), "<", lo)], [(m.group(1), ">", hi)]]
-    return [[_parse_where_term(text)]]
-
-
-def _parse_where_conjunction(text: str) -> list[tuple]:
-    """A WHERE clause as read()-style pruning filters: top-level AND of
-    ``col op literal`` / ``col BETWEEN a AND b`` terms — the flat form
-    every stats-pruned row op takes.  :func:`_parse_where_dnf` is the
-    general entry point (OR / parentheses via DNF); this narrow form is
-    kept for callers that require a single conjunction."""
-    import re as _re
-
-    if _re.search(r"\(|\)|\bOR\b", text, _re.IGNORECASE):
-        raise ValueError(
-            "expected a plain AND conjunction here (no OR or "
-            "parentheses) — _parse_where_dnf handles the general form"
-        )
-    # protect BETWEEN x AND y before splitting the conjunction
-    protected = _re.sub(
-        r"(\bBETWEEN\b[^;]*?)\bAND\b",
-        lambda m: m.group(1) + "\x00",
-        text,
-        flags=_re.IGNORECASE,
-    )
-    out: list[tuple] = []
-    for term in _re.split(r"\bAND\b", protected, flags=_re.IGNORECASE):
-        term = term.replace("\x00", " AND ")
-        if term.strip().rstrip(";").strip():
-            out.append(_parse_where_term(term))
-    if not out:
-        raise ValueError("empty WHERE clause")
-    return out
-
-
-_DNF_DISJUNCT_CAP = 64
-
-
-def _parse_where_dnf(text: str) -> list[list[tuple]]:
-    """A WHERE clause with OR and parentheses as DNF — a list of AND
-    conjunctions, each the read()-style filter list the row ops prune
-    with.  ``a = 1 OR (b = 2 AND c < 3)`` → ``[[(a,==,1)],
-    [(b,==,2), (c,<,3)]]``: every disjunct prunes files independently
-    and the candidate set is their union, so `DELETE FROM t WHERE a=1
-    OR b=2` keeps file skipping instead of being refused (round 8;
-    Delta/Iceberg accept this shape on day one).  Round 9 widens the
-    leaves to ``IN (…)`` / ``NOT IN (…)`` (membership pruning, never a
-    DNF explosion), ``IS [NOT] NULL`` (per-file null-count pruning),
-    ``!=``/``<>``, and prefix ``NOT`` over a leaf (op negation; NOT
-    over a parenthesized group still refuses — general DNF negation is
-    exponential).  Functions and subqueries refuse loudly — use the
-    TableLog API with real Column predicates.  AND-over-OR distribution
-    is capped at ``_DNF_DISJUNCT_CAP`` disjuncts (DNF is worst-case
-    exponential)."""
-    import re as _re
-
-    tok_pat = _re.compile(
-        r"\s*(?:('(?:[^']|'')*')|(\()|(\))|([^\s()']+))"
-    )
-    toks: list[str] = []
-    i = 0
-    stripped = text.strip().rstrip(";").strip()
-    while i < len(stripped):
-        m = tok_pat.match(stripped, i)
-        if not m or m.end() == i:
-            raise ValueError(f"cannot tokenize WHERE at {stripped[i:]!r}")
-        toks.append(next(g for g in m.groups() if g is not None))
-        i = m.end()
-    pos = 0
-
-    def parse_or() -> list[list[tuple]]:
-        nonlocal pos
-        dnf = parse_and()
-        while pos < len(toks) and toks[pos].upper() == "OR":
-            pos += 1
-            dnf = dnf + parse_and()
-        return dnf
-
-    def parse_and() -> list[list[tuple]]:
-        nonlocal pos
-        dnf = parse_factor()
-        while pos < len(toks) and toks[pos].upper() == "AND":
-            pos += 1
-            rhs = parse_factor()
-            dnf = [a + b for a in dnf for b in rhs]
+    def walk(e, neg: bool) -> list[list[tuple]]:
+        k = _cls(e)
+        if k == "Not":
+            return walk(e.child(), not neg)
+        if k in ("And", "Or"):
+            left, right = walk(e.left(), neg), walk(e.right(), neg)
+            if (k == "Or") != neg:  # OR, or NOT over AND
+                return left + right
+            dnf = [a + b for a in left for b in right]
             if len(dnf) > _DNF_DISJUNCT_CAP:
                 raise ValueError(
                     f"WHERE clause expands past {_DNF_DISJUNCT_CAP} DNF "
-                    "disjuncts — simplify the predicate or use the "
-                    "TableLog API"
+                    "disjuncts — simplify the predicate or use the TableLog API"
                 )
-        return dnf
-
-    def parse_factor() -> list[list[tuple]]:
-        nonlocal pos
-        if pos < len(toks) and toks[pos].upper() == "NOT" and (
-            pos + 1 >= len(toks) or toks[pos + 1].upper() != "IN"
-        ):
-            # prefix NOT: negate the following leaf. NOT over a
-            # parenthesized group refuses loudly (general DNF negation
-            # is exponential; distribute the negation by hand).
-            pos += 1
-            if pos < len(toks) and toks[pos] == "(":
-                raise ValueError(
-                    "NOT over a parenthesized predicate is not supported "
-                    "in SQL DML WHERE — distribute the negation (De "
-                    "Morgan's law) or use the TableLog API with a real "
-                    "Column predicate"
-                )
-            return _negate_leaf_dnf(parse_factor())
-        if pos < len(toks) and toks[pos] == "(":
-            pos += 1
-            dnf = parse_or()
-            if pos >= len(toks) or toks[pos] != ")":
-                raise ValueError("unbalanced parentheses in WHERE")
-            pos += 1
             return dnf
-        buf: list[str] = []
-        between_pending = False
-        while pos < len(toks):
-            t, u = toks[pos], toks[pos].upper()
-            if t == ")" or u == "OR":
-                break
-            if t == "(":
-                if buf and buf[-1].upper() == "IN":
-                    # the leaf's own IN-list: consume '( items )' whole
-                    buf.append(t)
-                    pos += 1
-                    while pos < len(toks) and toks[pos] != ")":
-                        if toks[pos] == "(":
-                            raise ValueError(
-                                "nested parentheses in IN list"
-                            )
-                        buf.append(toks[pos])
-                        pos += 1
-                    if pos >= len(toks):
-                        raise ValueError("unterminated IN list in WHERE")
-                    buf.append(")")
-                    pos += 1
-                    continue
-                if (
-                    buf
-                    and _re.match(r"^\w+$", buf[-1])
-                    and buf[-1].upper()
-                    not in ("AND", "OR", "NOT", "BETWEEN", "IS", "NULL")
-                ):
-                    # a FUNCTION CALL inside the leaf (round 10:
-                    # date_sub(current_date(), 90) …) — consume the
-                    # balanced argument list whole; _where_lit folds it
-                    # to a constant (or refuses) later
-                    depth = 0
-                    while pos < len(toks):
-                        if toks[pos] == "(":
-                            depth += 1
-                        elif toks[pos] == ")":
-                            depth -= 1
-                        buf.append(toks[pos])
-                        pos += 1
-                        if depth == 0:
-                            break
-                    if depth != 0:
-                        raise ValueError(
-                            "unbalanced parentheses in WHERE function call"
-                        )
-                    continue
-                break  # grouping paren — ends this leaf
-            if u == "AND":
-                if not between_pending:
-                    break
-                between_pending = False
-            elif u == "BETWEEN":
-                between_pending = True
-            buf.append(t)
-            pos += 1
-        if not buf:
-            raise ValueError("empty WHERE term")
-        return _parse_where_leaf(" ".join(buf))
+        if k in _CMP_OPS:
+            col_e, val_e, op = e.left(), e.right(), _CMP_OPS[k]
+            if _column(col_e) is None and _column(val_e) is not None:
+                col_e, val_e, op = val_e, col_e, _FLIP[op]
+            return leaf(e, col_e, op, [val_e], neg)
+        if k == "In":
+            return leaf(e, e.value(), "in", _seq(e.list()), neg)
+        if k in ("IsNull", "IsNotNull"):
+            op = "isnull" if k == "IsNull" else "notnull"
+            return leaf(e, e.child(), op, [], neg)
+        if k == "UnresolvedFunction" and _seq(e.nameParts()) == ["between"]:
+            args = _seq(e.arguments())
+            return leaf(e, args[0], "between", args[1:], neg)
+        raise ValueError(f"cannot parse WHERE term {_text(text, e)!r}")
 
-    dnf = parse_or()
-    if pos != len(toks):
-        raise ValueError(f"unexpected token {toks[pos]!r} in WHERE")
-    if not dnf:
-        raise ValueError("empty WHERE clause")
-    return dnf
+    dnf = walk(expr, False)
+    vals = _fold_constants(spark, [_text(text, v) for v in consts])
+
+    def bind(v):
+        if isinstance(v, tuple):  # an IN list or the BETWEEN bounds
+            return tuple(vals[i] for i in v)
+        return None if v is None else vals[v]
+
+    return [[(col, op, bind(v)) for col, op, v in d] for d in dnf]
 
 
-def _parse_where(text: str):
-    """SQL-verb entry point: parse to DNF, collapse a single disjunct to
-    the classic flat conjunction (identical row-op path and CDC output
-    to previous rounds for OR-free clauses)."""
-    dnf = _parse_where_dnf(text)
+def _where_filters(spark: SparkSession, text: str, expr=None):
+    """The row ops' ``filters`` for a WHERE predicate: its DNF, or the
+    flat conjunction when there is one disjunct."""
+    dnf = _where_dnf(spark, text, expr)
     return dnf[0] if len(dnf) == 1 else dnf
+
+
+def _fold_constants(spark: SparkSession, texts: list[str]) -> list:
+    """Constant SQL expressions as Python values, from one select over a
+    one-row inline table (a local relation: collecting it runs no job)."""
+    from pyspark.errors import PySparkException
+
+    if not texts:
+        return []
+    cols = ", ".join(f"({t}) AS c{i}" for i, t in enumerate(texts))
+    try:
+        df = spark.sql(f"SELECT {cols} FROM VALUES (0) AS _(z)")
+        det = df._jdf.queryExecution().analyzed().deterministic()
+        row = df.collect()[0] if det else None
+    except PySparkException as e:
+        raise ValueError(
+            f"cannot fold function in a WHERE value to a constant: {e}"
+        ) from e
+    if not det:
+        raise ValueError(
+            f"non-deterministic function in a WHERE value ({', '.join(texts)})"
+            " — a row-level DML predicate must fold to a constant"
+        )
+    return list(row)
+
+
+def _merge_keys(sql: str, e, t_alias: str, s_alias: str) -> list[str]:
+    """The key columns of a MERGE ON clause: an AND of
+    ``<target>.<col> = <source>.<col>`` terms."""
+    if _cls(e) == "And":
+        return _merge_keys(sql, e.left(), t_alias, s_alias) + _merge_keys(
+            sql, e.right(), t_alias, s_alias
+        )
+    sides = [e.left(), e.right()] if _cls(e) == "EqualTo" else []
+    parts = [
+        _seq(x.nameParts()) for x in sides if _cls(x) == "UnresolvedAttribute"
+    ]
+    quals = {p[0].lower(): p[1] for p in parts if len(p) == 2}
+    if len(parts) != 2 or set(quals) != {t_alias.lower(), s_alias.lower()}:
+        raise ValueError(
+            f"MERGE ON term {_text(sql, e)!r}: ON supports an AND of equality "
+            f"terms {t_alias}.<col> = {s_alias}.<col> only — use the merge() "
+            "API for richer predicates"
+        )
+    t_col, s_col = quals[t_alias.lower()], quals[s_alias.lower()]
+    if t_col != s_col:
+        raise ValueError(
+            "MERGE ON requires same-named key columns on both sides, got "
+            f"{t_col!r} vs {s_col!r}"
+        )
+    return [t_col]
+
+
+def _merge_clauses(
+    sql: str, actions, t_alias: str, s_alias: str, aliases: str
+) -> list[dict]:
+    """One clause family of a parsed MERGE as ``TableLog.merge`` clause
+    dicts. Conditions and SET/VALUES expressions keep their statement text,
+    with the aliases rewritten by :func:`_canon_merge_expr` (``aliases``
+    names the rows the family sees)."""
+
+    def canon(node) -> str:
+        return _canon_merge_expr(_text(sql, node), t_alias, s_alias, aliases)
+
+    def target(key) -> str:
+        parts = _seq(key.nameParts())
+        if len(parts) == 2 and parts[0].lower() == t_alias.lower():
+            parts = parts[1:]
+        if len(parts) != 1:
+            raise ValueError(
+                f"MERGE assignment target {_text(sql, key)!r} must be a "
+                f"column of {t_alias!r}"
+            )
+        return parts[0]
+
+    out = []
+    for a in _seq(actions):
+        k, cond = _cls(a), a.condition()
+        clause = {"condition": canon(cond.get()) if cond.isDefined() else None}
+        if k == "DeleteAction":
+            clause["action"] = "delete"
+        else:
+            if k.startswith("Update"):
+                clause["action"] = "update"
+            clause["set"] = (
+                None  # UPDATE SET * / INSERT *
+                if k.endswith("StarAction")
+                else {
+                    target(x.key()): canon(x.value())
+                    for x in _seq(a.assignments())
+                }
+            )
+        out.append(clause)
+    return out
+
+
+def _values_frame(
+    spark: SparkSession, sql: str, node, fields: list, defaults: dict
+) -> DataFrame:
+    """An INSERT's VALUES rows as a frame of ``fields``: one select over the
+    statement's own inline table casts each column to its declared type
+    (Spark's INSERT coercion), so the rows stay a local relation and no job
+    runs. Spark's parser evaluates an all-literal VALUES list itself; one
+    with a DEFAULT cell arrives unresolved, and each DEFAULT cell takes its
+    column's declared default (NULL when none is declared)."""
+    from pyspark.errors import PySparkException
+
+    inline = _cls(node) == "UnresolvedInlineTable"
+    width = (node.names() if inline else node.output()).size()
+    if width != len(fields):
+        raise ValueError(
+            f"INSERT VALUES row 1 has {width} values for {len(fields)} columns"
+        )
+    text, base = _text(sql, node), node.origin().startIndex().get()
+    for row in reversed(_seq(node.rows()) if inline else []):
+        for f, cell in reversed(list(zip(fields, _seq(row)))):
+            if (
+                _cls(cell) == "UnresolvedAttribute"
+                and cell.name().upper() == "DEFAULT"
+            ):
+                o = cell.origin()
+                text = (
+                    text[: o.startIndex().get() - base]
+                    + f"({defaults.get(f.name, 'NULL')})"
+                    + text[o.stopIndex().get() + 1 - base :]
+                )
+    casts = ", ".join(
+        f"CAST(c{j} AS {f.dataType.simpleString()}) AS `{f.name}`"
+        for j, f in enumerate(fields)
+    )
+    cols = ", ".join(f"c{j}" for j in range(width))
+    try:
+        df = spark.sql(f"SELECT {casts} FROM {text} AS _({cols})")
+        df.collect()  # a failing cast raises here
+    except PySparkException as e:
+        raise ValueError(f"INSERT VALUES: {e}") from e
+    return df
 
 
 class Warehouse:
@@ -1512,7 +1246,14 @@ class Warehouse:
         resolution order. Known edge: if the user REPLACES a view this
         warehouse itself registered earlier in the same session, the next
         .sql() re-shadows it (the catalog API cannot distinguish the two);
-        pick an unclaimed name for user views over warehouse tables."""
+        pick an unclaimed name for user views over warehouse tables.
+
+        DML (DELETE, TRUNCATE, UPDATE, MERGE, INSERT) is parsed by Spark's
+        own parser and run on the backend's row ops; the statements Spark's
+        grammar lacks (OPTIMIZE, VACUUM, REORG, RESTORE, DESCRIBE
+        HISTORY/DETAIL/FILES, SHALLOW CLONE) and the warehouse's CREATE/
+        ALTER DDL are matched first. A statement Spark cannot parse raises
+        ValueError with Spark's message."""
         import re
 
         m_hist = re.match(
@@ -1550,12 +1291,7 @@ class Warehouse:
         )
         if m_con:
             t = m_con.group(1)
-            if not hasattr(self, "_log"):
-                raise ValueError(
-                    "CHECK constraints require the txlog backend "
-                    "(TxLogWarehouse); this backend's snapshots carry no "
-                    "constraint metadata"
-                )
+            self._require_txlog("CHECK constraints")
             if m_con.group(2):
                 op = "ADD CONSTRAINT"
                 v = self._log(t).add_constraint(
@@ -1564,11 +1300,7 @@ class Warehouse:
             else:
                 op = "DROP CONSTRAINT"
                 v = self._log(t).drop_constraint(m_con.group(4))
-            return local_frame(
-                self.spark,
-                [(t, op, v)],
-                "table_name string, operation string, version long",
-            )
+            return self._outcome(t, op, v)
 
         # column DEFAULT DDL (round 10; Spark/Delta syntax): metadata
         # commits; later INSERTs whose column list omits the column take
@@ -1581,12 +1313,7 @@ class Warehouse:
         )
         if m_dflt:
             t = m_dflt.group(1)
-            if not hasattr(self, "_log"):
-                raise ValueError(
-                    "column DEFAULTs require the txlog backend "
-                    "(TxLogWarehouse); this backend's snapshots carry no "
-                    "default metadata"
-                )
+            self._require_txlog("column DEFAULTs")
             if m_dflt.group(4):
                 op = "DROP DEFAULT"
                 v = self._log(t).drop_default(m_dflt.group(2))
@@ -1595,11 +1322,7 @@ class Warehouse:
                 v = self._log(t).set_default(
                     m_dflt.group(2), m_dflt.group(3).strip()
                 )
-            return local_frame(
-                self.spark,
-                [(t, op, v)],
-                "table_name string, operation string, version long",
-            )
+            return self._outcome(t, op, v)
 
         # generated / identity column DDL (round 11; Delta's GENERATED
         # ALWAYS AS, surfaced through ALTER like the SET DEFAULT family):
@@ -1616,12 +1339,7 @@ class Warehouse:
         )
         if m_gen:
             t = m_gen.group(1)
-            if not hasattr(self, "_log"):
-                raise ValueError(
-                    "generated columns require the txlog backend "
-                    "(TxLogWarehouse); this backend's snapshots carry no "
-                    "generated-column metadata"
-                )
+            self._require_txlog("generated columns")
             if m_gen.group(6):
                 op = "DROP GENERATED"
                 v = self._log(t).drop_generated(m_gen.group(2))
@@ -1638,11 +1356,7 @@ class Warehouse:
                     start=int(m_gen.group(3) or 1),
                     step=int(m_gen.group(4) or 1),
                 )
-            return local_frame(
-                self.spark,
-                [(t, op, v)],
-                "table_name string, operation string, version long",
-            )
+            return self._outcome(t, op, v)
 
         # table properties (round 11; Delta/Spark syntax): SET acts on
         # delta.enableChangeDataFeed — CoW MERGE/DELETE commits then
@@ -1656,42 +1370,17 @@ class Warehouse:
         )
         if m_props:
             t = m_props.group(1)
-            if not hasattr(self, "_log"):
-                raise ValueError(
-                    "TBLPROPERTIES require the txlog backend "
-                    "(TxLogWarehouse); this backend's snapshots carry no "
-                    "property metadata"
-                )
-
-            def _unq(s: str) -> str:
-                s = s.strip()
-                if len(s) >= 2 and s[0] == s[-1] and s[0] in "'\"":
-                    return s[1:-1].replace("''", "'")
-                return s
-
+            self._require_txlog("TBLPROPERTIES")
             if m_props.group(2):
-                pairs = {}
-                for item in _split_in_list(m_props.group(2)):
-                    k, eq, val = item.partition("=")
-                    if not eq:
-                        raise ValueError(
-                            f"cannot parse TBLPROPERTIES pair {item!r}; "
-                            "expected 'key' = 'value'"
-                        )
-                    pairs[_unq(k)] = _unq(val)
                 op = "SET TBLPROPERTIES"
-                v = self._log(t).set_properties(pairs)
+                v = self._log(t).set_properties(
+                    _parse_props_body(m_props.group(2))
+                )
             else:
-                keys = [
-                    _unq(k) for k in _split_in_list(m_props.group(3))
-                ]
+                keys = [_unq_sql(k) for k in _split_in_list(m_props.group(3))]
                 op = "UNSET TBLPROPERTIES"
                 v = self._log(t).unset_properties(keys)
-            return local_frame(
-                self.spark,
-                [(t, op, v)],
-                "table_name string, operation string, version long",
-            )
+            return self._outcome(t, op, v)
 
         m_files = re.match(
             r"\s*DESCRIBE\s+FILES\s+`?(\w+)`?\s*;?\s*$", query, re.IGNORECASE
@@ -1722,11 +1411,7 @@ class Warehouse:
                     src_t, int(m_clone.group(4))
                 )
             v = self.shallow_clone(src_t, dst, version=ver)
-            return local_frame(
-                self.spark,
-                [(dst, "SHALLOW CLONE", v)],
-                "table_name string, operation string, version long",
-            )
+            return self._outcome(dst, "SHALLOW CLONE", v)
 
         # CREATE TABLE with an explicit column list (round 12): Delta's
         # declare-before-first-write surface — GENERATED ALWAYS AS /
@@ -1777,12 +1462,7 @@ class Warehouse:
                     "BUCKETS | TBLPROPERTIES; CTAS uses `CREATE TABLE t "
                     "AS SELECT …` without a column list)"
                 )
-            if not hasattr(self, "_log"):
-                raise ValueError(
-                    "CREATE TABLE with column definitions requires the "
-                    "txlog backend (TxLogWarehouse); this backend's "
-                    "snapshots carry no declare-time metadata"
-                )
+            self._require_txlog("CREATE TABLE with column definitions")
             if self.exists(t):
                 raise ValueError(
                     f"table {t!r} already exists; CREATE TABLE never "
@@ -1812,11 +1492,7 @@ class Warehouse:
                 defaults=dflts or None,
                 properties=props,
             )
-            return local_frame(
-                self.spark,
-                [(t, "CREATE TABLE", v)],
-                "table_name string, operation string, version long",
-            )
+            return self._outcome(t, "CREATE TABLE", v)
 
         # CTAS with optional partition/bucket layout (round 8): the SELECT
         # runs back through .sql() so VERSION AS OF / table_changes() /
@@ -1855,12 +1531,8 @@ class Warehouse:
                 if m_ctas.group(7)
                 else None
             )
-            if props is not None and not hasattr(self, "_log"):
-                raise ValueError(
-                    "TBLPROPERTIES require the txlog backend "
-                    "(TxLogWarehouse); this backend's snapshots carry no "
-                    "property metadata"
-                )
+            if props is not None:
+                self._require_txlog("TBLPROPERTIES")
             prop_kw = {"properties": props} if props is not None else {}
             df = self.sql(m_ctas.group(8))
             if bcols:
@@ -1884,491 +1556,8 @@ class Warehouse:
                 )
             else:
                 v = self.write_snapshot(df, t, partition_by=part, **prop_kw)
-            return local_frame(
-                self.spark,
-                [(t, "CREATE OR REPLACE TABLE AS" if replace
-                  else "CREATE TABLE AS", v)],
-                "table_name string, operation string, version long",
-            )
-
-        # INSERT INTO … VALUES / SELECT (round 9): the day-one append
-        # verb. VALUES rows parse with the WHERE-literal grammar (+NULL)
-        # and coerce to the table's schema; a column list fills the rest
-        # with NULL; the SELECT form runs back through .sql() so time
-        # travel / table_changes() resolve inside it. Appends on the
-        # txlog backend are atomic commits; the base backend appends by
-        # writing the next snapshot (same cost as any write there).
-        m_ins = re.match(
-            r"\s*INSERT\s+INTO\s+`?(\w+)`?\s*"
-            r"(?:\(([^)]+)\)\s*)?"
-            r"(?:VALUES\s*(.+?)|(SELECT\b.+?))\s*;?\s*$",
-            query,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if m_ins:
-            t = m_ins.group(1)
-            cols = (
-                [c.strip(" `") for c in m_ins.group(2).split(",")]
-                if m_ins.group(2)
-                else None
-            )
-            target = self.read_snapshot(t).schema
-            # ONE defaults/generated fetch per statement (advice r10: it
-            # ran once per DEFAULT cell plus once more for the
-            # unlisted-column fill — O(rows) driver queries)
-            if hasattr(self, "_log") and self.exists(t):
-                _snap = self._log(t).snapshot()
-                defaults, genmeta = _snap.defaults, _snap.generated
-                # appends extend the table's standing partition layout
-                # (TableLog.write is spec-strict by contract)
-                part_spec = list(_snap.partition_by or []) or None
-            else:
-                defaults, genmeta, part_spec = {}, {}, None
-            if genmeta:
-                listed = cols if cols is not None else list(target.names)
-                bad = sorted(set(listed) & set(genmeta))
-                if bad:
-                    hint = (
-                        "use an explicit column list omitting them"
-                        if cols is None
-                        else "omit them from the column list"
-                    )
-                    raise ValueError(
-                        f"INSERT may not provide generated column(s) "
-                        f"{bad} (GENERATED ALWAYS — the engine computes "
-                        f"them); {hint}"
-                    )
-            if m_ins.group(4):
-                df = self.sql(m_ins.group(4))
-                # INSERT … SELECT binds POSITIONALLY (SQL semantics):
-                # the SELECT's outputs map onto the column list — or the
-                # full table schema when no list is given — by position,
-                # never by the SELECT's own output names
-                bind = cols or list(target.names)
-                if len(bind) != len(df.columns):
-                    raise ValueError(
-                        f"INSERT binds {len(bind)} column(s) "
-                        f"({bind}) but the SELECT produces "
-                        f"{len(df.columns)}"
-                    )
-                df = df.toDF(*bind)
-            else:
-                rows = _parse_values_rows(m_ins.group(3))
-                names = cols or [f.name for f in target.fields]
-                bad = [c for c in names if c not in target.names]
-                if bad:
-                    raise ValueError(
-                        f"INSERT columns {bad} not in table {t!r} "
-                        f"(has {list(target.names)})"
-                    )
-                for i, r in enumerate(rows):
-                    if len(r) != len(names):
-                        raise ValueError(
-                            f"INSERT VALUES row {i + 1} has {len(r)} "
-                            f"values for {len(names)} columns"
-                        )
-                from pyspark.sql.types import StructType as _St
-
-                _default_memo: dict = {}
-
-                def _resolve_default(col: str, dtype) -> object:
-                    # the explicit DEFAULT keyword: the declared default
-                    # evaluated driver-side (ANSI: no declared default
-                    # means NULL), memoized per column for the statement
-                    # (advice r10: one driver round-trip per DEFAULT
-                    # cell; set_default validated the expression as a
-                    # constant, so one evaluation is the statement's)
-                    if col in _default_memo:
-                        return _default_memo[col]
-                    expr = defaults.get(col)
-                    val = (
-                        None
-                        if expr is None
-                        else self.spark.sql(
-                            f"SELECT CAST(({expr}) AS "
-                            f"{dtype.simpleString()})"
-                        ).head()[0]
-                    )
-                    _default_memo[col] = val
-                    return val
-
-                sub = _St([target[c] for c in names])
-                coerced = [
-                    tuple(
-                        _resolve_default(names[j], sub[j].dataType)
-                        if v is _DEFAULT
-                        else _coerce_literal(v, sub[j].dataType)
-                        for j, v in enumerate(r)
-                    )
-                    for r in rows
-                ]
-                df = self.spark.createDataFrame(coerced, sub)
-            # columns the INSERT omitted take their declared DEFAULT
-            # (round 10) and otherwise read NULL (SQL semantics);
-            # GENERATED columns stay ABSENT — the txlog write computes/
-            # allocates them (round 11), and subset-schema appends are
-            # first-class on that backend
-            for f in target.fields:
-                if f.name not in df.columns and f.name not in genmeta:
-                    fill = (
-                        F.expr(defaults[f.name])
-                        if f.name in defaults
-                        else F.lit(None)
-                    )
-                    df = df.withColumn(f.name, fill.cast(f.dataType))
-            df = df.select(
-                *[df[f.name] for f in target.fields if f.name in df.columns]
-            )
-            n = df.count()
-            if hasattr(self, "append"):
-                v = self.append(df, t, partition_by=part_spec)
-            else:
-                v = self.write_snapshot(
-                    self.read_snapshot(t).unionByName(df), t
-                )
-            return local_frame(
-                self.spark,
-                [(t, "INSERT INTO", v, n)],
-                "table_name string, operation string, version long, rows long",
-            )
-
-        # DELETE without WHERE / TRUNCATE TABLE (round 9): whole-table
-        # clear as one commit — the surviving snapshot is the empty
-        # table under the SAME schema; history stays time-travelable.
-        m_trunc = re.match(
-            r"\s*(?:TRUNCATE\s+TABLE|DELETE\s+FROM)\s+`?(\w+)`?\s*;?\s*$",
-            query,
-            re.IGNORECASE,
-        )
-        if m_trunc:
-            t = m_trunc.group(1)
-            cur = self.read_snapshot(t)
-            n = cur.count()
-            spec = (
-                self._log(t).snapshot().bucket_by
-                if hasattr(self, "_log")
-                else {}
-            )
-            if spec:
-                # a bucketed table keeps its declared layout across
-                # TRUNCATE (Hive semantics: truncation clears rows, not
-                # table metadata)
-                v = self.write_snapshot(
-                    cur.limit(0),
-                    t,
-                    bucket_by=(spec["n"], list(spec["cols"])),
-                    sort_by=list(spec.get("sort") or []) or None,
-                )
-            else:
-                v = self.write_snapshot(cur.limit(0), t)
-            return local_frame(
-                self.spark,
-                [(t, "TRUNCATE", v, n)],
-                "table_name string, operation string, version long, rows long",
-            )
-
-        m_del = re.match(
-            r"\s*DELETE\s+FROM\s+`?(\w+)`?\s+WHERE\s+(.+?)\s*;?\s*$",
-            query,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if m_del:
-            t = m_del.group(1)
-            if not hasattr(self, "delete"):
-                raise ValueError(
-                    "row-level SQL DML requires the txlog backend "
-                    "(TxLogWarehouse); this backend's snapshots are "
-                    "whole-table writes"
-                )
-            res = self.delete(t, _parse_where(m_del.group(2)))
-            return local_frame(
-                self.spark,
-                [(t, "DELETE", res["version"], res.get("rows_deleted"))],
-                "table_name string, operation string, version long, rows long",
-            )
-
-        m_upd = re.match(
-            r"\s*UPDATE\s+`?(\w+)`?\s+SET\s+(.+?)\s+WHERE\s+(.+?)\s*;?\s*$",
-            query,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if m_upd:
-            t = m_upd.group(1)
-            if not hasattr(self, "update"):
-                raise ValueError(
-                    "row-level SQL DML requires the txlog backend "
-                    "(TxLogWarehouse); this backend's snapshots are "
-                    "whole-table writes"
-                )
-            sets = {}
-            # quote/paren-aware split: 'v = round(x, 2), s = 'a,b'' is
-            # two assignments, not four fragments
-            for assign in _split_in_list(m_upd.group(2)):
-                col, _, expr = assign.partition("=")
-                if not expr:
-                    raise ValueError(f"cannot parse SET clause {assign!r}")
-                sets[col.strip(" `")] = expr.strip()
-            res = self.update(
-                t, _parse_where(m_upd.group(3)), sets
-            )
-            return local_frame(
-                self.spark,
-                [(t, "UPDATE", res["version"], res.get("rows_updated"))],
-                "table_name string, operation string, version long, rows long",
-            )
-
-        m_merge = re.match(
-            r"\s*MERGE\s+(WITH\s+SCHEMA\s+EVOLUTION\s+)?"
-            r"INTO\s+`?(\w+)`?(?:\s+AS\s+(\w+)|\s+(\w+))?"
-            r"\s+USING\s+`?(\w+)`?(?:\s+AS\s+(\w+)|\s+(\w+))?"
-            r"\s+ON\s+(.+)$",
-            query.rstrip().rstrip(";"),
-            re.IGNORECASE | re.DOTALL,
-        )
-        if m_merge:
-            # the FULL multi-branch MERGE grammar (round 10): equality
-            # ON terms, then any ordered mix of
-            #   WHEN MATCHED [AND cond] THEN UPDATE SET (*|col=expr,…)
-            #   WHEN MATCHED [AND cond] THEN DELETE
-            #   WHEN NOT MATCHED [AND cond] THEN INSERT *
-            #   WHEN NOT MATCHED BY SOURCE [AND cond] THEN UPDATE SET …
-            #   WHEN NOT MATCHED BY SOURCE [AND cond] THEN DELETE
-            # Clauses are split structurally on top-level WHEN tokens
-            # (string literals respected), so the phrase 'NOT MATCHED BY
-            # SOURCE' inside a literal or condition can never enable
-            # full-sync semantics by accident. Everything richer (non-
-            # equality ON) is refused loudly — use the merge() API.
-            #
-            # Round 11 — MERGE WITH SCHEMA EVOLUTION (the Spark 4 /
-            # Delta CDC-apply statement against an evolving source):
-            # source columns absent from the table extend the schema as
-            # nullable, clause assignments may target them. Delta's
-            # session conf spark.databricks.delta.schema.autoMerge.
-            # enabled switches the same behavior on for every MERGE in
-            # the session (both map onto merge(schema_evolution=True)).
-            t, src = m_merge.group(2), m_merge.group(5)
-            t_alias = m_merge.group(3) or m_merge.group(4) or t
-            s_alias = m_merge.group(6) or m_merge.group(7) or src
-            evolve = bool(m_merge.group(1)) or (
-                str(
-                    self.spark.conf.get(
-                        "spark.databricks.delta.schema.autoMerge.enabled",
-                        "false",
-                    )
-                ).lower()
-                == "true"
-            )
-            if not hasattr(self, "merge"):
-                raise ValueError(
-                    "MERGE INTO requires the txlog backend "
-                    "(TxLogWarehouse); this backend's snapshots are "
-                    "whole-table writes"
-                )
-            if t_alias.lower() == s_alias.lower():
-                raise ValueError(
-                    f"MERGE target and source aliases collide ({t_alias!r})"
-                    " — alias one side differently"
-                )
-            segments = _split_top_level_when(m_merge.group(8))
-            on = segments[0]
-            if len(segments) < 2:
-                raise ValueError(
-                    "MERGE requires at least one WHEN clause"
-                )
-            if re.search(r"\(|\)|\bOR\b", on, re.IGNORECASE):
-                raise ValueError(
-                    "MERGE ON supports a plain AND of equality terms "
-                    "only — use the merge() API for richer predicates"
-                )
-            keys = []
-            for term in re.split(r"\bAND\b", on, flags=re.IGNORECASE):
-                m_eq = re.match(
-                    r"^\s*`?(\w+)`?\s*\.\s*`?(\w+)`?\s*=\s*"
-                    r"`?(\w+)`?\s*\.\s*`?(\w+)`?\s*$",
-                    term,
-                )
-                if not m_eq:
-                    raise ValueError(
-                        f"cannot parse MERGE ON term {term.strip()!r}; "
-                        "expected <target>.<col> = <source>.<col>"
-                    )
-                quals = {m_eq.group(1): m_eq.group(2), m_eq.group(3): m_eq.group(4)}
-                if set(quals) != {t_alias, s_alias}:
-                    raise ValueError(
-                        f"MERGE ON term {term.strip()!r} must reference "
-                        f"both {t_alias!r} and {s_alias!r}"
-                    )
-                if quals[t_alias] != quals[s_alias]:
-                    raise ValueError(
-                        "MERGE ON requires same-named key columns on both "
-                        f"sides, got {quals[t_alias]!r} vs {quals[s_alias]!r}"
-                    )
-                keys.append(quals[t_alias])
-            if self.exists(src):
-                source = self.read(src)
-            elif self.spark.catalog.tableExists(src):
-                source = self.spark.table(src)
-            else:
-                raise ValueError(
-                    f"MERGE source {src!r} is neither a warehouse table "
-                    "nor a registered view"
-                )
-
-            def _parse_set(assigns: str, aliases: str) -> dict:
-                out = {}
-                for assign in _split_in_list(assigns):
-                    lhs, eq, rhs = assign.partition("=")
-                    if not eq:
-                        raise ValueError(
-                            f"cannot parse UPDATE SET assignment {assign!r}"
-                        )
-                    lhs = lhs.strip(" `")
-                    if "." in lhs:
-                        qual, _, col = lhs.partition(".")
-                        if qual.strip(" `") != t_alias:
-                            raise ValueError(
-                                f"UPDATE SET target {lhs!r} must be a "
-                                f"column of {t_alias!r}"
-                            )
-                        lhs = col.strip(" `")
-                    out[lhs] = _canon_merge_expr(
-                        rhs.strip(), t_alias, s_alias, aliases
-                    )
-                return out
-
-            matched: list[dict] = []
-            nmbs: list[dict] = []
-            inserts: list[dict] = []
-            for seg in segments[1:]:
-                head, action = _split_top_level_then(seg)
-                m_h = re.match(
-                    r"^\s*NOT\s+MATCHED\s+BY\s+SOURCE"
-                    r"(?:\s+AND\s+(.+))?\s*$",
-                    head, re.IGNORECASE | re.DOTALL,
-                )
-                kind = None
-                if m_h:
-                    kind = "nmbs"
-                else:
-                    m_h = re.match(
-                        r"^\s*NOT\s+MATCHED(?:\s+BY\s+TARGET)?"
-                        r"(?:\s+AND\s+(.+))?\s*$",
-                        head, re.IGNORECASE | re.DOTALL,
-                    )
-                    if m_h:
-                        kind = "insert"
-                    else:
-                        m_h = re.match(
-                            r"^\s*MATCHED(?:\s+AND\s+(.+))?\s*$",
-                            head, re.IGNORECASE | re.DOTALL,
-                        )
-                        if m_h:
-                            kind = "matched"
-                if kind is None:
-                    raise ValueError(
-                        f"cannot parse MERGE clause 'WHEN {seg.strip()}'"
-                    )
-                cond = m_h.group(1)
-                m_del = re.match(r"^\s*DELETE\s*$", action, re.IGNORECASE)
-                m_upd = re.match(
-                    r"^\s*UPDATE\s+SET\s+(.+)$",
-                    action, re.IGNORECASE | re.DOTALL,
-                )
-                m_ins = re.match(
-                    r"^\s*INSERT\s+\*\s*$", action, re.IGNORECASE
-                )
-                m_ins_cols = re.match(
-                    r"^\s*INSERT\s*\(\s*([\w\s,`]+?)\s*\)\s*"
-                    r"VALUES\s*\((.+)\)\s*$",
-                    action, re.IGNORECASE | re.DOTALL,
-                )
-                if kind == "insert":
-                    c_cond = (
-                        _canon_merge_expr(cond.strip(), t_alias, s_alias, "s")
-                        if cond is not None
-                        else None
-                    )
-                    if m_ins:
-                        sets = None  # INSERT *
-                    elif m_ins_cols:
-                        cols = [
-                            c.strip(" `")
-                            for c in m_ins_cols.group(1).split(",")
-                        ]
-                        exprs = _split_in_list(m_ins_cols.group(2))
-                        if len(cols) != len(exprs):
-                            raise ValueError(
-                                f"INSERT column list has {len(cols)} "
-                                f"columns but VALUES has {len(exprs)} "
-                                "expressions"
-                            )
-                        sets = {
-                            c: _canon_merge_expr(e, t_alias, s_alias, "s")
-                            for c, e in zip(cols, exprs)
-                        }
-                    else:
-                        raise ValueError(
-                            "WHEN NOT MATCHED supports THEN INSERT * or "
-                            "INSERT (cols) VALUES (exprs), got "
-                            f"{action.strip()!r}"
-                        )
-                    inserts.append({"condition": c_cond, "set": sets})
-                    continue
-                aliases = "ts" if kind == "matched" else "t_bare"
-                c_cond = (
-                    _canon_merge_expr(cond.strip(), t_alias, s_alias, aliases)
-                    if cond is not None
-                    else None
-                )
-                if m_del:
-                    clause = {"action": "delete", "condition": c_cond}
-                elif m_upd:
-                    sets = m_upd.group(1).strip()
-                    if sets == "*":
-                        if kind == "nmbs":
-                            raise ValueError(
-                                "WHEN NOT MATCHED BY SOURCE THEN UPDATE "
-                                "requires explicit SET assignments"
-                            )
-                        clause = {
-                            "action": "update",
-                            "condition": c_cond,
-                            "set": None,
-                        }
-                    else:
-                        clause = {
-                            "action": "update",
-                            "condition": c_cond,
-                            "set": _parse_set(sets, aliases),
-                        }
-                else:
-                    raise ValueError(
-                        f"cannot parse MERGE action {action.strip()!r}; "
-                        "expected DELETE or UPDATE SET …"
-                    )
-                (matched if kind == "matched" else nmbs).append(clause)
-            for grp, label in ((matched, "WHEN MATCHED"),
-                               (inserts, "WHEN NOT MATCHED"),
-                               (nmbs, "WHEN NOT MATCHED BY SOURCE")):
-                for cl in grp[:-1]:
-                    if cl["condition"] is None:
-                        raise ValueError(
-                            f"only the LAST {label} clause may omit its "
-                            "AND condition (earlier unconditional clauses "
-                            "make later ones unreachable — Delta refuses "
-                            "this too)"
-                        )
-            res = self.merge(
-                source, t, keys,
-                matched_clauses=matched,
-                not_matched_clauses=inserts,
-                not_matched_by_source_clauses=nmbs or None,
-                schema_evolution=evolve,
-            )
-            return local_frame(
-                self.spark,
-                [(t, "MERGE", res["version"], res.get("rows_written"))],
-                "table_name string, operation string, version long, rows long",
+            return self._outcome(
+                t, "CREATE OR REPLACE TABLE AS" if replace else "CREATE TABLE AS", v
             )
 
         m_detail = re.match(
@@ -2392,14 +1581,12 @@ class Warehouse:
                 else None
             )
             where = (
-                _parse_where(m_opt.group(2)) if m_opt.group(2) else None
+                _where_filters(self.spark, m_opt.group(2))
+                if m_opt.group(2)
+                else None
             )
             v = self.optimize_table(t, zorder_by=zcols, where=where)
-            return local_frame(
-                self.spark,
-                [(t, "OPTIMIZE", v)],
-                "table_name string, operation string, version long",
-            )
+            return self._outcome(t, "OPTIMIZE", v)
 
         # REORG TABLE … APPLY (PURGE) (round 12): Delta's scoped
         # deletion-vector purge — rewrite ONLY the dv-carrying files
@@ -2411,12 +1598,7 @@ class Warehouse:
         )
         if m_reorg:
             t = m_reorg.group(1)
-            if not hasattr(self, "_log"):
-                raise ValueError(
-                    "REORG APPLY (PURGE) requires the txlog backend "
-                    "(TxLogWarehouse); only its snapshots carry deletion "
-                    "vectors"
-                )
+            self._require_txlog("REORG APPLY (PURGE)")
             res = self._log(t).reorg_purge()
             return local_frame(
                 self.spark,
@@ -2457,11 +1639,7 @@ class Warehouse:
         if m_restore:
             t = m_restore.group(1)
             v = self.restore_table(t, int(m_restore.group(2)))
-            return local_frame(
-                self.spark,
-                [(t, "RESTORE", v)],
-                "table_name string, operation string, version long",
-            )
+            return self._outcome(t, "RESTORE", v)
 
         if m_alter:
             t = m_alter.group(1)
@@ -2477,19 +1655,7 @@ class Warehouse:
                 spec = m_alter.group(4).strip()
                 if spec.startswith("(") and spec.endswith(")"):
                     spec = spec[1:-1]
-                cols, depth, cur = [], 0, []
-                for ch in spec:
-                    if ch == "(":
-                        depth += 1
-                    elif ch == ")":
-                        depth -= 1
-                    if ch == "," and depth == 0:
-                        cols.append("".join(cur))
-                        cur = []
-                    else:
-                        cur.append(ch)
-                if "".join(cur).strip():
-                    cols.append("".join(cur))
+                cols = _split_coldefs(spec)
                 parsed = []
                 for cspec in cols:
                     cname, _, dtype = cspec.strip().partition(" ")
@@ -2513,10 +1679,15 @@ class Warehouse:
                 v = self.alter_column_type(
                     t, m_alter.group(6), m_alter.group(7).strip()
                 )
-            return local_frame(
-                self.spark,
-                [(t, op, v)], "table_name string, operation string, version long"
-            )
+            return self._outcome(t, op, v)
+
+        # the standard DML goes through Spark's own parser; every other
+        # statement it parses (SELECT, SHOW, …) runs below with the
+        # time-travel rewrite
+        plan = _parse_sql(self.spark, "parsePlan", query)
+        run = self._SQL_DML.get(_cls(plan))
+        if run is not None:
+            return getattr(self, run)(query, plan)
 
         def _versioned(m: "re.Match[str]") -> str:
             name, version = m.group(1), int(m.group(2))
@@ -2565,6 +1736,229 @@ class Warehouse:
                 self.read(name).createOrReplaceTempView(name)
             self._registered.add(name)
         return self.spark.sql(rewritten)
+
+    # Spark's DML plan classes and the method that runs each
+    _SQL_DML = {
+        "DeleteFromTable": "_sql_delete",
+        "TruncateTable": "_sql_truncate",
+        "UpdateTable": "_sql_update",
+        "MergeIntoTable": "_sql_merge",
+        "InsertIntoStatement": "_sql_insert",
+    }
+
+    def _outcome(self, table: str, op: str, version, *rows) -> DataFrame:
+        """A statement's one-row result: the table, the operation and the
+        version it committed, plus the rows a DML statement touched."""
+        return local_frame(
+            self.spark,
+            [(table, op, version, *rows)],
+            "table_name string, operation string, version long"
+            + (", rows long" if rows else ""),
+        )
+
+    def _require_txlog(self, feature: str) -> None:
+        """Refuse a statement only the txlog backend's commit log can
+        carry (row-level DML, table metadata, deletion vectors)."""
+        if not hasattr(self, "_log"):
+            raise ValueError(
+                f"{feature}: needs the txlog backend (TxLogWarehouse); this "
+                "backend's snapshots are whole-table writes with no such "
+                "metadata"
+            )
+
+    def _sql_insert(self, query: str, plan) -> DataFrame:
+        """INSERT INTO … VALUES / SELECT (round 9): the day-one append verb.
+        VALUES rows cast to the table's column types (see
+        :func:`_values_frame`); a column list fills the rest with their
+        DEFAULT or NULL; the SELECT form runs back through .sql() so time
+        travel / table_changes() resolve inside it. Appends on the txlog
+        backend are atomic commits; the base backend appends by writing
+        the next snapshot (same cost as any write there)."""
+        t, _ = _relation(plan.table(), "INSERT INTO")
+        if plan.overwrite() or plan.byName() or not plan.partitionSpec().isEmpty():
+            raise ValueError(
+                "INSERT supports INTO <table> [(cols)] VALUES … | SELECT …; "
+                "CREATE OR REPLACE TABLE … AS SELECT overwrites"
+            )
+        cols = _seq(plan.userSpecifiedCols()) or None
+        target = self.read_snapshot(t).schema
+        # ONE defaults/generated fetch per statement
+        if hasattr(self, "_log") and self.exists(t):
+            _snap = self._log(t).snapshot()
+            defaults, genmeta = _snap.defaults, _snap.generated
+            # appends extend the table's standing partition layout
+            # (TableLog.write is spec-strict by contract)
+            part_spec = list(_snap.partition_by or []) or None
+        else:
+            defaults, genmeta, part_spec = {}, {}, None
+        if genmeta:
+            listed = cols if cols is not None else list(target.names)
+            bad = sorted(set(listed) & set(genmeta))
+            if bad:
+                hint = (
+                    "use an explicit column list omitting them"
+                    if cols is None
+                    else "omit them from the column list"
+                )
+                raise ValueError(
+                    f"INSERT may not provide generated column(s) {bad} "
+                    f"(GENERATED ALWAYS — the engine computes them); {hint}"
+                )
+        rows = plan.query()
+        if _cls(rows) in ("LocalRelation", "UnresolvedInlineTable"):
+            names = cols or list(target.names)
+            bad = [c for c in names if c not in target.names]
+            if bad:
+                raise ValueError(
+                    f"INSERT columns {bad} not in table {t!r} "
+                    f"(has {list(target.names)})"
+                )
+            df = _values_frame(
+                self.spark, query, rows, [target[c] for c in names], defaults
+            )
+        else:
+            df = self.sql(_text(query, rows))
+            # INSERT … SELECT binds POSITIONALLY (SQL semantics): the
+            # SELECT's outputs map onto the column list — or the full
+            # table schema when no list is given — by position, never by
+            # the SELECT's own output names
+            bind = cols or list(target.names)
+            if len(bind) != len(df.columns):
+                raise ValueError(
+                    f"INSERT binds {len(bind)} column(s) ({bind}) but the "
+                    f"SELECT produces {len(df.columns)}"
+                )
+            df = df.toDF(*bind)
+        # columns the INSERT omitted take their declared DEFAULT (round 10)
+        # and otherwise read NULL (SQL semantics); GENERATED columns stay
+        # ABSENT — the txlog write computes/allocates them (round 11), and
+        # subset-schema appends are first-class on that backend
+        for f in target.fields:
+            if f.name not in df.columns and f.name not in genmeta:
+                fill = (
+                    F.expr(defaults[f.name])
+                    if f.name in defaults
+                    else F.lit(None)
+                )
+                df = df.withColumn(f.name, fill.cast(f.dataType))
+        df = df.select(
+            *[df[f.name] for f in target.fields if f.name in df.columns]
+        )
+        n = df.count()
+        if hasattr(self, "append"):
+            v = self.append(df, t, partition_by=part_spec)
+        else:
+            v = self.write_snapshot(self.read_snapshot(t).unionByName(df), t)
+        return self._outcome(t, "INSERT INTO", v, n)
+
+    def _sql_truncate(self, query: str, plan) -> DataFrame:
+        """TRUNCATE TABLE / DELETE without WHERE (round 9): whole-table
+        clear as one commit — the surviving snapshot is the empty table
+        under the SAME schema; history stays time-travelable."""
+        t, _ = _relation(plan.table(), "TRUNCATE TABLE")
+        cur = self.read_snapshot(t)
+        n = cur.count()
+        spec = self._log(t).snapshot().bucket_by if hasattr(self, "_log") else {}
+        if spec:
+            # a bucketed table keeps its declared layout across TRUNCATE
+            # (Hive semantics: truncation clears rows, not table metadata)
+            v = self.write_snapshot(
+                cur.limit(0),
+                t,
+                bucket_by=(spec["n"], list(spec["cols"])),
+                sort_by=list(spec.get("sort") or []) or None,
+            )
+        else:
+            v = self.write_snapshot(cur.limit(0), t)
+        return self._outcome(t, "TRUNCATE", v, n)
+
+    def _sql_delete(self, query: str, plan) -> DataFrame:
+        cond = plan.condition()  # the literal true when there is no WHERE
+        if _cls(cond) == "Literal" and cond.toString() == "true":
+            return self._sql_truncate(query, plan)
+        t, _ = _relation(plan.table(), "DELETE FROM")
+        self._require_txlog("row-level SQL DML")
+        res = self.delete(t, _where_filters(self.spark, query, cond))
+        return self._outcome(t, "DELETE", res["version"], res.get("rows_deleted"))
+
+    def _sql_update(self, query: str, plan) -> DataFrame:
+        t, _ = _relation(plan.table(), "UPDATE")
+        self._require_txlog("row-level SQL DML")
+        sets = {}
+        for a in _seq(plan.assignments()):
+            col = _column(a.key())
+            if col is None:
+                raise ValueError(
+                    f"UPDATE SET target {_text(query, a.key())!r} must be a "
+                    "bare column name"
+                )
+            sets[col] = _text(query, a.value())
+        cond = plan.condition()
+        where = (
+            _where_filters(self.spark, query, cond.get())
+            if cond.isDefined()
+            else []  # TableLog refuses a row op without a predicate
+        )
+        res = self.update(t, where, sets)
+        return self._outcome(t, "UPDATE", res["version"], res.get("rows_updated"))
+
+    def _sql_merge(self, query: str, plan) -> DataFrame:
+        """The FULL multi-branch MERGE (round 10): equality ON terms, then
+        WHEN MATCHED [AND cond] THEN UPDATE SET (*|col=expr,…) | DELETE,
+        WHEN NOT MATCHED [AND cond] THEN INSERT (*|(cols) VALUES (…)) and
+        WHEN NOT MATCHED BY SOURCE [AND cond] THEN UPDATE SET … | DELETE.
+        Spark's grammar takes the families in that order and refuses an
+        unconditional clause before a later one of its family. Anything
+        richer (a non-equality ON) is refused — use the merge() API.
+
+        MERGE WITH SCHEMA EVOLUTION (round 11; the Spark 4 / Delta
+        CDC-apply statement against an evolving source): source columns
+        absent from the table extend the schema as nullable, and clause
+        assignments may target them. Delta's session conf
+        spark.databricks.delta.schema.autoMerge.enabled switches the same
+        behavior on for every MERGE in the session."""
+        t, t_alias = _relation(plan.targetTable(), "MERGE target")
+        src, s_alias = _relation(plan.sourceTable(), "MERGE source")
+        evolve = plan.withSchemaEvolution() or (
+            str(
+                self.spark.conf.get(
+                    "spark.databricks.delta.schema.autoMerge.enabled", "false"
+                )
+            ).lower()
+            == "true"
+        )
+        self._require_txlog("MERGE INTO")
+        if t_alias.lower() == s_alias.lower():
+            raise ValueError(
+                f"MERGE target and source aliases collide ({t_alias!r}) — "
+                "alias one side differently"
+            )
+        keys = _merge_keys(query, plan.mergeCondition(), t_alias, s_alias)
+        if self.exists(src):
+            source = self.read(src)
+        elif self.spark.catalog.tableExists(src):
+            source = self.spark.table(src)
+        else:
+            raise ValueError(
+                f"MERGE source {src!r} is neither a warehouse table nor a "
+                "registered view"
+            )
+        matched, inserts, nmbs = (
+            _merge_clauses(query, actions, t_alias, s_alias, aliases)
+            for actions, aliases in (
+                (plan.matchedActions(), "ts"),
+                (plan.notMatchedActions(), "s"),
+                (plan.notMatchedBySourceActions(), "t_bare"),
+            )
+        )
+        res = self.merge(
+            source, t, keys,
+            matched_clauses=matched,
+            not_matched_clauses=inserts,
+            not_matched_by_source_clauses=nmbs or None,
+            schema_evolution=evolve,
+        )
+        return self._outcome(t, "MERGE", res["version"], res.get("rows_written"))
 
 
 class TxLogWarehouse(Warehouse):

@@ -10,6 +10,12 @@ from complex_data_pipeline_with_joins_and_multi_table_operations_spark.sources i
 SF_DIR = "/root/testdata/sf0.001"
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "slow: a long property run; deselect with -m 'not slow'"
+    )
+
+
 @pytest.fixture(scope="session")
 def spark(tmp_path_factory):
     wh = str(tmp_path_factory.mktemp("spark-warehouse"))

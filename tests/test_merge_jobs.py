@@ -1,4 +1,4 @@
-"""Job budget of a copy-on-write MERGE through ``Warehouse.sql``.
+"""Job budgets of SQL DML through ``Warehouse.sql``.
 
 At this scale a MERGE's cost is its Spark job count. The budget is one
 collect of the source keys (bounds, per-file membership and the
@@ -65,3 +65,30 @@ def test_sql_merge_runs_at_most_four_jobs(spark, tmp_path):
     want = {k: k * 2 for k in range(3000) if k != 3}
     want.update({4: -2, 2999: -3, 5000: 7})
     assert got == want
+
+
+def test_sql_delete_with_folded_date_runs_at_most_three_jobs(spark, tmp_path):
+    """The retention DELETE: its WHERE value folds to a DATE constant
+    without a job (the fold selects from an inline table, a local
+    relation), so the statement costs what the copy-on-write rewrite of
+    the candidate files costs."""
+    from datetime import date, timedelta
+
+    wh = TxLogWarehouse(spark, str(tmp_path / "wh"))
+    today = date.today()
+    rows = [(i, today - timedelta(days=i * 10)) for i in range(30)]
+    wh.write_snapshot(
+        spark.createDataFrame(rows, "id int, d date").repartition(3), "t"
+    )
+    res, delete_jobs = _jobs_in_group(
+        spark,
+        "delete-jobs",
+        lambda: wh.sql("DELETE FROM t WHERE d < date_sub(current_date(), 90)"),
+    )
+    row, result_jobs = _jobs_in_group(
+        spark, "delete-result", lambda: res.collect()[0]
+    )
+    assert delete_jobs <= 3, delete_jobs
+    assert result_jobs == 0, result_jobs
+    assert row.operation == "DELETE" and row.rows == 20
+    assert sorted(r.id for r in wh.read_snapshot("t").collect()) == list(range(10))

@@ -735,7 +735,7 @@ def test_sql_where_parser_agrees_with_spark(spark, terms):
     WHERE selects for the same clause — on data including boundary
     values, so off-by-one operator mix-ups can't hide."""
     from complex_data_pipeline_with_joins_and_multi_table_operations_spark.plans.pipeline import (
-        _parse_where_conjunction,
+        _where_dnf,
     )
     from complex_data_pipeline_with_joins_and_multi_table_operations_spark.sources.txlog import (
         _as_column,
@@ -754,7 +754,7 @@ def test_sql_where_parser_agrees_with_spark(spark, terms):
     expected = sorted(
         r.id for r in spark.sql(f"SELECT id FROM __wt WHERE {clause}").collect()
     )
-    filters = _parse_where_conjunction(clause)
+    (filters,) = _where_dnf(spark, clause)  # an AND has one disjunct
     got = df
     for f in filters:
         got = got.filter(_as_column(f))
@@ -798,7 +798,7 @@ def test_sql_where_dnf_parser_agrees_with_spark(spark, clause):
     file pruning (union of per-disjunct candidate sets) can narrow the
     scan but never the semantics."""
     from complex_data_pipeline_with_joins_and_multi_table_operations_spark.plans.pipeline import (
-        _parse_where_dnf,
+        _where_dnf,
     )
     from complex_data_pipeline_with_joins_and_multi_table_operations_spark.sources.txlog import (
         _dnf_column,
@@ -812,7 +812,7 @@ def test_sql_where_dnf_parser_agrees_with_spark(spark, clause):
         r.id
         for r in spark.sql(f"SELECT id FROM __wt_dnf WHERE {clause}").collect()
     )
-    dnf = _parse_where_dnf(clause)
+    dnf = _where_dnf(spark, clause)
     got = df.filter(_dnf_column(dnf))
     assert sorted(r.id for r in got.select("id").collect()) == expected
 
@@ -822,7 +822,7 @@ def test_sql_where_dnf_delete_matches_spark_semantics(spark, tmp_path):
     multiple files: DELETE through the DNF path keeps exactly the rows
     Spark's WHERE complement keeps."""
     from complex_data_pipeline_with_joins_and_multi_table_operations_spark.plans.pipeline import (
-        _parse_where_dnf,
+        _where_dnf,
     )
     from complex_data_pipeline_with_joins_and_multi_table_operations_spark.sources.txlog import (
         TableLog,
@@ -833,7 +833,7 @@ def test_sql_where_dnf_delete_matches_spark_semantics(spark, tmp_path):
     df = spark.createDataFrame(rows, "id long, v long").repartition(4)
     log = TableLog(spark, str(tmp_path / "t"))
     log.write(df)
-    log.delete(_parse_where_dnf(clause))
+    log.delete(_where_dnf(spark, clause))
     kept = sorted(r.id for r in log.read().collect())
     df.createOrReplaceTempView("__wt_del")
     want = sorted(
@@ -882,12 +882,16 @@ _leaf9n = st.tuples(_leaf9, st.booleans()).map(
 
 _tree9 = st.recursive(
     _leaf9n,
-    lambda kids: st.tuples(
-        kids, st.sampled_from(["AND", "OR"]), kids, st.booleans()
-    ).map(
-        lambda t: (
-            f"({t[0]}) {t[1]} ({t[2]})" if t[3] else f"{t[0]} {t[1]} {t[2]}"
-        )
+    lambda kids: st.one_of(
+        st.tuples(
+            kids, st.sampled_from(["AND", "OR"]), kids, st.booleans()
+        ).map(
+            lambda t: (
+                f"({t[0]}) {t[1]} ({t[2]})" if t[3] else f"{t[0]} {t[1]} {t[2]}"
+            )
+        ),
+        # NOT over a parenthesized group: pushed to the leaves by De Morgan
+        kids.map(lambda k: f"NOT ({k})"),
     ),
     max_leaves=4,
 )
@@ -901,7 +905,7 @@ def test_sql_where_round9_grammar_agrees_with_spark(spark, clause):
     NULLs: the DNF parse + _dnf_column must select exactly the rows
     Spark's own SQL WHERE selects — SQL tri-state included."""
     from complex_data_pipeline_with_joins_and_multi_table_operations_spark.plans.pipeline import (
-        _parse_where_dnf,
+        _where_dnf,
     )
     from complex_data_pipeline_with_joins_and_multi_table_operations_spark.sources.txlog import (
         _dnf_column,
@@ -917,7 +921,7 @@ def test_sql_where_round9_grammar_agrees_with_spark(spark, clause):
         r.id
         for r in spark.sql(f"SELECT id FROM __wt9 WHERE {clause}").collect()
     )
-    dnf = _parse_where_dnf(clause)
+    dnf = _where_dnf(spark, clause)
     got = df.filter(_dnf_column(dnf))
     assert sorted(r.id for r in got.select("id").collect()) == expected
 
@@ -931,7 +935,7 @@ def test_sql_where_round9_delete_matches_spark(spark, tmp_path_factory, clause):
     and membership pruning — can narrow the scan, never the
     semantics)."""
     from complex_data_pipeline_with_joins_and_multi_table_operations_spark.plans.pipeline import (
-        _parse_where_dnf,
+        _where_dnf,
     )
     from complex_data_pipeline_with_joins_and_multi_table_operations_spark.sources.txlog import (
         TableLog,
@@ -946,7 +950,7 @@ def test_sql_where_round9_delete_matches_spark(spark, tmp_path_factory, clause):
         spark, str(tmp_path_factory.mktemp("r9del") / "t")
     )
     log.write(df)
-    log.delete(_parse_where_dnf(clause))
+    log.delete(_where_dnf(spark, clause))
     kept = sorted(r.id for r in log.read().collect())
     df.createOrReplaceTempView("__wt9_del")
     want = sorted(

@@ -227,12 +227,20 @@ def test_sql_merge_clause_order_rules(spark, tmp_path):
     wh.write_snapshot(spark.createDataFrame(TARGET, T_SCHEMA), "t")
     spark.createDataFrame([(1, "z", 1)], "id int, name string, val int"
                           ).createOrReplaceTempView("one_r10")
-    with pytest.raises(ValueError, match="LAST"):
+    with pytest.raises(ValueError, match="NON_LAST_MATCHED_CLAUSE_OMIT_CONDITION"):
         wh.sql(
             "MERGE INTO t USING one_r10 AS s ON t.id = s.id "
             "WHEN MATCHED THEN UPDATE SET * "
             "WHEN MATCHED AND s.val > 0 THEN DELETE "
             "WHEN NOT MATCHED THEN INSERT *"
+        )
+    # Spark's grammar takes the clause families in order (MATCHED, NOT
+    # MATCHED, NOT MATCHED BY SOURCE): interleaving them does not parse
+    with pytest.raises(ValueError, match="PARSE_SYNTAX_ERROR"):
+        wh.sql(
+            "MERGE INTO t USING one_r10 AS s ON t.id = s.id "
+            "WHEN NOT MATCHED THEN INSERT * "
+            "WHEN MATCHED THEN UPDATE SET *"
         )
     with pytest.raises(ValueError, match="at least one WHEN"):
         wh.sql("MERGE INTO t USING one_r10 AS s ON t.id = s.id")
@@ -293,7 +301,9 @@ def test_sql_merge_column_list_and_multi_insert(spark, tmp_path):
     got = sorted((r.id, r.name, r.val) for r in wh.read_snapshot("t").collect())
     assert got == results["cow"]
     # ordering rule applies to insert clauses too
-    with pytest.raises(ValueError, match="LAST WHEN NOT MATCHED"):
+    with pytest.raises(
+        ValueError, match="NON_LAST_NOT_MATCHED_BY_TARGET_CLAUSE_OMIT_CONDITION"
+    ):
         wh.sql(
             "MERGE INTO t USING ins_r10 AS s ON t.id = s.id "
             "WHEN NOT MATCHED THEN INSERT * "
@@ -668,9 +678,10 @@ def test_column_defaults(spark, tmp_path):
 
 
 def test_insert_values_boolean_literal_guard(spark, tmp_path):
-    """Advice (low): a quoted 'false' (or any string) must not coerce to
-    True via bool() — TRUE/FALSE literals (and their quoted spellings)
-    parse, everything else refuses."""
+    """Advice (low): a quoted 'false' must not coerce to True via
+    bool(). VALUES cells cast with Spark's own string->boolean CAST:
+    TRUE/FALSE literals and the spellings that cast accepts ('false',
+    'yes', …) load as booleans, and a string it cannot cast refuses."""
     wh = TxLogWarehouse(spark, str(tmp_path / "wh"))
     wh.write_snapshot(
         spark.createDataFrame([(1, True)], "id int, flag boolean"), "t"
@@ -681,5 +692,7 @@ def test_insert_values_boolean_literal_guard(spark, tmp_path):
     wh.sql("INSERT INTO t VALUES (4, 'false')")
     got = {r.id: r.flag for r in wh.read_snapshot("t").collect()}
     assert got[4] is False
+    wh.sql("INSERT INTO t VALUES (5, 'yes')")
+    assert wh.sql("SELECT flag FROM t WHERE id = 5").head().flag is True
     with pytest.raises(ValueError, match="BOOLEAN"):
-        wh.sql("INSERT INTO t VALUES (5, 'yes')")
+        wh.sql("INSERT INTO t VALUES (6, 'maybe')")

@@ -19,7 +19,7 @@ from complex_data_pipeline_with_joins_and_multi_table_operations_spark.operators
 )
 from complex_data_pipeline_with_joins_and_multi_table_operations_spark.plans.pipeline import (
     TxLogWarehouse,
-    _fold_date_fn,
+    _where_dnf,
 )
 from complex_data_pipeline_with_joins_and_multi_table_operations_spark.sources.txlog import (
     TableLog,
@@ -27,9 +27,16 @@ from complex_data_pipeline_with_joins_and_multi_table_operations_spark.sources.t
 
 
 # ---------------------------------------------------------------------------
-# advice 1: _fold_date_fn folds in the SESSION timezone and truncates
-# datetime bases to DATE in date_sub/date_add (Spark's own semantics)
+# advice 1: a DML WHERE value folds in the SESSION timezone and
+# date_sub/date_add truncate datetime bases to DATE (Spark's own semantics,
+# since Spark evaluates the fold)
 # ---------------------------------------------------------------------------
+
+
+def _folded(spark, value_sql: str):
+    """The constant a WHERE leaf's value side folds to."""
+    [[(_col, _op, value)]] = _where_dnf(spark, f"x = {value_sql}")
+    return value
 
 
 @pytest.mark.parametrize(
@@ -40,7 +47,7 @@ def test_fold_current_date_matches_spark_in_session_tz(spark, tz):
     spark.conf.set("spark.sql.session.timeZone", tz)
     try:
         for _attempt in range(2):  # re-try once across a midnight race
-            folded = _fold_date_fn("current_date()")
+            folded = _folded(spark, "current_date()")
             spark_val = spark.sql("SELECT current_date()").head()[0]
             if folded == spark_val:
                 break
@@ -56,7 +63,7 @@ def test_fold_date_sub_of_now_truncates_to_date(spark):
     spark.conf.set("spark.sql.session.timeZone", "Etc/GMT+12")
     try:
         for _attempt in range(2):
-            folded = _fold_date_fn("date_sub(now(), 90)")
+            folded = _folded(spark, "date_sub(now(), 90)")
             spark_val = spark.sql(
                 "SELECT date_sub(now(), 90)"
             ).head()[0]
@@ -71,23 +78,27 @@ def test_fold_date_sub_of_now_truncates_to_date(spark):
 
 
 def test_fold_timestamp_matches_spark_session_clock(spark):
-    """now() folds to session-zone WALL time — the rendering Spark
-    itself uses when a naive datetime literal enters a predicate —
-    within a minute of date_format(current_timestamp()) under a
-    far-offset zone. (Collecting the timestamp directly would render
-    it in the DRIVER's zone and prove nothing.)"""
+    """now() folds to the instant Spark's clock reads: the row predicate
+    compares against ``F.lit(folded)``, and that literal, rendered in the
+    session zone, is within a minute of date_format(current_timestamp())
+    under a far-offset zone. (A session-zone wall time handed to F.lit
+    would read as driver-local time, off by the difference of the zones.)"""
     from datetime import datetime
 
     old = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "Pacific/Kiritimati")
     try:
-        folded = _fold_date_fn("now()")
+        folded = _folded(spark, "now()")
+        as_lit = spark.range(1).select(
+            F.date_format(F.lit(folded), "yyyy-MM-dd HH:mm:ss")
+        ).head()[0]
         rendered = spark.sql(
             "SELECT date_format(current_timestamp(), "
             "'yyyy-MM-dd HH:mm:ss')"
         ).head()[0]
+        lit_wall = datetime.strptime(as_lit, "%Y-%m-%d %H:%M:%S")
         spark_wall = datetime.strptime(rendered, "%Y-%m-%d %H:%M:%S")
-        assert abs((folded - spark_wall).total_seconds()) < 60
+        assert abs((lit_wall - spark_wall).total_seconds()) < 60
     finally:
         spark.conf.set("spark.sql.session.timeZone", old)
 
@@ -1195,11 +1206,10 @@ def test_insert_default_cells_resolve_once_per_column(
     wh.sql("ALTER TABLE t ALTER COLUMN n SET DEFAULT 7")
 
     real_sql = spark.sql
-    cast_calls = {"n": 0}
+    queries = []
 
     def counting_sql(q, *a, **k):
-        if q.lstrip().startswith("SELECT CAST(("):
-            cast_calls["n"] += 1
+        queries.append(q)
         return real_sql(q, *a, **k)
 
     monkeypatch.setattr(spark, "sql", counting_sql)
@@ -1208,9 +1218,10 @@ def test_insert_default_cells_resolve_once_per_column(
         "(2, DEFAULT, DEFAULT), (3, DEFAULT, 9), (4, DEFAULT, DEFAULT)"
     )
     monkeypatch.undo()
-    # two distinct columns used DEFAULT → exactly two evaluations,
-    # not one per cell (5 cells here)
-    assert cast_calls["n"] == 2
+    # every DEFAULT cell (5 here) resolves inside the one select that
+    # casts the VALUES rows: one driver query for the statement, not one
+    # per cell or per column
+    assert len(queries) == 1, queries
     rows = {
         (r.id, r.tag, r.n) for r in wh.read_snapshot("t").collect()
     }

@@ -175,6 +175,7 @@ def test_add_constraint_rejects_spark_only_dialect(spark, tmp_path):
         "(id = 1 OR id = 2) AND (v < 0 OR v > 3)",
         "((id <= 4))",
         "id < 3 AND v <= 2 OR id > 12",
+        "NOT (id < 3 OR v > 5) AND id <> 9",
     ],
 )
 def test_where_dnf_agrees_with_spark_sql(spark, clause):
@@ -182,7 +183,7 @@ def test_where_dnf_agrees_with_spark_sql(spark, clause):
     select exactly the rows Spark's own SQL WHERE selects (extending
     test_properties' AND-only agreement to the round-8 grammar)."""
     from complex_data_pipeline_with_joins_and_multi_table_operations_spark.plans.pipeline import (
-        _parse_where_dnf,
+        _where_dnf,
     )
     from complex_data_pipeline_with_joins_and_multi_table_operations_spark.sources.txlog import (
         _dnf_column,
@@ -195,7 +196,7 @@ def test_where_dnf_agrees_with_spark_sql(spark, clause):
     expected = sorted(
         r.id for r in spark.sql(f"SELECT id FROM __wt8 WHERE {clause}").collect()
     )
-    got = df.filter(_dnf_column(_parse_where_dnf(clause)))
+    got = df.filter(_dnf_column(_where_dnf(spark, clause)))
     assert sorted(r.id for r in got.select("id").collect()) == expected
 
 

@@ -2384,6 +2384,9 @@ def test_sql_dml_delete_and_update(spark, tmp_path):
     assert r.operation == "UPDATE" and r.rows == 1
     row = wh.sql("SELECT * FROM t WHERE id = 3").head()
     assert row.v == 30 and row.even is True
+    # TRUE/FALSE as bare values (Spark's parser shares those literals)
+    wh.sql("UPDATE t SET even = FALSE WHERE id = 3 AND even = TRUE")
+    assert wh.sql("SELECT even FROM t WHERE id = 3").head().even is False
     # OR predicates are supported since round 8 (DNF file pruning —
     # tests/test_round8.py); functions/subqueries still refuse loudly
     with pytest.raises(ValueError, match="cannot parse WHERE term"):

@@ -98,11 +98,15 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # local mode runs all 32 executor threads inside the driver JVM; at the
     # default 8g heap an occasional full GC showed up as a 6× outlier on one
-    # LSH query. Plenty of headroom on the bench box.
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "16g")
+    # LSH query, so the heap is 16g where the host has room for it
     from complex_data_pipeline_with_joins_and_multi_table_operations_spark import (
         get_spark,
     )
+    from complex_data_pipeline_with_joins_and_multi_table_operations_spark.session import (
+        bench_driver_memory,
+    )
+
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", bench_driver_memory())
     from complex_data_pipeline_with_joins_and_multi_table_operations_spark.plans import (
         QUERIES,
     )

@@ -21,7 +21,14 @@ the classic small-files problem, so the CLI exposes --partition-daily).
 from __future__ import annotations
 
 import argparse
+import errno
+import json
+import logging
 import os
+import re
+import shutil
+import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,283 +38,95 @@ from ..sources import Catalog
 from ..sources.io import local_frame
 
 
-def _split_in_list(s: str) -> list[str]:
-    """Split a comma-separated SQL fragment on TOP-LEVEL commas,
-    respecting ''-escaped string literals (a quoted comma is part of
-    the literal) and parenthesized sub-expressions (``round(x, 2)``
-    stays one item) — used for IN-list bodies and UPDATE SET
-    assignment lists."""
-    out: list[str] = []
-    cur: list[str] = []
-    i, n, depth = 0, len(s), 0
-    while i < n:
-        ch = s[i]
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if s[j] == "'" and j + 1 < n and s[j + 1] == "'":
-                    j += 2
-                    continue
-                if s[j] == "'":
-                    break
-                j += 1
-            if j >= n:
-                raise ValueError(f"unterminated string literal in {s!r}")
-            cur.append(s[i : j + 1])
-            i = j + 1
-        elif ch == "," and depth == 0:
-            out.append("".join(cur).strip())
-            cur = []
-            i += 1
-        else:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            cur.append(ch)
-            i += 1
-    out.append("".join(cur).strip())
-    return out
-
-
-def _split_coldefs(s: str) -> list[str]:
-    """Split a CREATE TABLE column list on TOP-LEVEL commas. Unlike
-    ``_split_in_list`` this also respects ``<>`` nesting, because DDL
-    types spell complex types with angle brackets whose commas are not
-    separators (``MAP<STRING, INT>``, ``STRUCT<a: INT, b: STRING>``) —
-    but ONLY here: in expression lists ``<`` is the comparison operator
-    and must not open a bracket scope."""
-    out: list[str] = []
-    cur: list[str] = []
-    i, n, depth = 0, len(s), 0
-    while i < n:
-        ch = s[i]
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if s[j] == "'" and j + 1 < n and s[j + 1] == "'":
-                    j += 2
-                    continue
-                if s[j] == "'":
-                    break
-                j += 1
-            if j >= n:
-                raise ValueError(f"unterminated string literal in {s!r}")
-            cur.append(s[i : j + 1])
-            i = j + 1
-        elif ch == "," and depth == 0:
-            out.append("".join(cur).strip())
-            cur = []
-            i += 1
-        else:
-            if ch in "(<":
-                depth += 1
-            elif ch in ")>":
-                depth -= 1
-            cur.append(ch)
-            i += 1
-    out.append("".join(cur).strip())
-    return out
-
-
-def _parse_column_defs(
-    body: str,
-) -> tuple[list[str], dict[str, dict], dict[str, str]]:
-    """Parse a CREATE TABLE column list (round 12): each item is
-    ``name TYPE`` optionally followed by ONE of ``GENERATED ALWAYS AS
-    (expr)``, ``GENERATED ALWAYS AS IDENTITY [(START WITH n [INCREMENT
-    BY m])]`` or ``DEFAULT <expr>`` (Delta's declare-time column
-    surface). Returns (ddl "name type" fragments, generated specs,
-    default exprs). The constraint keyword is located at TOP level only
-    — a keyword inside the type's angle brackets or an expression's
-    parens never splits."""
-    import re
-
-    fields: list[str] = []
-    generated: dict[str, dict] = {}
-    defaults: dict[str, str] = {}
-    kw = re.compile(r"\b(GENERATED|DEFAULT|NOT)\b", re.IGNORECASE)
-    for item in _split_coldefs(body):
-        m = re.match(r"`?(\w+)`?\s+(.+)$", item, re.DOTALL)
-        if not m:
-            raise ValueError(
-                f"cannot parse column definition {item!r}; expected "
-                "`name TYPE [GENERATED ALWAYS AS …|DEFAULT <expr>]`"
-            )
-        name, rest = m.group(1), m.group(2).strip()
-        # first top-level constraint keyword (outside (), <>, '')
-        idx = None
-        depth, i, n = 0, 0, len(rest)
-        while i < n:
-            ch = rest[i]
-            if ch == "'":
-                j = rest.find("'", i + 1)
-                i = n if j < 0 else j + 1
-                continue
-            if ch in "(<":
-                depth += 1
-            elif ch in ")>":
-                depth -= 1
-            elif depth == 0:
-                km = kw.match(rest, i)
-                if km and (i == 0 or not rest[i - 1].isalnum()):
-                    idx = i
-                    break
-            i += 1
-        type_part = (rest[:idx] if idx is not None else rest).strip()
-        cons = rest[idx:].strip() if idx is not None else ""
-        if not type_part:
-            raise ValueError(f"column {name!r} is missing a type: {item!r}")
-        fields.append(f"{name} {type_part}")
-        if not cons:
-            continue
-        m_id = re.match(
-            r"GENERATED\s+ALWAYS\s+AS\s+IDENTITY"
-            r"(?:\s*\(\s*START\s+WITH\s+(-?\d+)"
-            r"(?:\s+INCREMENT\s+BY\s+(-?\d+))?\s*\))?\s*$",
-            cons,
-            re.IGNORECASE,
-        )
-        m_ex = re.match(
-            r"GENERATED\s+ALWAYS\s+AS\s*\((.+)\)\s*$",
-            cons,
-            re.IGNORECASE | re.DOTALL,
-        )
-        m_df = re.match(r"DEFAULT\s+(.+?)\s*$", cons, re.IGNORECASE | re.DOTALL)
-        if m_id:
-            generated[name] = {
-                "identity": {
-                    "start": int(m_id.group(1) or 1),
-                    "step": int(m_id.group(2) or 1),
-                }
-            }
-        elif m_ex:
-            generated[name] = {"expr": m_ex.group(1).strip()}
-        elif m_df:
-            defaults[name] = m_df.group(1).strip()
-        else:
-            raise ValueError(
-                f"unsupported column constraint {cons!r} on {name!r} "
-                "(supported: GENERATED ALWAYS AS (expr) | GENERATED "
-                "ALWAYS AS IDENTITY [(START WITH n INCREMENT BY m)] | "
-                "DEFAULT <expr>)"
-            )
-    return fields, generated, defaults
-
-
-def _unq_sql(s: str) -> str:
-    s = s.strip()
-    if len(s) >= 2 and s[0] == s[-1] and s[0] in "'\"":
-        return s[1:-1].replace("''", "'")
-    return s
-
-
-def _parse_props_body(body: str) -> dict[str, str]:
-    """``'k' = 'v', …`` inside a TBLPROPERTIES clause → dict."""
-    pairs: dict[str, str] = {}
-    for item in _split_in_list(body):
-        k, eq, val = item.partition("=")
-        if not eq:
-            raise ValueError(
-                f"cannot parse TBLPROPERTIES pair {item!r}; "
-                "expected 'key' = 'value'"
-            )
-        pairs[_unq_sql(k)] = _unq_sql(val)
-    return pairs
-
-
-def _outside_literal_spans(s: str) -> list[tuple[int, int]]:
-    """(start, end) spans of ``s`` OUTSIDE ''-escaped string literals —
-    the scanner under the alias canonicalizer, so an alias-lookalike
-    inside a string literal is never rewritten."""
-    spans = []
-    i, n, start = 0, len(s), 0
-    while i < n:
-        if s[i] == "'":
-            spans.append((start, i))
-            j = i + 1
-            while j < n:
-                if s[j] == "'" and j + 1 < n and s[j + 1] == "'":
-                    j += 2
-                    continue
-                if s[j] == "'":
-                    break
-                j += 1
-            if j >= n:
-                raise ValueError(f"unterminated string literal in {s!r}")
-            i = j + 1
-            start = i
-        else:
-            i += 1
-    spans.append((start, n))
-    return spans
-
-
-def _canon_merge_expr(
-    expr: str, t_alias: str, s_alias: str, aliases: str
-) -> str:
-    """Rewrite the statement's aliases to the engine's canonical ``t``/
-    ``s`` in ONE pass (so the swapped alias pair ``target AS s, source
-    AS t`` maps correctly — sequential substitution would collapse both
-    onto one side), skipping string literals. ``aliases`` names the rows
-    the clause may see: ``"ts"`` (matched: both), ``"t_bare"`` (NOT
-    MATCHED BY SOURCE: the target row, bare column names), ``"s"``
-    (NOT MATCHED insert condition: the source row)."""
-    import re as _re
-
-    pat = _re.compile(
-        rf"\b({_re.escape(t_alias)}|{_re.escape(s_alias)})\s*\.\s*",
-        _re.IGNORECASE,
-    )
-
-    def repl(m: "_re.Match") -> str:
-        is_t = m.group(1).lower() == t_alias.lower()
-        if aliases == "ts":
-            return "t." if is_t else "s."
-        if aliases == "t_bare":
-            if not is_t:
-                raise ValueError(
-                    f"a NOT MATCHED BY SOURCE clause sees only the target "
-                    f"row; {m.group(0).strip()!r} references the source"
-                )
-            return ""
-        if is_t:
-            raise ValueError(
-                f"a NOT MATCHED insert condition sees only the source "
-                f"row; {m.group(0).strip()!r} references the target"
-            )
-        return "s."
-
-    out = []
-    prev = 0
-    for lo, hi in _outside_literal_spans(expr):
-        out.append(expr[prev:lo])
-        out.append(pat.sub(repl, expr[lo:hi]))
-        prev = hi
-    out.append(expr[prev:])
-    return "".join(out).strip()
-
-
-# -- SQL DML through Spark's own parser --------------------------------------
+# -- SQL through Spark's own parser ------------------------------------------
 #
-# Warehouse.sql hands DELETE, TRUNCATE, UPDATE, MERGE and INSERT to Spark's
-# parser and reads the unresolved logical plan it returns: the grammar,
-# quoting, clause-order rules and syntax errors are Spark's. Every parsed
-# node carries the span of statement text it came from, so a MERGE condition
-# or SET value reaches the engine as the statement's exact text.
+# Warehouse.sql hands every statement Spark's grammar knows to Spark's parser
+# and reads the unresolved logical plan it returns: the grammar, quoting,
+# clause-order rules and syntax errors are Spark's. Every parsed node carries
+# the span of statement text it came from, so a MERGE condition or SET value
+# reaches the engine as the statement's exact text, and a time-travel
+# reference is replaced by its span.
 
 
 def _parse_sql(spark: SparkSession, method: str, text: str):
     """Spark's parser on ``text`` (``method`` is ``parsePlan`` or
     ``parseExpression``); a syntax error raises ValueError with Spark's
-    message."""
+    message. PySpark logs each ParseException it converts, Java stack and
+    all, to stderr; the ValueError carries the message, so that logger is
+    silenced for this one call."""
     from pyspark.errors import ParseException
+    from pyspark.logger import PySparkLogger
 
     parser = spark._jsparkSession.sessionState().sqlParser()
+    log = PySparkLogger.getLogger("SQLQueryContextLogger")
+    level = log.level
+    log.setLevel(logging.CRITICAL)
     try:
-        return getattr(parser, method)(text)
+        try:
+            return getattr(parser, method)(text)
+        except ParseException as e:
+            if e.getCondition() != "UNSUPPORTED_FEATURE.SET_TABLE_PROPERTY":
+                raise
+            plan = _with_reserved_props(spark, text)
+            if plan is None:
+                raise
+            return plan
     except ParseException as e:
         raise ValueError(str(e)) from e
+    finally:
+        log.setLevel(level)
+
+
+def _with_reserved_props(spark: SparkSession, text: str):
+    """The plan of a CREATE [OR REPLACE] TABLE or ALTER TABLE … SET
+    TBLPROPERTIES whose TBLPROPERTIES name a key Spark reserves for its
+    catalog (owner, location, provider, external, is_managed_location),
+    else None. Spark's parser refuses those keys, or drops them under
+    ``spark.sql.legacy.notReserveProperties``; a table here stores them as
+    plain properties. So the statement is parsed with the keys dropped,
+    and its property map is swapped for the one Spark's AST builder reads
+    from the statement's TBLPROPERTIES parse tree."""
+    from py4j.java_gateway import get_field
+
+    jvm, state = spark._jvm, spark._jsparkSession.sessionState()
+    conf, legacy = state.conf(), "spark.sql.legacy.notReserveProperties"
+    old = conf.getConfString(legacy) if conf.contains(legacy) else None
+    conf.setConfString(legacy, "true")
+    try:
+        plan = state.sqlParser().parsePlan(text)
+    finally:
+        if old is None:
+            conf.unsetConf(legacy)
+        else:
+            conf.setConfString(legacy, old)
+    k = _cls(plan)
+    if k not in ("SetTableProperties", "CreateTable", "CreateTableAsSelect",
+                 "ReplaceTableAsSelect"):
+        return None
+    p, antlr = jvm.org.apache.spark.sql.catalyst.parser, jvm.org.antlr.v4.runtime
+    tree = p.SqlBaseParser(antlr.CommonTokenStream(p.SqlBaseLexer(
+        p.UpperCaseCharStream(antlr.CharStreams.fromString(text))
+    )))
+    tree.removeErrorListeners()  # Spark's parser accepted the statement
+    tree.addParseListener(getattr(getattr(p, "PostProcessor$"), "MODULE$"))
+    stmt = tree.singleStatement().statement()
+    build = state.sqlParser().astBuilder().visitPropertyKeyValues
+    if k == "SetTableProperties":
+        return _copy_with(spark, plan, "properties", build(stmt.propertyList()))
+    props = build(get_field(stmt.createTableClauses(), "tableProps"))
+    spec = _copy_with(spark, plan.tableSpec(), "properties", props)
+    return _copy_with(spark, plan, "tableSpec", spec)
+
+
+def _copy_with(spark: SparkSession, node, field: str, value):
+    """A copy of the plan or expression ``node`` with its constructor
+    field ``field`` set to ``value``."""
+    n = node.productArity()
+    args = spark.sparkContext._gateway.new_array(spark._jvm.Object, n)
+    for i in range(n):
+        name = node.productElementName(i)
+        args[i] = value if name == field else node.productElement(i)
+    return node.makeCopy(args)
 
 
 def _cls(node) -> str:
@@ -318,17 +137,48 @@ def _seq(s) -> list:
     return [s.apply(i) for i in range(s.size())]
 
 
+def _span(node) -> tuple[int, int]:
+    """The [start, stop) offsets of the statement text parsed into ``node``.
+    Spark positions a predicate (``IN``, ``IS NULL``, ``BETWEEN``, ``LIKE``
+    …) from its keyword on, so its text starts where its leftmost operand
+    does: down the chain of first children, one that ends before the start
+    found so far moves the start back to its own."""
+    o = node.origin()
+    lo, hi = o.startIndex().get(), o.stopIndex().get() + 1
+    kids = node.children()
+    while not kids.isEmpty():
+        first, kids = kids.head(), kids.head().children()
+        if _cls(first) == "Literal" and first.sql() in ("true", "false"):
+            break  # a shared constant: see _text
+        o = first.origin()
+        if not o.stopIndex().isDefined():
+            break
+        c_lo, c_hi = o.startIndex().get(), o.stopIndex().get() + 1
+        if c_hi <= lo:
+            lo = c_lo  # an operand left of the predicate's keyword
+        elif not lo <= c_lo < c_hi <= hi:
+            break  # a position from outside this node (a bare EXISTS)
+    return lo, hi
+
+
 def _text(sql: str, node) -> str:
     """The exact text of ``sql`` that Spark parsed into ``node``. The
     parser hands out TRUE and FALSE as shared constants whose position,
     if any, is from whichever statement first made them; their SQL is
-    their text."""
-    if _cls(node) == "Literal":
+    their text. A bare EXISTS takes its enclosing statement's position."""
+    k = _cls(node)
+    if k == "Literal":
         text = node.sql()
         if text in ("true", "false"):
             return text
-    o = node.origin()
-    return sql[o.startIndex().get() : o.stopIndex().get() + 1]
+    lo, hi = _span(node)
+    text = sql[lo:hi]
+    if k == "Exists" and not text.lstrip("( ").upper().startswith("EXISTS"):
+        raise ValueError(
+            "Spark's parser records no position for a bare EXISTS (…); "
+            "write it in parentheses"
+        )
+    return text
 
 
 def _column(e) -> str | None:
@@ -345,14 +195,190 @@ def _relation(node, role: str) -> tuple[str, str]:
     alias = None
     if _cls(node) == "SubqueryAlias":
         alias, node = node.alias(), node.child()
-    parts = (
-        _seq(node.multipartIdentifier())
-        if _cls(node) in ("UnresolvedRelation", "UnresolvedTable")
-        else []
-    )
+    k = _cls(node)
+    if k == "UnresolvedIdentifier":
+        parts = _seq(node.nameParts())
+    elif k in ("UnresolvedRelation", "UnresolvedTable", "UnresolvedTableOrView"):
+        parts = _seq(node.multipartIdentifier())
+    else:
+        parts = []
     if len(parts) != 1:
         raise ValueError(f"{role} must name a table or view (one-part name)")
     return parts[0], alias or parts[0]
+
+
+def _field(node) -> str:
+    """A top-level column named by an ALTER TABLE statement."""
+    parts = _seq(node.name())
+    if len(parts) != 1:
+        raise ValueError(
+            f"ALTER TABLE names column {'.'.join(parts)!r}: nested fields "
+            "are not supported"
+        )
+    return parts[0]
+
+
+def _refuse(clauses: dict, context: str, supported: str) -> None:
+    """Raise for the first clause present that the backends cannot honour,
+    so that no clause of a statement is dropped silently."""
+    bad = [clause for clause, present in clauses.items() if present]
+    if bad:
+        raise ValueError(
+            f"unsupported {context}: {bad[0]} (supported: {supported})"
+        )
+
+
+def _props(m) -> dict[str, str]:
+    """A parsed TBLPROPERTIES map as a dict."""
+    return {kv._1(): kv._2() for kv in _seq(m.toSeq())}
+
+
+def _column_defs(cols) -> tuple:
+    """A parsed CREATE TABLE column list as (schema, generated specs,
+    DEFAULT expressions): Delta's declare-time column surface. A column
+    takes ``GENERATED ALWAYS AS (expr)``, ``GENERATED ALWAYS AS IDENTITY
+    [(START WITH n [INCREMENT BY m])]`` or ``DEFAULT <expr>``; every other
+    column clause raises."""
+    from pyspark.sql.types import StructField, StructType, _parse_datatype_json_string
+
+    fields, generated, defaults = [], {}, {}
+    for c in _seq(cols):
+        name, ident = c.name(), c.identityColumnSpec()
+        _refuse(
+            {
+                "NOT NULL": not c.nullable(),
+                "COMMENT": c.comment().isDefined(),
+                "GENERATED BY DEFAULT AS IDENTITY": ident.isDefined()
+                and ident.get().isAllowExplicitInsert(),
+            },
+            f"column constraint on {name!r}",
+            "GENERATED ALWAYS AS (expr) | GENERATED ALWAYS AS IDENTITY "
+            "[(START WITH n INCREMENT BY m)] | DEFAULT <expr>",
+        )
+        fields.append(
+            StructField(name, _parse_datatype_json_string(c.dataType().json()))
+        )
+        if ident.isDefined():
+            spec = ident.get()
+            generated[name] = {
+                "identity": {"start": spec.getStart(), "step": spec.getStep()}
+            }
+        elif c.generationExpression().isDefined():
+            generated[name] = {"expr": c.generationExpression().get()}
+        if c.defaultValue().isDefined():
+            defaults[name] = c.defaultValue().get().originalSQL()
+    return StructType(fields), generated, defaults
+
+
+def _layout(plan) -> dict:
+    """The layout clauses of a parsed CREATE TABLE [AS SELECT] as
+    ``create_table``/``write_snapshot`` keywords: PARTITIONED BY columns,
+    CLUSTERED BY … [SORTED BY …] INTO n BUCKETS and TBLPROPERTIES. Every
+    other clause raises."""
+    spec = plan.tableSpec()
+    supported = "PARTITIONED BY | CLUSTERED BY … INTO n BUCKETS | TBLPROPERTIES"
+    _refuse(
+        {
+            "IF NOT EXISTS": _cls(plan) != "ReplaceTableAsSelect"
+            and plan.ignoreIfExists(),
+            "USING": spec.provider().isDefined(),
+            "OPTIONS": not spec.optionExpression().options().isEmpty(),
+            "LOCATION": spec.location().isDefined(),
+            "COMMENT": spec.comment().isDefined(),
+            "ROW FORMAT / STORED AS": spec.serde().isDefined(),
+            "EXTERNAL": spec.external(),
+            "DEFAULT COLLATION": spec.collation().isDefined(),
+            "a table constraint": not spec.constraints().isEmpty(),
+        },
+        "CREATE TABLE clause",
+        supported,
+    )
+
+    def col(ref) -> str:  # a nested name matches no column of the table
+        return ".".join(ref.fieldNames())
+
+    out: dict = {}
+    for tr in _seq(plan.partitioning()):
+        kind = tr.name()
+        if kind == "identity":
+            out.setdefault("partition_by", []).append(col(tr.ref()))
+        elif kind in ("bucket", "sorted_bucket"):
+            cols = [col(r) for r in _seq(tr.columns())]
+            out["bucket_by"] = (int(tr.numBuckets().value()), cols)
+            if kind == "sorted_bucket":
+                out["sort_by"] = [col(r) for r in _seq(tr.sortedColumns())]
+        else:
+            _refuse({tr.toString(): True}, "CREATE TABLE layout", supported)
+    props = _props(spec.properties())
+    if props:
+        out["properties"] = props
+    return out
+
+
+def _canon_merge_expr(
+    sql: str, node, t_alias: str, s_alias: str, aliases: str
+) -> str:
+    """The text of a parsed MERGE expression with the statement's aliases
+    rewritten to the engine's canonical ``t``/``s``: each qualified column
+    reference or star (``src.v``, ``src.*``) has its span replaced in ONE
+    pass (so the swapped alias pair ``target AS s, source AS t`` maps
+    correctly), subquery plans included, and string literals are never
+    touched. ``aliases`` names the rows the clause may see: ``"ts"``
+    (matched: both), ``"t_bare"`` (NOT MATCHED BY SOURCE: the target row,
+    bare column names), ``"s"`` (NOT MATCHED insert condition: the source
+    row)."""
+
+    def canon(e, nested: bool) -> str | None:  # a qualified reference
+        k, parts, star = _cls(e), [], []
+        if k == "UnresolvedAttribute":
+            parts = _seq(e.nameParts())
+        elif k == "UnresolvedStar" and e.target().isDefined():
+            parts, star = _seq(e.target().get()), ["*"]
+        qual = parts[0].lower() if len(parts + star) > 1 else None
+        if qual not in (t_alias.lower(), s_alias.lower()):
+            return None
+        is_t = qual == t_alias.lower()
+        if aliases == "t_bare" and not is_t:
+            raise ValueError(
+                "a NOT MATCHED BY SOURCE clause sees only the target row; "
+                f"{_text(sql, e)!r} references the source"
+            )
+        if aliases == "t_bare" and nested:
+            raise ValueError(
+                "a NOT MATCHED BY SOURCE clause names target columns bare, "
+                f"so a subquery cannot correlate on {_text(sql, e)!r}"
+            )
+        if aliases == "s" and is_t:
+            raise ValueError(
+                "a NOT MATCHED insert condition sees only the source row; "
+                f"{_text(sql, e)!r} references the target"
+            )
+        prefix = "" if aliases == "t_bare" else "t." if is_t else "s."
+        names = [f"`{p.replace('`', '``')}`" for p in parts[1:]]
+        return prefix + ".".join(names + star)
+
+    # (node, is it a plan, is it in a subquery): a subquery's plan and a
+    # plan's expressions are not the node's children
+    edits, stack = [], [(node, False, False)]
+    while stack:
+        e, is_plan, nested = stack.pop()
+        new = None if is_plan else canon(e, nested)
+        if new is None:
+            stack += [(c, is_plan, nested) for c in _seq(e.children())]
+            if is_plan:
+                stack += [(x, False, True) for x in _seq(e.expressions())]
+            elif _cls(e) in ("ScalarSubquery", "ListQuery", "Exists"):
+                stack.append((e.plan(), True, True))
+        elif e is node:  # one column, as most SET values are: no spans
+            return new
+        else:
+            edits.append((*_span(e), new))
+    text = _text(sql, node)
+    if edits:
+        base = _span(node)[0]
+        for lo, hi, new in sorted(edits, reverse=True):
+            text = text[: lo - base] + new + text[hi - base :]
+    return text.strip()
 
 
 _DNF_DISJUNCT_CAP = 64
@@ -458,8 +484,9 @@ def _where_filters(spark: SparkSession, text: str, expr=None):
 
 
 def _fold_constants(spark: SparkSession, texts: list[str]) -> list:
-    """Constant SQL expressions as Python values, from one select over a
-    one-row inline table (a local relation: collecting it runs no job)."""
+    """Constant SQL expressions (DML predicate values, time-travel
+    bounds) as Python values, from one select over a one-row inline table
+    (a local relation: collecting it runs no job)."""
     from pyspark.errors import PySparkException
 
     if not texts:
@@ -470,13 +497,12 @@ def _fold_constants(spark: SparkSession, texts: list[str]) -> list:
         det = df._jdf.queryExecution().analyzed().deterministic()
         row = df.collect()[0] if det else None
     except PySparkException as e:
-        raise ValueError(
-            f"cannot fold function in a WHERE value to a constant: {e}"
-        ) from e
+        raise ValueError(f"cannot fold function to a constant: {e}") from e
     if not det:
         raise ValueError(
-            f"non-deterministic function in a WHERE value ({', '.join(texts)})"
-            " — a row-level DML predicate must fold to a constant"
+            f"non-deterministic function in ({', '.join(texts)}) — a "
+            "row-level DML predicate or a time-travel bound must fold to a "
+            "constant"
         )
     return list(row)
 
@@ -517,7 +543,7 @@ def _merge_clauses(
     names the rows the family sees)."""
 
     def canon(node) -> str:
-        return _canon_merge_expr(_text(sql, node), t_alias, s_alias, aliases)
+        return _canon_merge_expr(sql, node, t_alias, s_alias, aliases)
 
     def target(key) -> str:
         parts = _seq(key.nameParts())
@@ -568,18 +594,18 @@ def _values_frame(
         raise ValueError(
             f"INSERT VALUES row 1 has {width} values for {len(fields)} columns"
         )
-    text, base = _text(sql, node), node.origin().startIndex().get()
+    text, base = _text(sql, node), _span(node)[0]
     for row in reversed(_seq(node.rows()) if inline else []):
         for f, cell in reversed(list(zip(fields, _seq(row)))):
             if (
                 _cls(cell) == "UnresolvedAttribute"
                 and cell.name().upper() == "DEFAULT"
             ):
-                o = cell.origin()
+                lo, hi = _span(cell)
                 text = (
-                    text[: o.startIndex().get() - base]
+                    text[: lo - base]
                     + f"({defaults.get(f.name, 'NULL')})"
-                    + text[o.stopIndex().get() + 1 - base :]
+                    + text[hi - base :]
                 )
     casts = ", ".join(
         f"CAST(c{j} AS {f.dataType.simpleString()}) AS `{f.name}`"
@@ -649,14 +675,12 @@ class Warehouse:
     # jars provide. The seam is deliberately the same three methods
     # (write_snapshot / versions / read_snapshot) plus .sql(); a
     # deployment with the jars subclasses Warehouse, points write/read at
-    # the catalog, and deletes the rewrite in .sql() — no stage or caller
-    # changes. TxLogWarehouse below is the scale-true implementation of
+    # the catalog, and deletes the time-travel swap in .sql() — no stage
+    # or caller changes. TxLogWarehouse below is the scale-true implementation of
     # this seam (atomic commit log, snapshot ids, file-shared history —
     # sources/txlog.py); this base class's copy-per-version directories
     # remain as the zero-machinery default for small stage hand-offs.
-    # Shim divergences stay documented and tested: sequential integer
-    # versions and .sql()'s literal/comment-aware rewriter
-    # (test_sql_rewrite_skips_string_literals_and_comments).
+    # Shim divergence: versions are sequential integers.
 
     def write_snapshot(
         self, df: DataFrame, name: str, partition_by: list[str] | None = None
@@ -673,14 +697,11 @@ class Warehouse:
         # like _SUCCESS). Clamped strictly monotonic per table — Delta
         # does the same — so clock skew can never order a later version
         # before an earlier one.
-        import json as _json
-        import time as _time
-
-        ts_ms = int(_time.time() * 1000)
+        ts_ms = int(time.time() * 1000)
         if version > 1:
             ts_ms = max(ts_ms, self._commit_ts(name, version - 1) + 1)
         with open(os.path.join(vdir, "_commit_ts.json"), "w") as f:
-            _json.dump({"ts_ms": ts_ms}, f)
+            json.dump({"ts_ms": ts_ms}, f)
         return version
 
     def _commit_ts(self, name: str, version: int) -> int:
@@ -688,12 +709,10 @@ class Warehouse:
         the stamp existed fall back to the version dir's mtime — the
         monotone envelope in version_at_timestamp absorbs any resulting
         disorder."""
-        import json as _json
-
         vdir = os.path.join(self.path(name), f"v{version}")
         try:
             with open(os.path.join(vdir, "_commit_ts.json")) as f:
-                return int(_json.load(f)["ts_ms"])
+                return int(json.load(f)["ts_ms"])
         except (FileNotFoundError, ValueError, KeyError):
             return int(os.path.getmtime(vdir) * 1000)
 
@@ -707,22 +726,29 @@ class Warehouse:
             if d.startswith("v") and d[1:].isdigit()
         )
 
-    def read_snapshot(self, name: str, version: int | None = None) -> DataFrame:
-        """Read a table VERSION AS OF `version` (latest when omitted)."""
+    def _live_versions(self, name: str) -> list[int]:
+        """The table's versions; FileNotFoundError when it has none."""
         versions = self.versions(name)
         if not versions:
             raise FileNotFoundError(f"no snapshots for table {name}")
+        return versions
+
+    def read_snapshot(self, name: str, version: int | None = None) -> DataFrame:
+        """Read a table VERSION AS OF `version` (latest when omitted)."""
+        versions = self._live_versions(name)
         v = version if version is not None else versions[-1]
         if v not in versions:
             raise ValueError(f"table {name} has no version {v} (has {versions})")
         return self.spark.read.parquet(os.path.join(self.path(name), f"v{v}"))
+
+    _TABLE_DIR = ""  # what a directory under root holds to be a table
 
     def tables(self) -> list[str]:
         if not os.path.isdir(self.root):
             return []
         return sorted(
             d for d in os.listdir(self.root)
-            if os.path.isdir(os.path.join(self.root, d))
+            if os.path.isdir(os.path.join(self.root, d, self._TABLE_DIR))
         )
 
     def shallow_clone(
@@ -741,15 +767,7 @@ class Warehouse:
         crash); cross-filesystem destinations refuse (a silent full
         copy would betray the zero-copy contract). Returns the clone's
         version (always 1 — history does not carry over)."""
-        import errno
-        import json as _json
-        import shutil as _sh
-        import time as _time
-        import uuid as _uuid
-
-        versions = self.versions(name)
-        if not versions:
-            raise FileNotFoundError(f"no snapshots for table {name}")
+        versions = self._live_versions(name)
         v = versions[-1] if version is None else version
         if v not in versions:
             raise ValueError(
@@ -760,7 +778,7 @@ class Warehouse:
         src_dir = os.path.join(self.path(name), f"v{v}")
         dest_root = self.path(dest)
         os.makedirs(dest_root, exist_ok=True)
-        tmp = os.path.join(dest_root, f".tmp-clone-{_uuid.uuid4().hex}")
+        tmp = os.path.join(dest_root, f".tmp-clone-{uuid.uuid4().hex}")
         os.makedirs(tmp)
         try:
             for dirpath, _dirs, fnames in os.walk(src_dir):
@@ -790,10 +808,10 @@ class Warehouse:
                             f"{fname!r}: {e}"
                         ) from e
             with open(os.path.join(tmp, "_commit_ts.json"), "w") as f:
-                _json.dump({"ts_ms": int(_time.time() * 1000)}, f)
+                json.dump({"ts_ms": int(time.time() * 1000)}, f)
             os.rename(tmp, os.path.join(dest_root, "v1"))
         except BaseException:
-            _sh.rmtree(tmp, ignore_errors=True)
+            shutil.rmtree(tmp, ignore_errors=True)
             raise
         return 1
 
@@ -821,9 +839,7 @@ class Warehouse:
             d = os.path.join(d, subs[0])
 
     def _alter_guard(self, name: str, col: str, verb: str) -> tuple[DataFrame, list[str]]:
-        versions = self.versions(name)
-        if not versions:
-            raise FileNotFoundError(f"no snapshots for table {name}")
+        versions = self._live_versions(name)
         part_by = self._snapshot_partition_by(name, versions[-1])
         if col in part_by:
             raise ValueError(
@@ -842,16 +858,11 @@ class Warehouse:
             df.withColumnRenamed(old, new), name, partition_by=part_by or None
         )
 
-    def add_column(self, name: str, col: str, dtype: str) -> int:
-        return self.add_columns(name, [(col, dtype)])
-
     def add_columns(self, name: str, cols: list[tuple[str, str]]) -> int:
         """Multi-column ADD COLUMNS as ONE snapshot write: every name is
         validated against the live schema AND for intra-list duplicates
         before anything is written, so the ALTER is never half-applied."""
-        versions = self.versions(name)
-        if not versions:
-            raise FileNotFoundError(f"no snapshots for table {name}")
+        versions = self._live_versions(name)
         df = self.read_snapshot(name)
         seen: set[str] = set()
         for col, _dtype in cols:
@@ -890,9 +901,7 @@ class Warehouse:
 
         from ..sources.txlog import _is_widening
 
-        versions = self.versions(name)
-        if not versions:
-            raise FileNotFoundError(f"no snapshots for table {name}")
+        versions = self._live_versions(name)
         df = self.read_snapshot(name)
         if col not in df.columns:
             raise ValueError(f"no column {col!r} in table {name}")
@@ -935,9 +944,7 @@ class Warehouse:
     def detail(self, name: str) -> DataFrame:
         """Delta-style DESCRIBE DETAIL: one row of physical table facts.
         Also reachable as SQL: ``wh.sql("DESCRIBE DETAIL <table>")``."""
-        versions = self.versions(name)
-        if not versions:
-            raise FileNotFoundError(f"no snapshots for table {name}")
+        versions = self._live_versions(name)
         v = versions[-1]
         vdir = os.path.join(self.path(name), f"v{v}")
         files = [
@@ -980,9 +987,7 @@ class Warehouse:
                 "(TxLogWarehouse); this backend's snapshots are "
                 "whole-table rewrites"
             )
-        versions = self.versions(name)
-        if not versions:
-            raise FileNotFoundError(f"no snapshots for table {name}")
+        versions = self._live_versions(name)
         df = self.read_snapshot(name)
         part_by = self._snapshot_partition_by(name, versions[-1])
         if zorder_by:
@@ -1005,9 +1010,7 @@ class Warehouse:
         ``DESCRIBE FILES <table>``). This backend lists the latest
         snapshot directory; txlog overrides with commit-log metadata
         including footer stats and deletion-vector counts."""
-        versions = self.versions(name)
-        if not versions:
-            raise FileNotFoundError(f"no snapshots for table {name}")
+        versions = self._live_versions(name)
         vdir = os.path.join(self.path(name), f"v{versions[-1]}")
         rows = []
         for d, _, fs in os.walk(vdir):
@@ -1036,62 +1039,11 @@ class Warehouse:
         ``retain_last`` snapshot versions; returns how many versions were
         reclaimed. Time travel below the horizon then refuses, matching
         the txlog backend's vacuum contract."""
-        import shutil
-
-        versions = self.versions(name)
-        if not versions:
-            raise FileNotFoundError(f"no snapshots for table {name}")
+        versions = self._live_versions(name)
         victims = versions[: -max(1, retain_last)]
         for v in victims:
             shutil.rmtree(os.path.join(self.path(name), f"v{v}"))
         return len(victims)
-
-    @staticmethod
-    def _split_sql_segments(query: str) -> list[tuple[bool, str]]:
-        """Split SQL into (is_code, text) segments so the time-travel
-        rewrite never touches string literals, quoted identifiers, or
-        comments. Handles ``'…'`` (with ``''`` escape), ``"…"``, ``…``
-        (backtick), ``-- …`` line comments and ``/* … */`` blocks."""
-        segments: list[tuple[bool, str]] = []
-        i, n, start = 0, len(query), 0
-
-        def flush_code(end: int) -> None:
-            if end > start:
-                segments.append((True, query[start:end]))
-
-        while i < n:
-            ch = query[i]
-            if ch in ("'", '"', "`"):
-                flush_code(i)
-                j = i + 1
-                while j < n:
-                    if query[j] == ch:
-                        if ch == "'" and j + 1 < n and query[j + 1] == "'":
-                            j += 2  # doubled-quote escape
-                            continue
-                        j += 1
-                        break
-                    j += 1
-                else:
-                    j = n
-                segments.append((False, query[i:j]))
-                i = start = j
-            elif ch == "-" and query[i : i + 2] == "--":
-                flush_code(i)
-                j = query.find("\n", i)
-                j = n if j == -1 else j
-                segments.append((False, query[i:j]))
-                i = start = j
-            elif ch == "/" and query[i : i + 2] == "/*":
-                flush_code(i)
-                j = query.find("*/", i + 2)
-                j = n if j == -1 else j + 2
-                segments.append((False, query[i:j]))
-                i = start = j
-            else:
-                i += 1
-        flush_code(n)
-        return segments
 
     _HISTORY_SCHEMA = (
         "version long, ts_ms long, operation string, snapshot_id string, "
@@ -1104,11 +1056,9 @@ class Warehouse:
         so file-level columns are null; the txlog backend overrides with
         real commit metadata. Also reachable as SQL:
         ``wh.sql("DESCRIBE HISTORY <table>")``."""
-        if not self.versions(name):
-            raise FileNotFoundError(f"no snapshots for table {name}")
         rows = [
             (v, self._commit_ts(name, v), "write_snapshot", None, None, None)
-            for v in self.versions(name)
+            for v in self._live_versions(name)
         ]
         return local_frame(self.spark, rows, self._HISTORY_SCHEMA)
 
@@ -1118,9 +1068,7 @@ class Warehouse:
         semantics; same contract as TableLog.version_at). Commit times pass
         through a monotone envelope (running max) first, so mtime-backfilled
         pre-stamp snapshots can never resolve out of version order."""
-        versions = self.versions(name)
-        if not versions:
-            raise FileNotFoundError(f"no snapshots for table {name}")
+        versions = self._live_versions(name)
         best, seen = None, 0
         for v in versions:
             seen = max(seen, self._commit_ts(name, v))
@@ -1132,197 +1080,33 @@ class Warehouse:
             )
         return best
 
-    def _rewrite_timestamp_as_of(
-        self, segments: list[tuple[bool, str]]
-    ) -> list[tuple[bool, str]]:
-        """``<table> TIMESTAMP AS OF '<iso>'`` spans a code segment (name +
-        keywords) and a string-literal segment (the timestamp) — rewrite
-        the pair into a versioned temp view. Literal-only occurrences of
-        the phrase (inside strings/comments) never match because the
-        keyword part must sit in a CODE segment."""
-        import re
-        from datetime import datetime, timezone
-
-        pat = re.compile(r"\b(\w+)\s+TIMESTAMP\s+AS\s+OF\s*$", re.IGNORECASE)
-        out = list(segments)
-        for i, (is_code, text) in enumerate(out):
-            if not is_code or i + 1 >= len(out):
-                continue
-            m = pat.search(text)
-            nxt_is_code, nxt = out[i + 1]
-            if not m or nxt_is_code or not nxt.startswith("'"):
-                continue
-            name = m.group(1)
-            ts = datetime.fromisoformat(nxt.strip("'"))
-            if ts.tzinfo is None:  # session timezone is pinned UTC
-                ts = ts.replace(tzinfo=timezone.utc)
-            version = self.version_at_timestamp(name, int(ts.timestamp() * 1000))
-            view = f"__{name}_v{version}"
-            self.read_snapshot(name, version).createOrReplaceTempView(view)
-            out[i] = (True, text[: m.start()] + view)
-            out[i + 1] = (True, "")
-        return out
-
-    def _rewrite_table_changes(
-        self, segments: list[tuple[bool, str]]
-    ) -> list[tuple[bool, str]]:
-        """Delta's change-data-feed TVF surface:
-        ``SELECT … FROM table_changes('t', from [, to])`` (or the bare
-        identifier form ``table_changes(t, from [, to])``) rewrites to a
-        temp view over the backend's batch change feed. The quoted form
-        spans a code segment + a string literal + a code segment, so it
-        resolves the same way TIMESTAMP AS OF does — literal-only
-        occurrences inside strings/comments can never match. Backends
-        without a commit log (whole-table snapshots) refuse loudly, like
-        row-level SQL DML."""
-        import re
-
-        call = re.compile(
-            r"\btable_changes\s*\(\s*`?(\w+)`?\s*,\s*(\d+)\s*"
-            r"(?:,\s*(\d+)\s*)?\)",
-            re.IGNORECASE,
-        )
-        open_pat = re.compile(r"\btable_changes\s*\(\s*$", re.IGNORECASE)
-        args_pat = re.compile(r"^\s*,\s*(\d+)\s*(?:,\s*(\d+)\s*)?\)")
-
-        def _view(name: str, lo: int, hi: int | None) -> str:
-            if not hasattr(self, "table_changes"):
-                raise ValueError(
-                    "table_changes() requires the txlog backend "
-                    "(TxLogWarehouse); this backend's snapshots are "
-                    "whole-table writes with no commit-level change feed"
-                )
-            view = f"__tc_{name}_v{lo}_{'latest' if hi is None else hi}"
-            self.table_changes(name, lo, hi).createOrReplaceTempView(view)
-            return view
-
-        out = list(segments)
-        for i, (is_code, text) in enumerate(out):
-            if not is_code:
-                continue
-            text = call.sub(
-                lambda m: _view(
-                    m.group(1),
-                    int(m.group(2)),
-                    int(m.group(3)) if m.group(3) else None,
-                ),
-                text,
-            )
-            m = open_pat.search(text)
-            if m and i + 2 < len(out):
-                s_is_code, sname = out[i + 1]
-                c_is_code, ctext = out[i + 2]
-                if not s_is_code and sname.startswith("'") and c_is_code:
-                    m2 = args_pat.match(ctext)
-                    if m2:
-                        hi = int(m2.group(2)) if m2.group(2) else None
-                        view = _view(
-                            sname.strip("'"), int(m2.group(1)), hi
-                        )
-                        text = text[: m.start()] + view
-                        out[i + 1] = (True, "")
-                        out[i + 2] = (True, ctext[m2.end():])
-            out[i] = (True, text)
-        return out
-
     def sql(self, query: str) -> DataFrame:
         """SQL entry point with Iceberg-style time travel (reference
         README.md:143-154 verifies through ``SELECT … VERSION AS OF``).
 
-        ``<table> VERSION AS OF <n>`` references are resolved against the
-        warehouse snapshot store and swapped for temp views before the
-        query reaches Spark's parser; bare warehouse table names resolve
-        to the latest snapshot (or the plain table). Vanilla Spark only
-        parses VERSION AS OF for v2 catalogs (Iceberg/Delta); this shim
-        keeps the same user-facing SQL over the portable parquet backend
-        — an Iceberg catalog would replace it with native parsing and no
-        caller changes.
-
-        Hardening (vs a naive regex pass): table names and VERSION AS OF
-        clauses inside string literals, quoted identifiers, or comments
-        are left untouched; and a temp view the USER registered under a
-        warehouse table's name is never clobbered — it shadows the
-        warehouse table, matching Spark's own temp-view-over-catalog
-        resolution order. Known edge: if the user REPLACES a view this
-        warehouse itself registered earlier in the same session, the next
-        .sql() re-shadows it (the catalog API cannot distinguish the two);
-        pick an unclaimed name for user views over warehouse tables.
-
-        DML (DELETE, TRUNCATE, UPDATE, MERGE, INSERT) is parsed by Spark's
-        own parser and run on the backend's row ops; the statements Spark's
-        grammar lacks (OPTIMIZE, VACUUM, REORG, RESTORE, DESCRIBE
-        HISTORY/DETAIL/FILES, SHALLOW CLONE) and the warehouse's CREATE/
-        ALTER DDL are matched first. A statement Spark cannot parse raises
-        ValueError with Spark's message."""
-        import re
-
-        m_hist = re.match(
-            r"\s*DESCRIBE\s+HISTORY\s+`?(\w+)`?\s*;?\s*$", query, re.IGNORECASE
-        )
-        if m_hist:
-            # Delta's DESCRIBE HISTORY, portable across both backends
-            return self.history(m_hist.group(1))
-
-        # ALTER TABLE column DDL, portable across both backends (the base
-        # backend rewrites the next snapshot; txlog commits metadata only).
-        # Returns a one-row confirmation with the new table version —
-        # Spark's own DDL returns an empty frame, but the version is the
-        # useful fact here (it is what VERSION AS OF takes).
-        m_alter = re.match(
-            r"\s*ALTER\s+TABLE\s+`?(\w+)`?\s+(?:"
-            r"RENAME\s+COLUMN\s+`?(\w+)`?\s+TO\s+`?(\w+)`?"
-            r"|ADD\s+COLUMNS?\s+([`\w()\s,]+?)"
-            r"|DROP\s+COLUMNS?\s*\(?\s*`?(\w+)`?\s*\)?"
-            r"|ALTER\s+COLUMN\s+`?(\w+)`?\s+TYPE\s+([\w()\s,]+?)"
-            r")\s*;?\s*$",
+        Spark's parser reads the statement and its plan class picks the
+        handler (``_SQL_PLANS``): DML runs on the row ops, CREATE/ALTER on
+        the table metadata, each clause read from its plan node. Every
+        other plan runs on Spark (``_sql_select``) once the warehouse
+        tables it names are temp views and each ``t VERSION AS OF n``,
+        ``t TIMESTAMP AS OF <expr>`` and ``table_changes(t, from [, to])``
+        is swapped for a view of that version: vanilla Spark only time
+        travels on v2 catalogs (Iceberg/Delta). A temp view the user
+        registered under a table's name shadows the table (known edge: a
+        user view replacing one this warehouse registered is re-shadowed
+        on the next call). Regexes match only what Spark's grammar lacks
+        or misparses: DESCRIBE HISTORY/DETAIL/FILES (read as DESCRIBE
+        COLUMN), ALTER COLUMN SET/DROP GENERATED, SHALLOW CLONE, OPTIMIZE,
+        REORG … APPLY (PURGE), VACUUM and RESTORE. A statement Spark
+        cannot parse raises ValueError with Spark's message."""
+        m_desc = re.match(
+            r"\s*DESCRIBE\s+(HISTORY|DETAIL|FILES)\s+`?(\w+)`?\s*;?\s*$",
             query,
             re.IGNORECASE,
         )
-        # CHECK-constraint DDL (Delta syntax; round 9): metadata commits
-        # on the txlog backend — ADD validates existing rows first, then
-        # every later write/merge/update enforces in one aggregate pass
-        m_con = re.match(
-            r"\s*ALTER\s+TABLE\s+`?(\w+)`?\s+(?:"
-            r"ADD\s+CONSTRAINT\s+`?(\w+)`?\s+CHECK\s*\((.+)\)"
-            r"|DROP\s+CONSTRAINT\s+`?(\w+)`?"
-            r")\s*;?\s*$",
-            query,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if m_con:
-            t = m_con.group(1)
-            self._require_txlog("CHECK constraints")
-            if m_con.group(2):
-                op = "ADD CONSTRAINT"
-                v = self._log(t).add_constraint(
-                    m_con.group(2), m_con.group(3).strip()
-                )
-            else:
-                op = "DROP CONSTRAINT"
-                v = self._log(t).drop_constraint(m_con.group(4))
-            return self._outcome(t, op, v)
-
-        # column DEFAULT DDL (round 10; Spark/Delta syntax): metadata
-        # commits; later INSERTs whose column list omits the column take
-        # the default instead of NULL
-        m_dflt = re.match(
-            r"\s*ALTER\s+TABLE\s+`?(\w+)`?\s+ALTER\s+COLUMN\s+`?(\w+)`?"
-            r"\s+(?:SET\s+DEFAULT\s+(.+?)|(DROP\s+DEFAULT))\s*;?\s*$",
-            query,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if m_dflt:
-            t = m_dflt.group(1)
-            self._require_txlog("column DEFAULTs")
-            if m_dflt.group(4):
-                op = "DROP DEFAULT"
-                v = self._log(t).drop_default(m_dflt.group(2))
-            else:
-                op = "SET DEFAULT"
-                v = self._log(t).set_default(
-                    m_dflt.group(2), m_dflt.group(3).strip()
-                )
-            return self._outcome(t, op, v)
+        if m_desc:
+            # Delta's DESCRIBE HISTORY / DETAIL, Iceberg's files metadata
+            return getattr(self, m_desc.group(1).lower())(m_desc.group(2))
 
         # generated / identity column DDL (round 11; Delta's GENERATED
         # ALWAYS AS, surfaced through ALTER like the SET DEFAULT family):
@@ -1338,55 +1122,18 @@ class Warehouse:
             re.IGNORECASE | re.DOTALL,
         )
         if m_gen:
-            t = m_gen.group(1)
+            t, col, start, step, expr, drop = m_gen.groups()
             self._require_txlog("generated columns")
-            if m_gen.group(6):
-                op = "DROP GENERATED"
-                v = self._log(t).drop_generated(m_gen.group(2))
-            elif m_gen.group(5):
-                op = "SET GENERATED ALWAYS AS"
-                v = self._log(t).set_generated(
-                    m_gen.group(2), expr=m_gen.group(5).strip()
-                )
-            else:
-                op = "SET GENERATED ALWAYS AS IDENTITY"
-                v = self._log(t).set_generated(
-                    m_gen.group(2),
-                    identity=True,
-                    start=int(m_gen.group(3) or 1),
-                    step=int(m_gen.group(4) or 1),
-                )
-            return self._outcome(t, op, v)
-
-        # table properties (round 11; Delta/Spark syntax): SET acts on
-        # delta.enableChangeDataFeed — CoW MERGE/DELETE commits then
-        # write precise CDC sidecars (see TableLog.set_properties)
-        m_props = re.match(
-            r"\s*ALTER\s+TABLE\s+`?(\w+)`?\s+"
-            r"(?:SET\s+TBLPROPERTIES\s*\((.+)\)"
-            r"|UNSET\s+TBLPROPERTIES\s*\((.+)\))\s*;?\s*$",
-            query,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if m_props:
-            t = m_props.group(1)
-            self._require_txlog("TBLPROPERTIES")
-            if m_props.group(2):
-                op = "SET TBLPROPERTIES"
-                v = self._log(t).set_properties(
-                    _parse_props_body(m_props.group(2))
-                )
-            else:
-                keys = [_unq_sql(k) for k in _split_in_list(m_props.group(3))]
-                op = "UNSET TBLPROPERTIES"
-                v = self._log(t).unset_properties(keys)
-            return self._outcome(t, op, v)
-
-        m_files = re.match(
-            r"\s*DESCRIBE\s+FILES\s+`?(\w+)`?\s*;?\s*$", query, re.IGNORECASE
-        )
-        if m_files:
-            return self.files(m_files.group(1))
+            log = self._log(t)
+            if drop:
+                return self._outcome(t, "DROP GENERATED", log.drop_generated(col))
+            if expr:
+                v = log.set_generated(col, expr=expr.strip())
+                return self._outcome(t, "SET GENERATED ALWAYS AS", v)
+            v = log.set_generated(
+                col, identity=True, start=int(start or 1), step=int(step or 1)
+            )
+            return self._outcome(t, "SET GENERATED ALWAYS AS IDENTITY", v)
 
         # SHALLOW CLONE (round 10; Delta's zero-copy dev/test fork):
         # CREATE TABLE t2 SHALLOW CLONE t1 [VERSION AS OF n |
@@ -1402,197 +1149,30 @@ class Warehouse:
             # both backends clone zero-copy since round 11: txlog forks
             # the snapshot's file references; the snapshot-dir backend
             # hardlinks the version directory (Warehouse.shallow_clone)
-            dst, src_t = m_clone.group(1), m_clone.group(2)
+            dst, src_t, ver, ts = m_clone.groups()
             if not self.exists(src_t):
                 raise ValueError(f"clone source {src_t!r} does not exist")
-            ver = int(m_clone.group(3)) if m_clone.group(3) else None
-            if m_clone.group(4):
-                ver = self.version_at_timestamp(
-                    src_t, int(m_clone.group(4))
-                )
-            v = self.shallow_clone(src_t, dst, version=ver)
+            ver = self.version_at_timestamp(src_t, int(ts)) if ts else ver
+            v = self.shallow_clone(src_t, dst, version=int(ver) if ver else None)
             return self._outcome(dst, "SHALLOW CLONE", v)
 
-        # CREATE TABLE with an explicit column list (round 12): Delta's
-        # declare-before-first-write surface — GENERATED ALWAYS AS /
-        # IDENTITY, DEFAULT, PARTITIONED BY, CLUSTERED BY … INTO n
-        # BUCKETS and TBLPROPERTIES all land in the version-1 commit of
-        # an EMPTY table, so the very first data write already satisfies
-        # every declared invariant (closes round 11's ALTER-only gap).
-        m_newtab = re.match(
-            r"\s*CREATE\s+TABLE\s+`?(\w+)`?\s*\(", query, re.IGNORECASE
-        )
-        if m_newtab:
-            t = m_newtab.group(1)
-            # balanced-paren scan for the column list (types and
-            # generated expressions nest parens; regexes can't)
-            i = m_newtab.end() - 1
-            depth, j, n = 0, i, len(query)
-            while j < n:
-                ch = query[j]
-                if ch == "'":
-                    k = query.find("'", j + 1)
-                    j = n if k < 0 else k + 1
-                    continue
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                j += 1
-            if depth != 0:
-                raise ValueError(
-                    f"unbalanced parentheses in CREATE TABLE: {query!r}"
-                )
-            coldefs, tail = query[i + 1 : j], query[j + 1 :]
-            m_tail = re.match(
-                r"\s*(?:PARTITIONED\s+BY\s*\(([^)]+)\)\s*)?"
-                r"(?:CLUSTERED\s+BY\s*\(([^)]+)\)\s*"
-                r"(?:SORTED\s+BY\s*\(([^)]+)\)\s*)?"
-                r"INTO\s+(\d+)\s+BUCKETS\s*)?"
-                r"(?:TBLPROPERTIES\s*\(([^)]*)\)\s*)?;?\s*$",
-                tail,
-                re.IGNORECASE | re.DOTALL,
-            )
-            if not m_tail:
-                raise ValueError(
-                    f"cannot parse CREATE TABLE clauses {tail!r} "
-                    "(supported: PARTITIONED BY | CLUSTERED BY … INTO n "
-                    "BUCKETS | TBLPROPERTIES; CTAS uses `CREATE TABLE t "
-                    "AS SELECT …` without a column list)"
-                )
-            self._require_txlog("CREATE TABLE with column definitions")
-            if self.exists(t):
-                raise ValueError(
-                    f"table {t!r} already exists; CREATE TABLE never "
-                    "clobbers data"
-                )
-            fields, gen, dflts = _parse_column_defs(coldefs)
-            split = lambda g: (
-                [c.strip(" `") for c in g.split(",")] if g else None
-            )
-            part, bcols, scols = (
-                split(m_tail.group(1)),
-                split(m_tail.group(2)),
-                split(m_tail.group(3)),
-            )
-            props = (
-                _parse_props_body(m_tail.group(5))
-                if m_tail.group(5)
-                else None
-            )
-            v = self.create_table(
-                t,
-                ", ".join(fields),
-                partition_by=part,
-                bucket_by=(int(m_tail.group(4)), bcols) if bcols else None,
-                sort_by=scols,
-                generated=gen or None,
-                defaults=dflts or None,
-                properties=props,
-            )
-            return self._outcome(t, "CREATE TABLE", v)
-
-        # CTAS with optional partition/bucket layout (round 8): the SELECT
-        # runs back through .sql() so VERSION AS OF / table_changes() /
-        # warehouse table references all resolve inside it. CREATE TABLE
-        # refuses when the table already exists (Spark/Delta/Iceberg
-        # TableAlreadyExists semantics — a bare CTAS must never clobber
-        # data); CREATE OR REPLACE TABLE is the explicit-overwrite form.
-        m_ctas = re.match(
-            r"\s*CREATE\s+(OR\s+REPLACE\s+)?TABLE\s+`?(\w+)`?\s*"
-            r"(?:PARTITIONED\s+BY\s*\(([^)]+)\)\s*)?"
-            r"(?:CLUSTERED\s+BY\s*\(([^)]+)\)\s*"
-            r"(?:SORTED\s+BY\s*\(([^)]+)\)\s*)?"
-            r"INTO\s+(\d+)\s+BUCKETS\s*)?"
-            r"(?:TBLPROPERTIES\s*\(([^)]*)\)\s*)?"
-            r"AS\s+(SELECT\b.+?)\s*;?\s*$",
-            query,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if m_ctas:
-            replace = bool(m_ctas.group(1))
-            t = m_ctas.group(2)
-            if not replace and self.exists(t):
-                raise ValueError(
-                    f"table {t!r} already exists; use CREATE OR REPLACE "
-                    "TABLE … AS to overwrite it"
-                )
-            split = lambda g: (
-                [c.strip(" `") for c in g.split(",")] if g else None
-            )
-            part, bcols, scols = (
-                split(m_ctas.group(3)), split(m_ctas.group(4)),
-                split(m_ctas.group(5)),
-            )
-            props = (
-                _parse_props_body(m_ctas.group(7))
-                if m_ctas.group(7)
-                else None
-            )
-            if props is not None:
-                self._require_txlog("TBLPROPERTIES")
-            prop_kw = {"properties": props} if props is not None else {}
-            df = self.sql(m_ctas.group(8))
-            if bcols:
-                # capability check up front (never catch TypeError around
-                # the write — an unrelated TypeError from Spark or user
-                # data must not be misreported as a backend gap)
-                import inspect as _inspect
-
-                if "bucket_by" not in _inspect.signature(
-                    self.write_snapshot
-                ).parameters:
-                    raise ValueError(
-                        "CLUSTERED BY … INTO n BUCKETS requires the txlog "
-                        "backend (TxLogWarehouse); this backend's snapshots "
-                        "have no bucket layout"
-                    )
-                v = self.write_snapshot(
-                    df, t, partition_by=part,
-                    bucket_by=(int(m_ctas.group(6)), bcols),
-                    sort_by=scols, **prop_kw,
-                )
-            else:
-                v = self.write_snapshot(df, t, partition_by=part, **prop_kw)
-            return self._outcome(
-                t, "CREATE OR REPLACE TABLE AS" if replace else "CREATE TABLE AS", v
-            )
-
-        m_detail = re.match(
-            r"\s*DESCRIBE\s+DETAIL\s+`?(\w+)`?\s*;?\s*$", query, re.IGNORECASE
-        )
-        if m_detail:
-            return self.detail(m_detail.group(1))
-
         m_opt = re.match(
-            r"\s*OPTIMIZE\s+`?(\w+)`?"
-            r"(?:\s+WHERE\s+(.+?))?"
+            r"\s*OPTIMIZE\s+`?(\w+)`?(?:\s+WHERE\s+(.+?))?"
             r"(?:\s+ZORDER\s+BY\s*\(\s*([\w\s,`]+?)\s*\))?\s*;?\s*$",
             query,
             re.IGNORECASE | re.DOTALL,
         )
         if m_opt:
-            t = m_opt.group(1)
-            zcols = (
-                [c.strip(" `") for c in m_opt.group(3).split(",")]
-                if m_opt.group(3)
-                else None
-            )
-            where = (
-                _where_filters(self.spark, m_opt.group(2))
-                if m_opt.group(2)
-                else None
-            )
+            t, where, zorder = m_opt.groups()
+            zcols = [c.strip(" `") for c in zorder.split(",")] if zorder else None
+            where = _where_filters(self.spark, where) if where else None
             v = self.optimize_table(t, zorder_by=zcols, where=where)
             return self._outcome(t, "OPTIMIZE", v)
 
         # REORG TABLE … APPLY (PURGE) (round 12): Delta's scoped
         # deletion-vector purge — rewrite ONLY the dv-carrying files
         m_reorg = re.match(
-            r"\s*REORG\s+TABLE\s+`?(\w+)`?\s+APPLY\s*\(\s*PURGE\s*\)"
-            r"\s*;?\s*$",
+            r"\s*REORG\s+TABLE\s+`?(\w+)`?\s+APPLY\s*\(\s*PURGE\s*\)\s*;?\s*$",
             query,
             re.IGNORECASE,
         )
@@ -1602,14 +1182,7 @@ class Warehouse:
             res = self._log(t).reorg_purge()
             return local_frame(
                 self.spark,
-                [
-                    (
-                        t,
-                        "REORG APPLY (PURGE)",
-                        res["version"],
-                        res["files_purged"],
-                    )
-                ],
+                [(t, "REORG APPLY (PURGE)", res["version"], res["files_purged"])],
                 "table_name string, operation string, version long, "
                 "files_purged long",
             )
@@ -1621,9 +1194,7 @@ class Warehouse:
         )
         if m_vac:
             t = m_vac.group(1)
-            n = self.vacuum_table(
-                t, retain_last=int(m_vac.group(2) or 1)
-            )
+            n = self.vacuum_table(t, retain_last=int(m_vac.group(2) or 1))
             return local_frame(
                 self.spark,
                 [(t, "VACUUM", n)],
@@ -1641,109 +1212,127 @@ class Warehouse:
             v = self.restore_table(t, int(m_restore.group(2)))
             return self._outcome(t, "RESTORE", v)
 
-        if m_alter:
-            t = m_alter.group(1)
-            if m_alter.group(2):
-                op = "RENAME COLUMN"
-                v = self.rename_column(t, m_alter.group(2), m_alter.group(3))
-            elif m_alter.group(4):
-                op = "ADD COLUMN"
-                # multi-column form: 'ADD COLUMNS (a INT, b STRING)' — split
-                # on TOP-LEVEL commas only (DECIMAL(10,2) carries its own),
-                # so every listed column is added, not just the first with
-                # the rest silently swallowed into its dtype
-                spec = m_alter.group(4).strip()
-                if spec.startswith("(") and spec.endswith(")"):
-                    spec = spec[1:-1]
-                cols = _split_coldefs(spec)
-                parsed = []
-                for cspec in cols:
-                    cname, _, dtype = cspec.strip().partition(" ")
-                    cname, dtype = cname.strip("`"), dtype.strip()
-                    if not cname or not dtype:
-                        # validate EVERY spec before adding ANY column so a
-                        # bad spec never leaves a half-applied ALTER
-                        raise ValueError(
-                            f"cannot parse ADD COLUMNS spec {cspec.strip()!r};"
-                            " expected '<name> <dtype>'"
-                        )
-                    parsed.append((cname, dtype))
-                # single atomic application: name collisions (live schema
-                # or intra-list) are rejected before anything commits
-                v = self.add_columns(t, parsed)
-            elif m_alter.group(5):
-                op = "DROP COLUMN"
-                v = self.drop_column(t, m_alter.group(5))
-            else:
-                op = "ALTER COLUMN TYPE"
-                v = self.alter_column_type(
-                    t, m_alter.group(6), m_alter.group(7).strip()
-                )
-            return self._outcome(t, op, v)
-
-        # the standard DML goes through Spark's own parser; every other
-        # statement it parses (SELECT, SHOW, …) runs below with the
-        # time-travel rewrite
         plan = _parse_sql(self.spark, "parsePlan", query)
-        run = self._SQL_DML.get(_cls(plan))
-        if run is not None:
-            return getattr(self, run)(query, plan)
+        run = self._SQL_PLANS.get(_cls(plan), "_sql_select")
+        return getattr(self, run)(query, plan)
 
-        def _versioned(m: "re.Match[str]") -> str:
-            name, version = m.group(1), int(m.group(2))
-            view = f"__{name}_v{version}"
-            self.read_snapshot(name, version).createOrReplaceTempView(view)
-            return view
-
-        segments = self._split_sql_segments(query)
-        segments = self._rewrite_timestamp_as_of(segments)
-        segments = self._rewrite_table_changes(segments)
-        code = [
-            re.sub(
-                r"\b(\w+)\s+VERSION\s+AS\s+OF\s+(\d+)",
-                _versioned,
-                text,
-                flags=re.IGNORECASE,
-            )
-            if is_code
-            else text
-            for is_code, text in segments
-        ]
-        rewritten = "".join(code)
-        code_only = " ".join(t for (is_code, _), t in zip(segments, code) if is_code)
-        # backtick-quoted identifiers are LIVE table references (Spark
-        # resolves `name` exactly like name), not string literals — they
-        # must trigger view registration even though the rewrite pass
-        # rightly leaves their text alone
-        backtick_idents = " ".join(
-            t.strip("`")
-            for is_code, t in segments
-            if not is_code and t.startswith("`")
-        )
-        scan_text = f"{code_only} {backtick_idents}"
-        for name in self.tables():
-            if not re.search(rf"\b{re.escape(name)}\b", scan_text):
+    def _sql_select(self, query: str, plan, part=None) -> DataFrame:
+        """Run a parsed statement on Spark over the warehouse tables it
+        names (see :meth:`sql`); ``part`` picks the query out of a CTAS or
+        INSERT … SELECT plan. The walk covers CTE bodies and subquery
+        expressions too (``innerChildren``). Time-travel references are
+        replaced by their spans and the edited statement parsed again."""
+        root = plan if part is None else part(plan)
+        names, edits, stack = set(), [], [root]
+        while stack:
+            node = stack.pop()
+            k = _cls(node)
+            if k == "RelationTimeTravel":
+                # the span runs from the table name to the clause's end
+                start, stop = _span(node.relation())[0], _span(node)[1]
+                edits.append((start, stop, self._travel_view(query, node)))
                 continue
-            foreign_view = (
-                name not in self._registered
-                and self.spark.catalog.tableExists(name)
-            )
-            if foreign_view:
-                continue  # user's own temp view shadows the warehouse table
-            if self.versions(name):
-                self.read_snapshot(name).createOrReplaceTempView(name)
-            else:
-                self.read(name).createOrReplaceTempView(name)
-            self._registered.add(name)
-        return self.spark.sql(rewritten)
+            if k == "UnresolvedTableValuedFunction" and [
+                p.lower() for p in _seq(node.name())
+            ] == ["table_changes"]:
+                # up to the last argument: the call's ")" and its alias, if
+                # any, then close a subquery over the view
+                args = _seq(node.functionArgs())
+                view = self._changes_view(query, args)
+                start, stop = _span(node)[0], _span(args[-1])[1]
+                edits.append((start, stop, f"(SELECT * FROM {view}"))
+                continue
+            if k in ("UnresolvedRelation", "UnresolvedTableOrView"):
+                parts = _seq(node.multipartIdentifier())
+                if len(parts) == 1:
+                    names.add(parts[0])
+            if k == "ExplainCommand":
+                stack.append(node.logicalPlan())
+            stack += _seq(node.children()) + _seq(node.innerChildren())
+        if edits:
+            for start, stop, new in sorted(edits, reverse=True):
+                query = query[:start] + new + query[stop:]
+            plan = _parse_sql(self.spark, "parsePlan", query)
+            root = plan if part is None else part(plan)
+        tables = {t.lower(): t for t in self.tables()} if names else {}
+        for name in names:
+            t = tables.get(name.lower())
+            if t is None or (
+                t not in self._registered and self.spark.catalog.tableExists(t)
+            ):
+                continue  # not a table here, or the user's view shadows it
+            df = self.read_snapshot(t) if self.versions(t) else self.read(t)
+            df.createOrReplaceTempView(t)
+            self._registered.add(t)
+        dataset = self.spark._jvm.org.apache.spark.sql.classic.Dataset
+        return DataFrame(dataset.ofRows(self.spark._jsparkSession, root), self.spark)
 
-    # Spark's DML plan classes and the method that runs each
-    _SQL_DML = {
+    def _travel_view(self, query: str, node) -> str:
+        """A temp view of the snapshot a parsed ``VERSION AS OF n`` or
+        ``TIMESTAMP AS OF <expr>`` names. The timestamp folds through
+        Spark in the session time zone, Spark's own rule for time travel."""
+        name, _ = _relation(node.relation(), "time travel")
+        ts, version = node.timestamp(), node.version()
+        if ts.isDefined():
+            text = _text(query, ts.get())
+            (ms,) = _fold_constants(
+                self.spark, [f"unix_millis(CAST(({text}) AS TIMESTAMP_LTZ))"]
+            )
+            if ms is None:
+                raise ValueError(f"TIMESTAMP AS OF {text} is NULL")
+            version = self.version_at_timestamp(name, ms)
+        elif version.get().isdigit():
+            version = int(version.get())
+        else:
+            raise ValueError(f"VERSION AS OF {version.get()!r} is not a number")
+        view = f"__{name}_v{version}"
+        self.read_snapshot(name, version).createOrReplaceTempView(view)
+        return view
+
+    def _changes_view(self, query: str, args: list) -> str:
+        """A temp view over Delta's change-data-feed TVF,
+        ``table_changes('t' | t, from [, to])``: the batch change feed of
+        the txlog commit log. The bounds fold through Spark, so any
+        constant expression works."""
+        self._require_txlog("table_changes()")
+        usage = (
+            "table_changes(table, from_version [, to_version]) takes a table "
+            "name and one or two integer versions"
+        )
+        if not 2 <= len(args) <= 3:
+            raise ValueError(usage)
+        name = _column(args[0])
+        vals = _fold_constants(
+            self.spark, [_text(query, a) for a in args[name is not None :]]
+        )
+        if name is None:
+            name = vals.pop(0)
+        if not isinstance(name, str) or any(type(v) is not int for v in vals):
+            raise ValueError(usage)
+        lo, hi = (vals + [None])[:2]
+        view = f"__tc_{name}_v{lo}_{'latest' if hi is None else hi}"
+        self.table_changes(name, lo, hi).createOrReplaceTempView(view)
+        return view
+
+    # Spark's plan classes and the method that runs each; every other plan
+    # runs through _sql_select
+    _SQL_PLANS = {
         "DeleteFromTable": "_sql_delete",
         "TruncateTable": "_sql_truncate",
         "UpdateTable": "_sql_update",
         "MergeIntoTable": "_sql_merge",
         "InsertIntoStatement": "_sql_insert",
+        "CreateTable": "_sql_create",
+        "CreateTableAsSelect": "_sql_ctas",
+        "ReplaceTableAsSelect": "_sql_ctas",
+        "AddColumns": "_sql_alter_column",
+        "DropColumns": "_sql_alter_column",
+        "RenameColumn": "_sql_alter_column",
+        "AlterColumns": "_sql_alter_column",
+        "AddCheckConstraint": "_sql_table_meta",
+        "DropConstraint": "_sql_table_meta",
+        "SetTableProperties": "_sql_table_meta",
+        "UnsetTableProperties": "_sql_table_meta",
     }
 
     def _outcome(self, table: str, op: str, version, *rows) -> DataFrame:
@@ -1770,8 +1359,8 @@ class Warehouse:
         """INSERT INTO … VALUES / SELECT (round 9): the day-one append verb.
         VALUES rows cast to the table's column types (see
         :func:`_values_frame`); a column list fills the rest with their
-        DEFAULT or NULL; the SELECT form runs back through .sql() so time
-        travel / table_changes() resolve inside it. Appends on the txlog
+        DEFAULT or NULL; the SELECT form runs through the SELECT path, so
+        time travel and table_changes() resolve inside it. Appends on the txlog
         backend are atomic commits; the base backend appends by writing
         the next snapshot (same cost as any write there)."""
         t, _ = _relation(plan.table(), "INSERT INTO")
@@ -1817,7 +1406,7 @@ class Warehouse:
                 self.spark, query, rows, [target[c] for c in names], defaults
             )
         else:
-            df = self.sql(_text(query, rows))
+            df = self._sql_select(query, plan, lambda p: p.query())
             # INSERT … SELECT binds POSITIONALLY (SQL semantics): the
             # SELECT's outputs map onto the column list — or the full
             # table schema when no list is given — by position, never by
@@ -1960,6 +1549,146 @@ class Warehouse:
         )
         return self._outcome(t, "MERGE", res["version"], res.get("rows_written"))
 
+    def _sql_create(self, query: str, plan) -> DataFrame:
+        """CREATE TABLE with a column list (round 12): Delta's
+        declare-before-first-write surface. GENERATED ALWAYS AS /
+        IDENTITY, DEFAULT, PARTITIONED BY, CLUSTERED BY … INTO n BUCKETS
+        and TBLPROPERTIES all land in the version-1 commit of an EMPTY
+        table, so the very first data write already satisfies every
+        declared invariant."""
+        t, _ = _relation(plan.name(), "CREATE TABLE")
+        layout = _layout(plan)
+        schema, generated, defaults = _column_defs(plan.columns())
+        self._require_txlog("CREATE TABLE with column definitions")
+        if self.exists(t):
+            raise ValueError(
+                f"table {t!r} already exists; CREATE TABLE never clobbers data"
+            )
+        v = self.create_table(
+            t, schema, generated=generated or None,
+            defaults=defaults or None, **layout,
+        )
+        return self._outcome(t, "CREATE TABLE", v)
+
+    def _sql_ctas(self, query: str, plan) -> DataFrame:
+        """CREATE [OR REPLACE] TABLE … AS <query> with an optional layout
+        (round 8): the query runs through the SELECT path, so time travel,
+        table_changes() and warehouse tables resolve inside it. A bare
+        CTAS refuses an existing table (Spark/Delta/Iceberg
+        TableAlreadyExists: it never clobbers data); CREATE OR REPLACE
+        TABLE is the explicit-overwrite form."""
+        t, _ = _relation(plan.name(), "CREATE TABLE")
+        replace = _cls(plan) == "ReplaceTableAsSelect"
+        if replace and not plan.orCreate() and not self.exists(t):
+            raise ValueError(f"REPLACE TABLE: no table {t!r}")
+        if not replace and self.exists(t):
+            raise ValueError(
+                f"table {t!r} already exists; use CREATE OR REPLACE "
+                "TABLE … AS to overwrite it"
+            )
+        layout = _layout(plan)
+        if set(layout) - {"partition_by"}:
+            self._require_txlog("CLUSTERED BY … INTO n BUCKETS, TBLPROPERTIES")
+        df = self._sql_select(query, plan, lambda p: p.query())
+        v = self.write_snapshot(df, t, **layout)
+        return self._outcome(
+            t, "CREATE OR REPLACE TABLE AS" if replace else "CREATE TABLE AS", v
+        )
+
+    def _sql_alter_column(self, query: str, plan) -> DataFrame:
+        """ALTER TABLE … ADD COLUMNS | DROP COLUMN | RENAME COLUMN | ALTER
+        COLUMN … TYPE, on both backends (the base backend rewrites the
+        next snapshot; txlog commits metadata only), and ALTER COLUMN …
+        SET/DROP DEFAULT (round 10) on txlog: later INSERTs whose column
+        list omits the column take the default. Returns a one-row
+        confirmation with the new table version: Spark's own DDL returns
+        an empty frame, but the version is what VERSION AS OF takes."""
+        t, _ = _relation(plan.table(), "ALTER TABLE")
+        k = _cls(plan)
+        if k == "AddColumns":
+            cols = []
+            for c in _seq(plan.columnsToAdd()):
+                name = c.colName()
+                _refuse(
+                    {
+                        "a nested field": c.path().isDefined(),
+                        "NOT NULL": not c.nullable(),
+                        "COMMENT": c.comment().isDefined(),
+                        "FIRST/AFTER": c.position().isDefined(),
+                        "DEFAULT": c.default().isDefined(),
+                    },
+                    f"column constraint on {name!r}",
+                    "ADD COLUMNS (<name> <type>, …)",
+                )
+                cols.append((name, c.dataType().catalogString()))
+            # one atomic application: every name is checked against the
+            # live schema and the list before anything commits
+            return self._outcome(t, "ADD COLUMN", self.add_columns(t, cols))
+        if k == "DropColumns":
+            cols = [_field(c) for c in _seq(plan.columnsToDrop())]
+            multi = len(cols) > 1
+            _refuse({"IF EXISTS": plan.ifExists(), "several columns": multi},
+                    "DROP COLUMN clause", "DROP COLUMN <name>")
+            return self._outcome(t, "DROP COLUMN", self.drop_column(t, cols[0]))
+        if k == "RenameColumn":
+            v = self.rename_column(t, _field(plan.column()), plan.newName())
+            return self._outcome(t, "RENAME COLUMN", v)
+        specs = _seq(plan.specs())
+        spec = specs[0]
+        col, dtype = _field(spec.column()), spec.newDataType()
+        _refuse(
+            {
+                "several columns": len(specs) > 1,
+                "COMMENT": spec.newComment().isDefined(),
+                "SET/DROP NOT NULL": spec.newNullability().isDefined(),
+                "FIRST/AFTER": spec.newPosition().isDefined(),
+            },
+            f"ALTER COLUMN change on {col!r}",
+            "TYPE | SET DEFAULT | DROP DEFAULT",
+        )
+        if dtype.isDefined():
+            v = self.alter_column_type(t, col, dtype.get().catalogString())
+            return self._outcome(t, "ALTER COLUMN TYPE", v)
+        self._require_txlog("column DEFAULTs")
+        if spec.dropDefault():
+            return self._outcome(t, "DROP DEFAULT", self._log(t).drop_default(col))
+        expr = spec.newDefaultExpression().get().originalSQL()
+        return self._outcome(t, "SET DEFAULT", self._log(t).set_default(col, expr))
+
+    def _sql_table_meta(self, query: str, plan) -> DataFrame:
+        """CHECK constraints (round 9) and TBLPROPERTIES (round 11), Delta
+        syntax: metadata commits on the txlog backend. ADD CONSTRAINT
+        validates the existing rows first, then every later write, merge
+        and update enforces it in one aggregate pass; SET TBLPROPERTIES
+        acts on delta.enableChangeDataFeed (see TableLog.set_properties)."""
+        k = _cls(plan)
+        # ADD CONSTRAINT parses as a filter over the table
+        table = plan.child().child() if k == "AddCheckConstraint" else plan.table()
+        t, _ = _relation(table, "ALTER TABLE")
+        self._require_txlog(
+            "TBLPROPERTIES" if k.endswith("Properties") else "CHECK constraints"
+        )
+        log = self._log(t)
+        if k == "AddCheckConstraint":
+            c = plan.checkConstraint()
+            ch = c.userProvidedCharacteristic()
+            traits = ch.enforced().isDefined() or ch.rely().isDefined()
+            _refuse({"ENFORCED/RELY": traits}, "CHECK clause", "CHECK (<expr>)")
+            v = log.add_constraint(c.name(), c.condition())
+            return self._outcome(t, "ADD CONSTRAINT", v)
+        if k == "DropConstraint":
+            _refuse({"IF EXISTS": plan.ifExists(), "CASCADE": plan.cascade()},
+                    "DROP CONSTRAINT clause", "DROP CONSTRAINT <name>")
+            v = log.drop_constraint(plan.name())
+            return self._outcome(t, "DROP CONSTRAINT", v)
+        if k == "SetTableProperties":
+            v = log.set_properties(_props(plan.properties()))
+            return self._outcome(t, "SET TBLPROPERTIES", v)
+        _refuse({"IF EXISTS": plan.ifExists()}, "UNSET TBLPROPERTIES clause",
+                "UNSET TBLPROPERTIES (<key>, …)")
+        v = log.unset_properties(_seq(plan.propertyKeys()))
+        return self._outcome(t, "UNSET TBLPROPERTIES", v)
+
 
 class TxLogWarehouse(Warehouse):
     """Warehouse over the transaction-log table format (sources/txlog.py) —
@@ -1986,9 +1715,6 @@ class TxLogWarehouse(Warehouse):
 
     def rename_column(self, name: str, old: str, new: str) -> int:
         return self._log(name).rename_column(old, new)
-
-    def add_column(self, name: str, col: str, dtype: str) -> int:
-        return self._log(name).add_column(col, dtype)
 
     def add_columns(self, name: str, cols: list[tuple[str, str]]) -> int:
         # one metadata commit for the whole list — atomic by construction
@@ -2034,20 +1760,8 @@ class TxLogWarehouse(Warehouse):
         )
         return local_frame(self.spark, [row], self._DETAIL_SCHEMA)
 
-    def optimize_table(
-        self,
-        name: str,
-        n_files: int = 1,
-        zorder_by: list[str] | None = None,
-        where: list | None = None,
-        max_file_bytes: int | None = None,
-    ) -> int:
-        return self._log(name).optimize(
-            n_files=n_files,
-            zorder_by=zorder_by,
-            where=where,
-            max_file_bytes=max_file_bytes,
-        )
+    def optimize_table(self, name: str, n_files: int = 1, **kw) -> int:
+        return self._log(name).optimize(n_files=n_files, **kw)
 
     def vacuum_table(self, name: str, retain_last: int = 1) -> int:
         return self._log(name).vacuum(retain_last=retain_last)
@@ -2056,17 +1770,9 @@ class TxLogWarehouse(Warehouse):
         return self._log(name).files_df()
 
     def history(self, name: str) -> DataFrame:
-        rows = [
-            (
-                h["version"],
-                h.get("ts_ms"),
-                h["operation"],
-                h["snapshot_id"],
-                h["n_adds"],
-                h["n_removes"],
-            )
-            for h in self._log(name).history()
-        ]
+        cols = ("version", "ts_ms", "operation", "snapshot_id", "n_adds",
+                "n_removes")
+        rows = [tuple(h.get(c) for c in cols) for h in self._log(name).history()]
         return local_frame(self.spark, rows, self._HISTORY_SCHEMA)
 
     def write(
@@ -2094,43 +1800,18 @@ class TxLogWarehouse(Warehouse):
         )
 
     def write_snapshot(
-        self,
-        df: DataFrame,
-        name: str,
-        partition_by: list[str] | None = None,
-        bucket_by: tuple[int, list[str]] | None = None,
-        sort_by: list[str] | None = None,
-        generated: dict[str, dict] | None = None,
-        properties: dict[str, str] | None = None,
+        self, df: DataFrame, name: str, partition_by: list[str] | None = None,
+        **kw,
     ) -> int:
-        return self._log(name).write(
-            df, partition_by=partition_by, bucket_by=bucket_by,
-            sort_by=sort_by, generated=generated, properties=properties,
-        )
+        """An overwrite commit; ``kw`` are TableLog.write's layout keywords
+        (``bucket_by``, ``sort_by``, ``generated``, ``properties``)."""
+        return self._log(name).write(df, partition_by=partition_by, **kw)
 
-    def create_table(
-        self,
-        name: str,
-        schema,
-        partition_by: list[str] | None = None,
-        bucket_by: tuple[int, list[str]] | None = None,
-        sort_by: list[str] | None = None,
-        generated: dict[str, dict] | None = None,
-        defaults: dict[str, str] | None = None,
-        properties: dict[str, str] | None = None,
-    ) -> int:
+    def create_table(self, name: str, schema, **kw) -> int:
         """``CREATE TABLE`` with an explicit column list (round 12) —
         an EMPTY version-1 commit carrying schema + declare-time
-        metadata; see TableLog.create."""
-        return self._log(name).create(
-            schema,
-            partition_by=partition_by,
-            bucket_by=bucket_by,
-            sort_by=sort_by,
-            generated=generated,
-            defaults=defaults,
-            properties=properties,
-        )
+        metadata; ``kw`` are TableLog.create's."""
+        return self._log(name).create(schema, **kw)
 
     def read_bucketed(self, name: str, version: int | None = None) -> DataFrame:
         """The table as a session-catalog BUCKETED relation: joins and
@@ -2157,38 +1838,11 @@ class TxLogWarehouse(Warehouse):
         return self._log(name).update(filters, set_exprs, via=via)
 
     def merge(
-        self,
-        source: DataFrame,
-        name: str,
-        keys: list[str],
-        delete_condition: str | None = None,
-        via: str = "cow",
-        update_set: dict[str, str] | None = None,
-        not_matched_by_source_delete: bool = False,
-        not_matched_by_source_condition: str | None = None,
-        matched_clauses: list[dict] | None = None,
-        insert: bool = True,
-        insert_condition: str | None = None,
-        not_matched_by_source_clauses: list[dict] | None = None,
-        not_matched_clauses: list[dict] | None = None,
-        schema_evolution: bool = False,
+        self, source: DataFrame, name: str, keys: list[str],
+        delete_condition: str | None = None, **kw,
     ) -> dict:
-        """MERGE INTO a warehouse table (see TableLog.merge)."""
-        return self._log(name).merge(
-            source,
-            keys,
-            delete_condition,
-            via=via,
-            update_set=update_set,
-            not_matched_by_source_delete=not_matched_by_source_delete,
-            not_matched_by_source_condition=not_matched_by_source_condition,
-            matched_clauses=matched_clauses,
-            insert=insert,
-            insert_condition=insert_condition,
-            not_matched_by_source_clauses=not_matched_by_source_clauses,
-            not_matched_clauses=not_matched_clauses,
-            schema_evolution=schema_evolution,
-        )
+        """MERGE INTO a warehouse table; ``kw`` are TableLog.merge's."""
+        return self._log(name).merge(source, keys, delete_condition, **kw)
 
     def shallow_clone(
         self, name: str, dest: str, version: int | None = None
@@ -2205,14 +1859,7 @@ class TxLogWarehouse(Warehouse):
             raise FileNotFoundError(f"no snapshots for table {name}")
         return log.read(version)
 
-    def tables(self) -> list[str]:
-        if not os.path.isdir(self.root):
-            return []
-        return sorted(
-            d
-            for d in os.listdir(self.root)
-            if os.path.isdir(os.path.join(self.root, d, "_txlog"))
-        )
+    _TABLE_DIR = "_txlog"
 
 
 class CatalogWarehouse(Warehouse):

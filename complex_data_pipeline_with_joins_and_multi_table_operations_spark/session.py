@@ -18,6 +18,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def bench_driver_memory() -> str:
+    """The default Spark driver heap of ``bench.py`` and
+    ``tools/bench_subset.py``: 16 GiB, or half the host's memory when
+    that is less. Local mode runs every executor thread inside the
+    driver JVM, so the heap needs headroom, but never more than the host
+    has."""
+    with open("/proc/meminfo") as f:
+        kib = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    return f"{min(16 * 1024, kib // 2048)}m"
+
+
 def get_spark(
     app_name: str = "complex-data-pipeline-spark",
     master: str | None = None,

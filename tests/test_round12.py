@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 
 from complex_data_pipeline_with_joins_and_multi_table_operations_spark.plans.pipeline import (
     TxLogWarehouse,
-    _parse_column_defs,
 )
 from complex_data_pipeline_with_joins_and_multi_table_operations_spark.sources.txlog import (
     TableLog,
@@ -223,6 +222,43 @@ def test_sql_create_table_full_stack(spark, tmp_path):
         wh.sql("CREATE TABLE t (a INT)")
 
 
+def test_parse_column_defs_edge_cases(spark, tmp_path):
+    """CREATE TABLE column definitions go through Spark's parser: commas
+    inside types, literals and expressions never split a column."""
+    wh = TxLogWarehouse(spark, str(tmp_path / "wh"))
+    # types with commas, a bare IDENTITY, a DEFAULT whose literal holds a
+    # comma and parens, a generated expression with nested parens
+    wh.sql(
+        "CREATE TABLE e (a DECIMAL(10, 2), b MAP<STRING, INT>, "
+        "c BIGINT GENERATED ALWAYS AS IDENTITY, "
+        "d STRING DEFAULT 'x, (y)', "
+        "e INT GENERATED ALWAYS AS (CAST(a * 2 AS INT)))"
+    )
+    snap = wh._log("e").snapshot()
+    assert [f.simpleString() for f in snap.schema.fields] == [
+        "a:decimal(10,2)",
+        "b:map<string,int>",
+        "c:bigint",
+        "d:string",
+        "e:int",
+    ]
+    assert snap.generated == {
+        "c": {"identity": {"start": 1, "step": 1, "high": 0}},
+        "e": {"expr": "CAST(a * 2 AS INT)"},
+    }
+    assert snap.defaults == {"d": "'x, (y)'"}
+    wh.sql("INSERT INTO e (a) VALUES (1.25)")
+    row = wh.read_snapshot("e").head()
+    assert (row.c, row.d, row.e) == (1, "x, (y)", 2)
+    # a column clause the txlog backend cannot honour raises, never drops
+    with pytest.raises(ValueError, match="unsupported column constraint"):
+        wh.sql("CREATE TABLE n (a INT NOT NULL)")
+    for clause in ("GENERATED BY DEFAULT AS IDENTITY", "COMMENT 'c'"):
+        with pytest.raises(ValueError, match=clause.split(" '")[0]):
+            wh.sql(f"CREATE TABLE n (a BIGINT {clause})")
+    assert not wh.exists("n")
+
+
 def test_sql_create_table_partitioned_insert_inherits_layout(
     spark, tmp_path
 ):
@@ -256,13 +292,18 @@ def test_sql_ctas_tblproperties(spark, tmp_path):
     )
     wh.sql(
         "CREATE TABLE c TBLPROPERTIES ('delta.enableChangeDataFeed' = "
-        "'true', 'owner' = 'me') AS SELECT k FROM r12_srcv"
+        "'true', 'owner' = 'me', 'team' = 'a, b''s') AS SELECT k FROM r12_srcv"
     )
     assert wh._log("c").snapshot().properties == {
         "delta.enableChangeDataFeed": "true",
         "owner": "me",
+        "team": "a, b's",
     }
     assert wh.read_snapshot("c").count() == 5
+    # keys Spark's parser reserves for its catalog are plain properties
+    wh.sql("ALTER TABLE c SET TBLPROPERTIES ('location' = 's3://x', owner = 'you')")
+    assert wh._log("c").snapshot().properties["owner"] == "you"
+    assert wh._log("c").snapshot().properties["location"] == "s3://x"
 
 
 def test_sql_shallow_clone_txlog_end_to_end(spark, tmp_path):
@@ -611,26 +652,3 @@ def test_cow_update_writes_sidecar_under_cdf(spark, tmp_path):
         (1, 102.0, "update_postimage"),
         (2, 104.0, "update_postimage"),
     }
-
-
-def test_parse_column_defs_edge_cases():
-    fields, gen, dflts = _parse_column_defs(
-        "a DECIMAL(10, 2), b MAP<STRING, INT>, "
-        "c BIGINT GENERATED ALWAYS AS IDENTITY, "
-        "d STRING DEFAULT 'x, (y)', "
-        "e INT GENERATED ALWAYS AS (CAST(a * 2 AS INT))"
-    )
-    assert fields == [
-        "a DECIMAL(10, 2)",
-        "b MAP<STRING, INT>",
-        "c BIGINT",
-        "d STRING",
-        "e INT",
-    ]
-    assert gen == {
-        "c": {"identity": {"start": 1, "step": 1}},
-        "e": {"expr": "CAST(a * 2 AS INT)"},
-    }
-    assert dflts == {"d": "'x, (y)'"}
-    with pytest.raises(ValueError, match="unsupported column constraint"):
-        _parse_column_defs("a INT NOT NULL")

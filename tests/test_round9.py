@@ -692,21 +692,6 @@ def test_merge_update_set_sql_verb(spark, tmp_path):
     assert got[2] == (300, 0)
 
 
-def test_split_in_list_respects_parens_and_quotes():
-    from complex_data_pipeline_with_joins_and_multi_table_operations_spark.plans.pipeline import (
-        _split_in_list,
-    )
-
-    assert _split_in_list("v = round(t.v + s.v, 2), tag = 'a,b'") == [
-        "v = round(t.v + s.v, 2)",
-        "tag = 'a,b'",
-    ]
-    assert _split_in_list("coalesce(s.v, 0, greatest(1, 2)), x") == [
-        "coalesce(s.v, 0, greatest(1, 2))",
-        "x",
-    ]
-
-
 def test_update_set_clause_with_function_commas(spark, tmp_path):
     """UPDATE … SET with commas inside function calls parses as whole
     assignments (the naive comma split would shred round(x, 2))."""
@@ -724,6 +709,35 @@ def test_update_set_clause_with_function_commas(spark, tmp_path):
     wh.sql("UPDATE t SET v = round(v * 2, 1), s = concat(s, ',z') WHERE k = 1")
     got = {r.k: (r.v, r.s) for r in wh.read_snapshot("t").collect()}
     assert got[1] == (2.5, "x,z") and got[2] == (5.678, "y")
+
+
+def test_split_in_list_respects_parens_and_quotes(spark, tmp_path):
+    """MERGE SET and INSERT VALUES lists split only at top-level commas:
+    commas inside calls and inside a string literal stay put."""
+    from complex_data_pipeline_with_joins_and_multi_table_operations_spark.plans.pipeline import (
+        TxLogWarehouse,
+    )
+
+    wh = TxLogWarehouse(spark, str(tmp_path / "wh"))
+    wh.write_snapshot(
+        spark.createDataFrame(
+            [(1, 2.5, "x,z"), (2, 5.678, "y")], "k long, v double, s string"
+        ),
+        "t",
+    )
+    # MERGE SET values with commas inside calls and inside a literal
+    wh.write_snapshot(
+        spark.createDataFrame([(2, 1.111), (3, None)], "k long, v double"),
+        "u",
+    )
+    wh.sql(
+        "MERGE INTO t USING u AS s ON t.k = s.k "
+        "WHEN MATCHED THEN UPDATE SET v = round(t.v + s.v, 2), s = 'a,b' "
+        "WHEN NOT MATCHED THEN INSERT (k, v, s) "
+        "VALUES (s.k, coalesce(s.v, 0, greatest(1, 2)), 'x')"
+    )
+    got = {r.k: (r.v, r.s) for r in wh.read_snapshot("t").collect()}
+    assert got == {1: (2.5, "x,z"), 2: (6.79, "a,b"), 3: (0.0, "x")}
 
 
 def test_constraint_ddl_sql_verbs(spark, tmp_path):

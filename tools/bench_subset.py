@@ -34,10 +34,14 @@ def main() -> int:
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, repo)
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "16g")
     from complex_data_pipeline_with_joins_and_multi_table_operations_spark import (
         get_spark,
     )
+    from complex_data_pipeline_with_joins_and_multi_table_operations_spark.session import (
+        bench_driver_memory,
+    )
+
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", bench_driver_memory())
     from complex_data_pipeline_with_joins_and_multi_table_operations_spark.plans import (
         QUERIES,
     )

@@ -292,6 +292,9 @@ class _MergeJoin:
     target row and insert clauses the source row (bare or ``s.``), so
     those two are evaluated on their own side before the join and ride
     it as ``__n_branch``/``__n<i>`` and ``__i_branch``/``__i<i>``.
+    Those marker columns, and any target column outside ``columns``,
+    carry no alias, so ``t.*`` and ``s.*`` expand to that side's own
+    columns only.
 
     On ``frame``: the predicates ``keep`` (a target row no clause
     touches), ``update``, ``delete`` and ``insert``; ``post`` projects
@@ -314,7 +317,12 @@ class _MergeJoin:
         m, n = len(matched), len(not_matched_by_source)
         actions = [cl["action"] for cl in matched + not_matched_by_source]
         actions += ["insert"] * len(inserts)
-        tgt = target.withColumns(
+        tgt = target.alias("t").select(
+            *(
+                F.col(f"t.`{c}`") if c in columns else F.col(f"`{c}`").alias(c)
+                for c in target.columns
+            )
+        ).withColumns(
             {
                 "__t": F.lit(True),
                 "__n_branch": _first_match_branch(not_matched_by_source, m),
@@ -366,10 +374,8 @@ class _MergeJoin:
             .when(has_t, F.col("__n_branch"))
             .otherwise(F.col("__i_branch"))
         )
-        self.frame = (
-            tgt.alias("t")
-            .join(src.alias("s"), keys, "full_outer")
-            .withColumn("__branch", branch)
+        self.frame = tgt.join(src, keys, "full_outer").withColumn(
+            "__branch", branch
         )
         self.keep = has_t & b.isNull()
         if not matched:

@@ -1718,6 +1718,8 @@ def resolve_clusters(
     """
     from pyspark.sql import Observation
 
+    from .quality import observed_metric
+
     # materialize the edge list ONCE — `pairs` is typically an expensive
     # candidate-generation plan (LSH join / all-pairs cosine); without
     # this every iteration replays it from scratch (measured 8× of the
@@ -1829,7 +1831,7 @@ def resolve_clusters(
             .observe(obs, F.sum(F.col("__chg").cast("long")).alias("n_chg"))
             .localCheckpoint(eager=True)
         )
-        changed = obs.get["n_chg"] or 0
+        changed = observed_metric(obs, "n_chg") or 0
         labels = flagged.drop("__chg")
         if changed == 0:
             converged = True

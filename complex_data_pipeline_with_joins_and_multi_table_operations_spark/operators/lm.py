@@ -181,6 +181,8 @@ def perplexity_scores(
         # has zero bigrams — nothing will be scored, any v works.
         from pyspark.sql import Observation
 
+        from .quality import observed_metric
+
         obs = Observation()
         lmv = _train_lm_with_v(documents, _vocab_count_df(documents)).observe(
             obs, F.max("__v").alias("v")
@@ -188,7 +190,7 @@ def perplexity_scores(
         lm = lmv.localCheckpoint(eager=True).select(
             "w1", "w2", "cnt", "ctx", "logp"
         )
-        v = obs.get["v"]
+        v = observed_metric(obs, "v")
         v = 0.0 if v is None else v
     else:
         if v is None:

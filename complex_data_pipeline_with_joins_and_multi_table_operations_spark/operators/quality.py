@@ -79,6 +79,39 @@ def observed_quality(
     return observed, obs
 
 
+# How long an observed metric may take to arrive once its action has run.
+# Spark delivers it from a listener shortly after the action returns; a
+# metric that never arrives (its action never ran, or an execution path
+# that skips the collection) must fail, not hang.
+OBSERVED_METRIC_TIMEOUT_S = 120.0
+
+
+def observed_metric(obs, name: str):
+    """The metric ``name`` of an Observation whose action has run, waiting
+    at most ``OBSERVED_METRIC_TIMEOUT_S`` for it; RuntimeError naming the
+    metric when it does not arrive in that time."""
+    from py4j.protocol import Py4JJavaError
+
+    if obs._jo is not None:  # None: never attached to a DataFrame
+        jvm = obs._jvm
+        bound = jvm.scala.concurrent.duration.Duration.create(
+            int(OBSERVED_METRIC_TIMEOUT_S * 1000), "ms"
+        )
+        try:
+            jvm.scala.concurrent.Await.ready(obs._jo.future(), bound)
+        except Py4JJavaError as e:
+            cls = e.java_exception.getClass().getName()
+            if cls != "java.util.concurrent.TimeoutException":
+                raise
+        else:
+            return obs.get[name]
+    raise RuntimeError(
+        f"observed metric {name!r} did not arrive within "
+        f"{OBSERVED_METRIC_TIMEOUT_S:g} s; the action it observes has not "
+        "run, or ran on a path that does not collect observed metrics"
+    )
+
+
 def column_profile(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     """(column, n_rows, n_nulls, n_distinct, vmin, vmax): the ANALYZE-
     style per-column profile every ingestion pipeline runs before

@@ -30,7 +30,7 @@ import shutil
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import aggregates, cleaning, dimensions, fact, quality
@@ -148,8 +148,8 @@ def _span(node) -> tuple[int, int]:
     kids = node.children()
     while not kids.isEmpty():
         first, kids = kids.head(), kids.head().children()
-        if _cls(first) == "Literal" and first.sql() in ("true", "false"):
-            break  # a shared constant: see _text
+        if _shared(first):
+            break  # its position is another statement's: see _shared
         o = first.origin()
         if not o.stopIndex().isDefined():
             break
@@ -161,16 +161,22 @@ def _span(node) -> tuple[int, int]:
     return lo, hi
 
 
-def _text(sql: str, node) -> str:
-    """The exact text of ``sql`` that Spark parsed into ``node``. The
-    parser hands out TRUE and FALSE as shared constants whose position,
-    if any, is from whichever statement first made them; their SQL is
-    their text. A bare EXISTS takes its enclosing statement's position."""
+def _shared(node) -> bool:
+    """Whether the parser hands ``node`` out as a shared constant: TRUE,
+    FALSE, or a Scala object such as the name placeholder of a
+    ``struct(…)`` argument. Its position, if any, is from whichever
+    statement first made it."""
     k = _cls(node)
-    if k == "Literal":
-        text = node.sql()
-        if text in ("true", "false"):
-            return text
+    return k.endswith("$") or k == "Literal" and node.sql() in ("true", "false")
+
+
+def _text(sql: str, node) -> str:
+    """The exact text of ``sql`` that Spark parsed into ``node``. A shared
+    TRUE or FALSE is its SQL; a bare EXISTS takes its enclosing
+    statement's position."""
+    k = _cls(node)
+    if _shared(node):
+        return node.sql()
     lo, hi = _span(node)
     text = sql[lo:hi]
     if k == "Exists" and not text.lstrip("( ").upper().startswith("EXISTS"):
@@ -649,11 +655,17 @@ class Warehouse:
 
     def write(
         self, df: DataFrame, name: str, partition_by: list[str] | None = None
-    ) -> None:
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self.path(name))
+    ) -> int:
+        """Overwrite table ``name`` with ``df``; returns the number of rows
+        written, counted by the write's own job (no read-back)."""
+
+        def parquet(d: DataFrame) -> None:
+            w = d.write.mode("overwrite")
+            if partition_by:
+                w = w.partitionBy(*partition_by)
+            w.parquet(self.path(name))
+
+        return _counted_write(df, parquet)
 
     def read(self, name: str) -> DataFrame:
         return self.spark.read.parquet(self.path(name))
@@ -1777,8 +1789,13 @@ class TxLogWarehouse(Warehouse):
 
     def write(
         self, df: DataFrame, name: str, partition_by: list[str] | None = None
-    ) -> None:
-        self._log(name).write(df, mode="overwrite", partition_by=partition_by)
+    ) -> int:
+        """An overwrite commit; returns the rows it wrote, summed from the
+        per-file row counts the commit records (no Spark job)."""
+        log = self._log(name)
+        v = log.write(df, mode="overwrite", partition_by=partition_by)
+        with open(log._commit_path(v)) as f:
+            return sum(int(a["rows"]) for a in json.load(f).get("adds", []))
 
     def read(self, name: str) -> DataFrame:
         return self._log(name).read()
@@ -1872,10 +1889,12 @@ class CatalogWarehouse(Warehouse):
 
     def write(
         self, df: DataFrame, name: str, partition_by: list[str] | None = None
-    ) -> None:
+    ) -> int:
         from ..sources.io import overwrite_table
 
-        overwrite_table(df, name, partition_by)
+        return _counted_write(
+            df, lambda d: overwrite_table(d, name, partition_by)
+        )
 
     def read(self, name: str) -> DataFrame:
         return self.spark.table(name)
@@ -1884,17 +1903,24 @@ class CatalogWarehouse(Warehouse):
         return self.spark.catalog.tableExists(name)
 
 
+def _counted_write(df: DataFrame, write) -> int:
+    """Run ``write`` on ``df`` and return the number of rows it wrote: an
+    observed count on the frame rides the write's own job."""
+    obs = Observation()
+    write(df.observe(obs, F.count(F.lit(1)).alias("rows")))
+    return quality.observed_metric(obs, "rows")
+
+
 def stage_ingest(wh: Warehouse, cat: Catalog, partition_daily: bool = False) -> int:
     """IngestionJob parity: scan → clean → enrich → partitioned write."""
     cleaned = cleaning.clean_lineitem(cat.lineitem).withColumn(
         "ship_year", F.year("ship_date")
     )
-    wh.write(
+    return wh.write(
         cleaned,
         "trips_raw",
         ["ship_date"] if partition_daily else ["ship_year"],
     )
-    return wh.read("trips_raw").count()
 
 
 def stage_dimensions(wh: Warehouse, cat: Catalog) -> tuple[int, int]:
@@ -1904,9 +1930,7 @@ def stage_dimensions(wh: Warehouse, cat: Catalog) -> tuple[int, int]:
     raw = wh.read("trips_raw")
     entity = dimensions.build_entity_dim(raw, "l_partkey", "l_suppkey")
     date_dim = dimensions.build_date_dim(raw, "ship_date")
-    wh.write(entity, "entity_dim")
-    wh.write(date_dim, "date_dim")
-    return wh.read("entity_dim").count(), wh.read("date_dim").count()
+    return wh.write(entity, "entity_dim"), wh.write(date_dim, "date_dim")
 
 
 def stage_fact(wh: Warehouse, cat: Catalog, partition_daily: bool = False) -> int:
@@ -1919,32 +1943,34 @@ def stage_fact(wh: Warehouse, cat: Catalog, partition_daily: bool = False) -> in
     f = fact.build_fact(
         cat.lineitem, cat.orders, cat.customer, cat.supplier, cat.nation, date_dim
     )
-    wh.write(
+    return wh.write(
         f,
         "star_fact",
         ["ship_date"] if partition_daily else ["year"],
     )
-    return wh.read("star_fact").count()
 
 
 def stage_aggregates(wh: Warehouse) -> dict[str, int]:
     """AggregationJob parity: one fact scan fanned into three summaries.
     The fact is cached across the three aggregations — the reference
     re-scans it per summary and even re-aggregates for its log counts
-    (SURVEY.md §4.3.1); counts here come from the written tables."""
+    (SURVEY.md §4.3.1); counts here are the rows each write wrote,
+    counted by the write itself."""
     if not wh.exists("star_fact"):
         raise RuntimeError("pipeline ordering violation: missing table star_fact")
     f = wh.read("star_fact").cache()
     try:
-        wh.write(aggregates.agg_pair_daily(f), "pair_daily", ["supp_nation"])
-        wh.write(aggregates.agg_time(f), "time_analysis", ["year"])
-        wh.write(aggregates.top_pairs(f, 50), "top_pairs")
+        return {
+            "pair_daily": wh.write(
+                aggregates.agg_pair_daily(f), "pair_daily", ["supp_nation"]
+            ),
+            "time_analysis": wh.write(
+                aggregates.agg_time(f), "time_analysis", ["year"]
+            ),
+            "top_pairs": wh.write(aggregates.top_pairs(f, 50), "top_pairs"),
+        }
     finally:
         f.unpersist()
-    return {
-        name: wh.read(name).count()
-        for name in ("pair_daily", "time_analysis", "top_pairs")
-    }
 
 
 def stage_quality(wh: Warehouse) -> dict:
@@ -1960,9 +1986,7 @@ def stage_curate(wh: Warehouse, cat: Catalog) -> int:
     written as its own warehouse table for downstream training jobs."""
     from ..operators import curation
 
-    curated = curation.curate_documents(cat.documents)
-    wh.write(curated, "curated_docs")
-    return wh.read("curated_docs").count()
+    return wh.write(curation.curate_documents(cat.documents), "curated_docs")
 
 
 def run_pipeline(

@@ -1049,7 +1049,9 @@ class TableLog:
     def _validate_default_expr(self, column: str, expr: str, dt) -> None:
         """The SET DEFAULT constant-expression rule, shared by the ALTER
         path (set_default) and CREATE-time declarations: deterministic,
-        no column references (FROM-less probe), castable to the type."""
+        no column references, castable to the type. The probe selects from
+        a one-row relation with no columns, a local relation, so no column
+        is in scope and collecting it runs no job."""
         import re as _re
 
         if _re.search(
@@ -1063,9 +1065,9 @@ class TableLog:
                 f"{expr!r} is not (Spark's constant-default rule)"
             )
         try:
-            self.spark.sql(
-                f"SELECT CAST(({expr}) AS {dt.simpleString()})"
-            ).head()
+            self.spark.sql("SELECT * FROM VALUES (0) AS _(z)").drop(
+                "z"
+            ).selectExpr(f"CAST(({expr}) AS {dt.simpleString()})").collect()
         except Exception as e:
             raise ValueError(
                 f"DEFAULT for {column!r} must be a constant "

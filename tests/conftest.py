@@ -32,3 +32,21 @@ def spark(tmp_path_factory):
 @pytest.fixture(scope="session")
 def cat(spark):
     return Catalog(spark, SF_DIR)
+
+
+@pytest.fixture
+def jobs_in_group(spark):
+    """``jobs_in_group(group, fn)`` runs ``fn`` under its own Spark job
+    group and returns (its result, the number of jobs it ran)."""
+    sc = spark.sparkContext
+
+    def run(group: str, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

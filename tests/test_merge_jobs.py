@@ -1,4 +1,4 @@
-"""Job budgets of SQL DML through ``Warehouse.sql``.
+"""Job budgets of SQL statements through ``Warehouse.sql``.
 
 At this scale a MERGE's cost is its Spark job count. The budget is one
 collect of the source keys (bounds, per-file membership and the
@@ -24,19 +24,7 @@ MERGE = (
 )
 
 
-def _jobs_in_group(spark, group: str, fn):
-    """Run ``fn`` under its own job group; return (result, job count)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_sql_merge_runs_at_most_four_jobs(spark, tmp_path):
+def test_sql_merge_runs_at_most_four_jobs(spark, tmp_path, jobs_in_group):
     wh = TxLogWarehouse(spark, str(tmp_path / "wh"))
     rows = spark.range(0, 3000).select(
         F.col("id").alias("k"),
@@ -53,10 +41,8 @@ def test_sql_merge_runs_at_most_four_jobs(spark, tmp_path):
         .coalesce(1).write.parquet(path)
     spark.read.parquet(path).createOrReplaceTempView("chg_jobs")
 
-    res, merge_jobs = _jobs_in_group(spark, "merge-jobs", lambda: wh.sql(MERGE))
-    row, result_jobs = _jobs_in_group(
-        spark, "merge-result", lambda: res.collect()[0]
-    )
+    res, merge_jobs = jobs_in_group("merge-jobs", lambda: wh.sql(MERGE))
+    row, result_jobs = jobs_in_group("merge-result", lambda: res.collect()[0])
     assert merge_jobs <= 4, merge_jobs
     assert result_jobs == 0, result_jobs
     assert row.operation == "MERGE" and row.version == 2
@@ -67,7 +53,9 @@ def test_sql_merge_runs_at_most_four_jobs(spark, tmp_path):
     assert got == want
 
 
-def test_sql_delete_with_folded_date_runs_at_most_three_jobs(spark, tmp_path):
+def test_sql_delete_with_folded_date_runs_at_most_three_jobs(
+    spark, tmp_path, jobs_in_group
+):
     """The retention DELETE: its WHERE value folds to a DATE constant
     without a job (the fold selects from an inline table, a local
     relation), so the statement costs what the copy-on-write rewrite of
@@ -80,15 +68,34 @@ def test_sql_delete_with_folded_date_runs_at_most_three_jobs(spark, tmp_path):
     wh.write_snapshot(
         spark.createDataFrame(rows, "id int, d date").repartition(3), "t"
     )
-    res, delete_jobs = _jobs_in_group(
-        spark,
+    res, delete_jobs = jobs_in_group(
         "delete-jobs",
         lambda: wh.sql("DELETE FROM t WHERE d < date_sub(current_date(), 90)"),
     )
-    row, result_jobs = _jobs_in_group(
-        spark, "delete-result", lambda: res.collect()[0]
-    )
+    row, result_jobs = jobs_in_group("delete-result", lambda: res.collect()[0])
     assert delete_jobs <= 3, delete_jobs
     assert result_jobs == 0, result_jobs
     assert row.operation == "DELETE" and row.rows == 20
     assert sorted(r.id for r in wh.read_snapshot("t").collect()) == list(range(10))
+
+
+def test_default_validation_runs_no_job(spark, tmp_path, jobs_in_group):
+    """A DEFAULT is checked by casting it over a one-row local relation
+    with no columns, so declaring or changing one runs no job, and a
+    column name still has nothing to bind to."""
+    import pytest
+
+    wh = TxLogWarehouse(spark, str(tmp_path / "wh"))
+    _, create_jobs = jobs_in_group(
+        "default-create",
+        lambda: wh.sql("CREATE TABLE c (id BIGINT, d STRING DEFAULT 'x')"),
+    )
+    _, alter_jobs = jobs_in_group(
+        "default-alter",
+        lambda: wh.sql("ALTER TABLE c ALTER COLUMN d SET DEFAULT upper('y')"),
+    )
+    assert (create_jobs, alter_jobs) == (0, 0)
+    assert wh._log("c").snapshot().defaults == {"d": "upper('y')"}
+    for expr in ("id", "z"):
+        with pytest.raises(ValueError, match="constant"):
+            wh.sql(f"ALTER TABLE c ALTER COLUMN d SET DEFAULT {expr}")

@@ -4,12 +4,22 @@ of the tumbling aggregation, plus io-layer behaviors."""
 
 from __future__ import annotations
 
+import time
+
+import pytest
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from complex_data_pipeline_with_joins_and_multi_table_operations_spark.operators import (
+    quality,
     windows,
 )
+from complex_data_pipeline_with_joins_and_multi_table_operations_spark.plans import (
+    pipeline as P,
+)
 from complex_data_pipeline_with_joins_and_multi_table_operations_spark.plans.pipeline import (
+    CatalogWarehouse,
+    TxLogWarehouse,
     Warehouse,
     run_pipeline,
 )
@@ -55,6 +65,81 @@ def test_pipeline_rerun_is_idempotent(spark, tmp_path):
     r2 = run_pipeline(spark, SF_DIR, wh_dir)  # overwrite, not append-dup
     assert r1["ingest_rows"] == r2["ingest_rows"]
     assert r1["aggregates"] == r2["aggregates"]
+
+
+# Spark jobs per stage at sf0.001 on the parquet Warehouse. A stage's row
+# count rides its write job, so no stage reads back what it wrote.
+STAGE_JOB_BUDGETS = {
+    "ingest": 2, "dimensions": 5, "fact": 11, "aggregates": 8, "quality": 3,
+    "curate": 16,
+}
+BACKENDS = [Warehouse, TxLogWarehouse, CatalogWarehouse]
+AGGREGATES = ("pair_daily", "time_analysis", "top_pairs")
+WRITTEN = ("trips_raw", "entity_dim", "date_dim", "star_fact", *AGGREGATES,
+           "curated_docs")
+
+
+def test_stage_job_budgets(spark, tmp_path, jobs_in_group):
+    wh, cat = Warehouse(spark, str(tmp_path / "wh")), Catalog(spark, SF_DIR)
+    jobs = {
+        name: jobs_in_group(f"stage-{name}", lambda: stage(wh, cat, False))[1]
+        for name, stage in P.STAGES.items()
+    }
+    assert all(jobs[n] <= b for n, b in STAGE_JOB_BUDGETS.items()), jobs
+
+
+def _drop_catalog_tables(spark) -> None:
+    for t in WRITTEN:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+@pytest.mark.parametrize("backend", BACKENDS)
+def test_stage_counts_are_the_rows_written(spark, tmp_path, backend):
+    wh, cat = backend(spark, str(tmp_path / "wh")), Catalog(spark, SF_DIR)
+
+    def rows(t: str) -> int:
+        return wh.read(t).count()
+
+    try:
+        assert P.stage_ingest(wh, cat) == rows("trips_raw")
+        assert P.stage_dimensions(wh, cat) == (rows("entity_dim"), rows("date_dim"))
+        assert P.stage_fact(wh, cat) == rows("star_fact")
+        assert P.stage_aggregates(wh) == {t: rows(t) for t in AGGREGATES}
+        assert P.stage_curate(wh, cat) == rows("curated_docs")
+    finally:
+        _drop_catalog_tables(spark)
+
+
+@pytest.mark.parametrize("backend", BACKENDS)
+def test_ingest_of_only_dirty_rows_counts_zero(spark, tmp_path, backend):
+    """Every lineitem row fails the cleaning filters: the stage writes an
+    empty table and returns 0 (a read-back of the empty partitioned
+    parquet table cannot infer its schema)."""
+    src = tmp_path / "dirty"
+    Catalog(spark, SF_DIR).lineitem.withColumn(
+        "l_quantity", F.col("l_quantity") * 0
+    ).write.parquet(str(src / "lineitem.parquet"))
+    try:
+        wh = backend(spark, str(tmp_path / "wh"))
+        assert P.stage_ingest(wh, Catalog(spark, str(src))) == 0
+    finally:
+        _drop_catalog_tables(spark)
+
+
+def test_observed_metric_read_is_bounded(spark, monkeypatch):
+    """A metric whose action never ran raises, naming the metric, once
+    the bound has passed; one whose action ran is returned."""
+    monkeypatch.setattr(quality, "OBSERVED_METRIC_TIMEOUT_S", 0.5)
+    obs = Observation()
+    df = spark.range(3).observe(obs, F.count(F.lit(1)).alias("rows"))
+    t0 = time.monotonic()
+    with pytest.raises(RuntimeError, match="'rows'"):
+        quality.observed_metric(obs, "rows")
+    assert time.monotonic() - t0 < 5
+    with pytest.raises(RuntimeError, match="'rows'"):
+        quality.observed_metric(Observation(), "rows")  # never attached
+    df.collect()
+    assert quality.observed_metric(obs, "rows") == 3
 
 
 def test_streaming_matches_batch(spark, tmp_path):

@@ -194,6 +194,78 @@ def test_merge_text_keeps_predicates_stars_and_subqueries(spark, tmp_path):
     assert got[:2] == [(1, "true"), (2, "true")]
 
 
+def _star_tables(spark, wh):
+    wh.write_snapshot(
+        spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"), "st"
+    )
+    spark.createDataFrame(
+        [(2, "B"), (3, "C")], "k long, v string"
+    ).createOrReplaceTempView("st_src")
+
+
+@pytest.mark.parametrize(
+    "clauses, want",
+    [
+        ("WHEN MATCHED THEN UPDATE SET v = to_json(struct(source_row.*))",
+         [(1, "a"), (2, '{"k":2,"v":"B"}')]),
+        ("WHEN MATCHED THEN UPDATE SET v = to_json(struct(source_row.*)) "
+         "WHEN NOT MATCHED THEN INSERT *",
+         [(1, "a"), (2, '{"k":2,"v":"B"}'), (3, "C")]),
+        ("WHEN MATCHED THEN UPDATE SET v = to_json(struct(target_row.*)) "
+         "WHEN NOT MATCHED THEN INSERT *",
+         [(1, "a"), (2, '{"k":2,"v":"b"}'), (3, "C")]),
+        ("WHEN MATCHED AND source_row.v IS DISTINCT FROM target_row.v "
+         "THEN UPDATE SET v = source_row.v WHEN NOT MATCHED THEN "
+         "INSERT (k, v) VALUES (source_row.k, to_json(struct(source_row.*)))",
+         [(1, "a"), (2, "B"), (3, '{"k":3,"v":"C"}')]),
+    ],
+)
+def test_merge_qualified_star_is_that_sides_columns(
+    spark, tmp_path, clauses, want
+):
+    """A qualified star in a MERGE value expands to that side's own
+    columns, never to the markers the merge join adds. A value holding
+    ``struct(<alias>.*)`` keeps its own text: the parser hands out the
+    struct's name placeholder as one JVM-wide object whose position is
+    from the statement that first made it (the short SELECT parsed here,
+    or an earlier statement whose struct sat left of this value)."""
+    wh = TxLogWarehouse(spark, str(tmp_path / "wh"))
+    _star_tables(spark, wh)
+    _parse_sql(spark, "parsePlan", "SELECT struct(x.*)")
+    wh.sql(
+        "MERGE INTO st AS target_row USING st_src AS source_row "
+        f"ON target_row.k = source_row.k {clauses}"
+    )
+    assert sorted(tuple(r) for r in wh.read_snapshot("st").collect()) == want
+
+
+@pytest.mark.parametrize("via", ["cow", "dv"])
+def test_merge_clause_stars_are_that_sides_columns(spark, tmp_path, via):
+    """The same through ``TableLog.merge`` clause dicts, on both MERGE
+    bodies: the merge-on-read body's target rows also carry their file
+    and position, and ``t.*`` leaves those out too."""
+    wh = TxLogWarehouse(spark, str(tmp_path / "wh"))
+    _star_tables(spark, wh)
+    wh._log("st").merge(
+        spark.table("st_src"),
+        ["k"],
+        via=via,
+        matched_clauses=[{
+            "action": "update", "condition": None,
+            "set": {"v": "to_json(struct(s.*, struct(t.*) AS t))"},
+        }],
+        not_matched_clauses=[{
+            "condition": None, "set": {"k": "s.k", "v": "to_json(struct(s.*))"},
+        }],
+    )
+    got = sorted(tuple(r) for r in wh.read_snapshot("st").collect())
+    assert got == [
+        (1, "a"),
+        (2, '{"k":2,"v":"B","t":{"k":2,"v":"b"}}'),
+        (3, '{"k":3,"v":"C"}'),
+    ]
+
+
 def test_refused_statement_writes_no_java_stack(spark, tmp_path, capfd):
     """A statement Spark cannot parse raises a ValueError with Spark's
     message; PySpark's query-context logger, which writes a JSON record
